@@ -4,8 +4,12 @@ import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** "Icelite": a from-scratch Iceberg-style snapshot table layer (no Iceberg
   * runtime in the sandbox — SURVEY.md §7.0). Provides what the north rule
@@ -18,7 +22,8 @@ import org.apache.spark.sql.functions._
   * <table>/
   *   data/<snapshotUuid>/part-*.parquet                 -- unsliced data files
   *   data/<snapshotUuid>/__slice=<mod>_<res>/part-*.parquet -- PK-hash slices
-  *   meta/snapshot-<id>.json                            -- manifest: file entries
+  *   meta/snapshot-<id>.json                            -- manifest: segment refs
+  *   meta/segment-<md5>.json                            -- file entries, content-addressed
   *   _CURRENT                                           -- atomic pointer
   * }}}
   *
@@ -80,7 +85,8 @@ object Icelite {
     * (lower bound: plain prefix; upper bound: prefix with the last kept char
     * incremented — a valid upper bound, exactly Iceberg's truncate(16)
     * transform) so a manifest never carries page-sized values. Absent stats
-    * (older manifests, dropped bounds) simply mean "never pruned".
+    * (an all-null column, a bound with no valid truncation) simply mean
+    * "never pruned".
     */
   case class FileEntry(path: String, mod: Int, res: Int, rows: Long, checksum: Long,
                        stats: Map[String, (String, String)] = Map.empty)
@@ -90,8 +96,7 @@ object Icelite {
     * row sum and per-column zone maps aggregated over its entries (a column
     * is bounded only when EVERY entry bounds it; aggregation order follows
     * the schema type, numeric for numeric columns, UTF-8 for strings — the
-    * same orders the prune-time compare uses). `rows = -1` marks a legacy
-    * plain-name ref (pre-stats manifest): no list-level pruning, full read.
+    * same orders the prune-time compare uses).
     */
   case class SegmentRef(name: String, rows: Long,
                         stats: Map[String, (String, String)] = Map.empty)
@@ -105,14 +110,12 @@ object Icelite {
     def filePaths: Seq[String] = files.map(_.path)
   }
 
-  /** Typed empty frame from the manifest's persisted schema — a zero-file
-    * snapshot (committed empty DataFrame) must still read back with its
-    * columns, or every downstream `.select`/`.filter` breaks only on the
-    * empty case. Falls back to a schemaless empty frame for pre-schema
-    * manifests. */
-  private def emptyTyped(spark: SparkSession, snap: Snapshot): DataFrame =
-    if (snap.schemaJson.isEmpty) spark.emptyDataFrame
-    else emptyTypedJson(spark, snap.schemaJson)
+  /** Typed empty frame from a persisted schema — a zero-file snapshot
+    * (committed empty DataFrame) must still read back with its columns, or
+    * every downstream `.select`/`.filter` breaks only on the empty case. */
+  private def emptyTyped(spark: SparkSession, schemaJson: String): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      DataType.fromJson(schemaJson).asInstanceOf[StructType])
 
   /** Column reference by EXACT name: `col("a.b")` parses the dot as nested
     * field access and fails on a legal flat column named `a.b`; backtick
@@ -123,6 +126,8 @@ object Icelite {
     col("`" + name.replace("`", "``") + "`")
 
   private def metaDir(table: String): Path = Paths.get(table, "meta")
+  private def manifestPath(table: String, id: Long): Path =
+    metaDir(table).resolve(s"snapshot-$id.json")
   private def currentPtr(table: String): Path = Paths.get(table, "_CURRENT")
 
   /** Critical-section guard shared by the commit path and [[expireSnapshots]]:
@@ -144,116 +149,122 @@ object Icelite {
     }
   }
 
-  /** Free a localCheckpoint's blocks after the merge commits or throws —
-    * repeated merges in a long-running job (e.g. a streaming foreachBatch
-    * upsert loop) would otherwise accumulate blocks for the session's life. */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    graft.Session.freeLocalCheckpoint(df)
-
   def currentSnapshotId(table: String): Option[Long] = {
     val p = currentPtr(table)
     if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
   }
 
-  /** Read a snapshot manifest (JSON is hand-rolled: no JSON lib needed for
-    * this fixed shape). Accepts the current slice format and the round-3
-    * bucket format (`"bucket":b` ⇒ slice (nBuckets, b); -1 ⇒ unsliced).
-    * Anything older that yields rows without file entries is a corrupt or
-    * unsupported manifest and FAILS LOUDLY — proceeding would read the
-    * table as empty, a merge would drop every existing row, and GC would
-    * delete live data.
+  /** The manifest codec (the Iceberg spec's manifest list + manifest files).
+    * A manifest `snapshot-<id>.json` is one object — `id`, `uuid`,
+    * `rowCount`, `inputFingerprint`, `nBuckets`, `bucketSpec`, `schemaJson`
+    * (base64 of the Spark schema JSON), `segments` — whose segment refs
+    * (`name`, `rows`, optional `stats64`) point at content-addressed segment
+    * files, each a JSON array of file entries (`path`, `mod`, `res`, `rows`,
+    * `checksum`, optional `stats64`). Zone-map keys and values are base64
+    * and written in sorted key order, so a segment's body — and with it its
+    * content address — is a pure function of its entries.
+    *
+    * Every field but `stats64` is required: a manifest or segment that lacks
+    * one, or whose rows do not add up, FAILS LOUDLY — proceeding would read
+    * the table as empty or partial, a merge would drop the missing rows, and
+    * GC would delete their live files.
     */
-  // stats KEYS AND VALUES are base64 in the current `stats64` form (the
-  // alphabet has no '"' '{' '}'), so the entry and inner-pair regexes stay
-  // exact on arbitrary column names and data values; the earlier `stats`
-  // form (raw keys, b64 values) still parses for manifests written before
-  // the key encoding
-  private val statPair = """"([^"]*)":\["([A-Za-z0-9+/=]*)","([A-Za-z0-9+/=]*)"\]""".r
-  private def parseStats(s: String, keyB64: Boolean): Map[String, (String, String)] =
-    if (s == null || s.isEmpty) Map.empty
-    else statPair.findAllMatchIn(s)
-      .map(m => (if (keyB64) b64dec(m.group(1)) else m.group(1))
-        -> (b64dec(m.group(2)), b64dec(m.group(3)))).toMap
+  private val json = new ObjectMapper()
 
-  private def parseEntries(txt: String, nBuckets: Int): Seq[FileEntry] = {
-    val sliceFiles = """\{"path":"([^"]*)","mod":(\d+),"res":(\d+),"rows":(\d+),"checksum":(-?\d+)(?:,"stats(64)?":\{([^}]*)\})?\}""".r
-      .findAllMatchIn(txt)
-      .map(m => FileEntry(m.group(1), m.group(2).toInt, m.group(3).toInt,
-        m.group(4).toLong, m.group(5).toLong,
-        parseStats(m.group(7), m.group(6) != null)))
-      .toSeq
-    if (sliceFiles.nonEmpty) sliceFiles
-    else """\{"path":"([^"]*)","bucket":(-?\d+),"rows":(\d+),"checksum":(-?\d+)\}""".r
-      .findAllMatchIn(txt)
-      .map { m =>
-        val b = m.group(2).toInt
-        if (b >= 0) FileEntry(m.group(1), nBuckets, b, m.group(3).toLong, m.group(4).toLong)
-        else FileEntry(m.group(1), 0, 0, m.group(3).toLong, m.group(4).toLong)
-      }.toSeq
+  private def b64enc(s: String): String =
+    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
+  private def b64dec(s: String): String =
+    new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
+
+  private def withStats(n: ObjectNode, stats: Map[String, (String, String)]): ObjectNode = {
+    if (stats.nonEmpty) {
+      val s = n.putObject("stats64")
+      stats.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
+        s.putArray(b64enc(c)).add(b64enc(lo)).add(b64enc(hi)) }
+    }
+    n
   }
 
-  private def manifestField(txt: String, k: String): String = {
-    val m = (s""""$k"\\s*:\\s*("([^"]*)"|[0-9-]+)""").r.findFirstMatchIn(txt)
-      .getOrElse(throw new IllegalStateException(s"manifest missing $k"))
-    Option(m.group(2)).getOrElse(m.group(1))
+  private def entryJson(f: FileEntry): String = json.writeValueAsString(withStats(
+    json.createObjectNode().put("path", f.path).put("mod", f.mod).put("res", f.res)
+      .put("rows", f.rows).put("checksum", f.checksum), f.stats))
+
+  private def manifestJson(snap: Snapshot, segments: Seq[SegmentRef]): String = {
+    val n = json.createObjectNode().put("id", snap.id).put("uuid", snap.uuid)
+      .put("rowCount", snap.rowCount).put("inputFingerprint", snap.inputFingerprint)
+      .put("nBuckets", snap.nBuckets).put("bucketSpec", snap.bucketSpec)
+      .put("schemaJson", b64enc(snap.schemaJson))
+    val refs = n.putArray("segments")
+    segments.foreach(r => withStats(refs.addObject().put("name", r.name).put("rows", r.rows), r.stats))
+    json.writeValueAsString(n)
   }
-  private def manifestOpt(txt: String, k: String, default: String): String =
-    (s""""$k"\\s*:\\s*("([^"]*)"|[0-9-]+)""").r.findFirstMatchIn(txt)
-      .map(m => Option(m.group(2)).getOrElse(m.group(1))).getOrElse(default)
+
+  private def corrupt(what: String, detail: String) = new IllegalStateException(
+    s"$what: $detail — unsupported/corrupt manifest or segment; refusing to read a partial table")
+
+  /** Parse `p` with `body`, turning any malformed content into [[corrupt]]. */
+  private def decode[T](p: Path, what: String)(body: JsonNode => T): T = {
+    val txt = Files.readString(p)
+    try body(json.readTree(txt))
+    catch { case NonFatal(e) => throw corrupt(what, e.toString) }
+  }
+
+  private def req(n: JsonNode, k: String, ok: JsonNode => Boolean): JsonNode =
+    Option(n.get(k)).filter(ok)
+      .getOrElse(throw new NoSuchElementException(s"missing or mistyped field '$k'"))
+  private def str(n: JsonNode, k: String): String = req(n, k, _.isTextual).textValue
+  private def num(n: JsonNode, k: String): Long = req(n, k, _.isIntegralNumber).longValue
+  private def items(n: JsonNode): Seq[JsonNode] = {
+    if (n == null || !n.isArray) throw new NoSuchElementException("missing or mistyped array")
+    n.asScala.toSeq
+  }
+
+  private def parseStats(n: JsonNode): Map[String, (String, String)] =
+    if (n == null) Map.empty
+    else n.properties.asScala.map { e =>
+      val Seq(lo, hi) = items(e.getValue).map(_.textValue)
+      b64dec(e.getKey) -> (b64dec(lo), b64dec(hi))
+    }.toMap
+
+  /** A manifest's snapshot fields (no file entries yet) and its segment
+    * refs. The refs must sum to the claimed rowCount; [[loadSegments]] then
+    * checks each segment against its ref, so a truncated list or segment
+    * can never pass as a smaller table. */
+  private def readHeader(table: String, id: Long): (Snapshot, Seq[SegmentRef]) = {
+    val what = s"manifest snapshot-$id.json of $table"
+    val (snap, refs) = decode(manifestPath(table, id), what) { n =>
+      val refs = items(n.get("segments")).map(r =>
+        SegmentRef(str(r, "name"), num(r, "rows"), parseStats(r.get("stats64"))))
+      (Snapshot(num(n, "id"), str(n, "uuid"), Seq.empty, num(n, "rowCount"),
+        str(n, "inputFingerprint"), num(n, "nBuckets").toInt, str(n, "bucketSpec"),
+        b64dec(str(n, "schemaJson"))), refs)
+    }
+    if (snap.rowCount != refs.map(_.rows).sum)
+      throw corrupt(what, s"claims ${snap.rowCount} rows but its segment refs sum to " +
+        refs.map(_.rows).sum)
+    (snap, refs)
+  }
+
+  /** The segment refs of manifest `id` — the names segment GC keeps. */
+  private[graft] def segmentRefs(table: String, id: Long): Seq[SegmentRef] =
+    readHeader(table, id)._2
+
+  /** The file entries of `refs`' segments, each checked against its ref's
+    * row count. */
+  private def loadSegments(table: String, refs: Seq[SegmentRef]): Seq[FileEntry] =
+    refs.flatMap { r =>
+      val what = s"segment ${r.name} of $table"
+      val es = decode(metaDir(table).resolve(r.name), what)(items(_).map(e =>
+        FileEntry(str(e, "path"), num(e, "mod").toInt, num(e, "res").toInt, num(e, "rows"),
+          num(e, "checksum"), parseStats(e.get("stats64")))))
+      if (es.map(_.rows).sum != r.rows)
+        throw corrupt(what, s"claims ${r.rows} rows but its entries sum to ${es.map(_.rows).sum}")
+      es
+    }
 
   def readManifest(table: String, id: Long): Snapshot = {
-    val txt = Files.readString(metaDir(table).resolve(s"snapshot-$id.json"))
-    def field(k: String): String = manifestField(txt, k)
-    def opt(k: String, default: String): String = manifestOpt(txt, k, default)
-    val nBuckets = opt("nBuckets", "0").toInt
-    // segmented manifest (the Iceberg manifest-list analog): file entries
-    // live in content-addressed segment files referenced by name; a round-4
-    // inline manifest (entries embedded) still parses
-    val refs = segmentRefs(txt)
-    val files =
-      if (refs.nonEmpty)
-        refs.flatMap(seg => parseEntries(
-          Files.readString(metaDir(table).resolve(seg.name)), nBuckets))
-      else parseEntries(txt, nBuckets)
-    val rowCount = field("rowCount").toLong
-    // cross-check the commit-time invariant rowCount == Σ entry rows: a
-    // truncated segment (or an unparseable legacy manifest) yields a
-    // partial-but-nonempty entry list that files.isEmpty alone would miss —
-    // proceeding would silently drop a bucket's rows and let GC delete its
-    // live files
-    if (rowCount != files.map(_.rows).sum)
-      throw new IllegalStateException(
-        s"manifest snapshot-$id.json of $table claims $rowCount rows but its " +
-          s"parseable file entries sum to ${files.map(_.rows).sum} " +
-          s"(${files.size} entries) — unsupported/corrupt manifest or segment; " +
-          "refusing to read a partial table")
-    val schemaJson = opt("schemaJson", "") match {
-      case "" => ""
-      case b64 => b64dec(b64)
-    }
-    Snapshot(field("id").toLong, field("uuid"), files, rowCount,
-      field("inputFingerprint"), nBuckets, opt("bucketSpec", ""), schemaJson)
-  }
-
-  /** The segment refs a manifest's raw JSON references (shared by the read
-    * path, list-level pruning, and segment GC — a divergence here would GC
-    * live metadata). Current form: objects with name + rows + aggregated
-    * stats; a pre-stats manifest's plain name array parses as refs with
-    * `rows = -1` (no list-level pruning, full read). The inner regexes stay
-    * exact because segment names and b64 stats carry no `]` or `}`. */
-  private def segmentRefs(manifestTxt: String): Seq[SegmentRef] = {
-    // the segments array is the manifest's LAST field (manifestJson) — match
-    // greedily to the closing `]}`: the object form's stats64 pairs contain
-    // `]` characters, so a first-`]` match would truncate the array
-    val inner = """"segments"\s*:\s*\[([\s\S]*)\]\s*\}\s*$""".r.findFirstMatchIn(manifestTxt)
-      .map(_.group(1)).getOrElse(return Seq.empty)
-    val objRe = """\{"name":"([^"]+)","rows":(\d+)(?:,"stats64":\{([^}]*)\})?\}""".r
-    val objs = objRe.findAllMatchIn(inner)
-      .map(m => SegmentRef(m.group(1), m.group(2).toLong,
-        parseStats(m.group(3), keyB64 = true))).toSeq
-    if (objs.nonEmpty) objs
-    else """"([^"]+)"""".r.findAllMatchIn(inner)
-      .map(m => SegmentRef(m.group(1), -1L)).toSeq
+    val (snap, refs) = readHeader(table, id)
+    snap.copy(files = loadSegments(table, refs))
   }
 
   /** Per-file lineage of freshly written parquet under `dataDir`: one scan,
@@ -312,8 +323,7 @@ object Icelite {
     * [[MaxStatsCols]] in schema order. (Timestamps/dates are excluded: their
     * string casts aren't order-faithful across precisions — callers range on
     * epoch columns, which are numeric.) */
-  private def statsEligible(
-      schema: org.apache.spark.sql.types.StructType): Seq[(String, Int)] = {
+  private def statsEligible(schema: StructType): Seq[(String, Int)] = {
     import org.apache.spark.sql.types._
     schema.fields.iterator
       .filter(f => f.name != "__slice")
@@ -392,14 +402,12 @@ object Icelite {
     else
       df.write.mode("overwrite").parquet(dataDir.toString)
     val dataCols = df.columns.filterNot(_ == "__slice").toSeq
-    val ls = Files.list(dataDir)
-    val hasData = try ls.iterator().asScala.exists(p =>
-      p.toString.endsWith(".parquet") || Files.isDirectory(p)) finally ls.close()
+    val hasData = list(dataDir).exists(p =>
+      p.toString.endsWith(".parquet") || Files.isDirectory(p))
     val entries =
       if (hasData) fileLineage(spark, dataDir, dataCols)
       else Seq.empty // empty write: only _SUCCESS
-    val schemaJson = org.apache.spark.sql.types.StructType(
-      df.schema.fields.filterNot(_.name == "__slice")).json
+    val schemaJson = StructType(df.schema.fields.filterNot(_.name == "__slice")).json
     (uuid, entries, schemaJson)
   }
 
@@ -424,29 +432,24 @@ object Icelite {
         case _ =>
       }
       val segments = writeSegments(table, entries, nBuckets, schemaJson)
-      var id = cur.getOrElse(0L) + 1
-      var written = false
-      while (!written) {
-        val manifest = manifestJson(id, uuid, rowCount, inputFingerprint, nBuckets,
-          bucketSpec, schemaJson, segments)
-        try {
-          Files.writeString(metaDir(table).resolve(s"snapshot-$id.json"),
-            manifest, StandardOpenOption.CREATE_NEW)
-          written = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => id += 1
-        }
-      }
+      var snap = Snapshot(cur.getOrElse(0L) + 1, uuid, entries, rowCount, inputFingerprint,
+        nBuckets, bucketSpec, schemaJson)
+      while (!createFile(manifestPath(table, snap.id), manifestJson(snap, segments)))
+        snap = snap.copy(id = snap.id + 1)
       // atomic pointer swap — the actual commit
       val tmp = Paths.get(table, s"_CURRENT.tmp.$uuid")
-      Files.writeString(tmp, id.toString)
+      Files.writeString(tmp, snap.id.toString)
       Files.move(tmp, currentPtr(table), StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
       Files.deleteIfExists(inflightMarker(table, uuid)) // write is now durable
-      Some(Snapshot(id, uuid, entries, rowCount, inputFingerprint, nBuckets, bucketSpec,
-        schemaJson))
+      Some(snap)
     }
   }
+
+  /** Write a new file; false when it already exists. */
+  private def createFile(p: Path, body: String): Boolean =
+    try { Files.writeString(p, body, StandardOpenOption.CREATE_NEW); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
 
   /** Commit a DataFrame as the table's next snapshot (full overwrite of the
     * logical content; previous snapshots stay readable via their manifests).
@@ -456,23 +459,6 @@ object Icelite {
     val (uuid, entries, schemaJson) = writeData(spark, df, table)
     commitEntries(table, uuid, entries, inputFingerprint, 0, "", schemaJson, None).get
   }
-
-  private def b64enc(s: String): String =
-    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-  private def b64dec(s: String): String =
-    new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
-
-  // keys are b64 like the values: a column named with JSON structural
-  // chars must not corrupt the hand-rolled grammar (sorted by RAW name so
-  // the serialized body — and a segment's content-address — is deterministic)
-  private def stats64Json(stats: Map[String, (String, String)]): String =
-    if (stats.isEmpty) ""
-    else stats.toSeq.sortBy(_._1)
-      .map { case (c, (lo, hi)) => s""""${b64enc(c)}":["${b64enc(lo)}","${b64enc(hi)}"]""" }
-      .mkString(""","stats64":{""", ",", "}")
-
-  private def entryJson(f: FileEntry): String =
-    s"""{"path":"${f.path}","mod":${f.mod},"res":${f.res},"rows":${f.rows},"checksum":${f.checksum}${stats64Json(f.stats)}}"""
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -492,8 +478,9 @@ object Icelite {
   private def writeSegments(table: String, entries: Seq[FileEntry],
                             nBuckets: Int, schemaJson: String): Seq[SegmentRef] = {
     val base = math.max(1, nBuckets)
-    val numericCols = numericColsOf(schemaJson)
-    val eligibleCols = eligibleColsOf(schemaJson)
+    // columns stats-eligible under the persisted schema -> orders numerically
+    val statKinds = statsEligible(DataType.fromJson(schemaJson).asInstanceOf[StructType])
+      .map { case (c, kind) => c -> (kind != StatString) }.toMap
     // Sliced (hash-claim) entries segment BY BASE BUCKET: the grouping is
     // stable across merges, so untouched buckets content-address to the same
     // segment file (commit metadata O(changed buckets)). Their aggregated
@@ -502,7 +489,7 @@ object Icelite {
     // commit: the ANN index, a time-ordered event log) segment into ~√n
     // path-sorted chunks instead of one flat list: path order follows the
     // writer's partition order, so each chunk's aggregated bounds are tight
-    // and [[planScan]] prunes whole chunks at the list level — a balanced
+    // and [[readWhereAll]] prunes whole chunks at the list level — a balanced
     // O(√n)-refs-per-manifest, O(√n)-entries-per-segment hierarchy at any n.
     val (sliced, unsliced) = entries.partition(_.mod > 0)
     val slicedGroups = sliced.groupBy(_.res % base).toSeq.sortBy(_._1).map(_._2)
@@ -518,6 +505,8 @@ object Icelite {
     (slicedGroups ++ unslicedGroups)
       .map { fs =>
         val sorted = fs.sortBy(_.path)
+        // one entry per line: the exact bytes earlier commits wrote, so an
+        // untouched bucket keeps its content address across versions
         val body = sorted.map(entryJson).mkString("[", ",\n", "]")
         // full 128-bit content hash: this name IS the identity reuse trusts
         // blindly (Files.exists ⇒ skip write), and a collision would commit
@@ -525,42 +514,10 @@ object Icelite {
         // the birthday margin to 64 bits to save 16 filename chars
         val name = s"segment-${md5hex(body)}.json"
         val p = metaDir(table).resolve(name)
-        if (!Files.exists(p)) {
-          try Files.writeString(p, body, StandardOpenOption.CREATE_NEW)
-          catch { case _: java.nio.file.FileAlreadyExistsException => () }
-        }
-        SegmentRef(name, sorted.map(_.rows).sum,
-          aggBounds(sorted, numericCols, eligibleCols))
+        if (!Files.exists(p)) createFile(p, body)
+        SegmentRef(name, sorted.map(_.rows).sum, aggBounds(sorted, statKinds))
       }
   }
-
-  /** Columns whose stored bounds order NUMERICALLY (from the persisted
-    * schema); everything else orders as UTF-8 strings. The aggregation order
-    * must match the order [[pruneFiles]]-style compares use at read time, or
-    * a list-level bound could be tighter than its segment's values. */
-  private def numericColsOf(schemaJson: String): Set[String] =
-    if (schemaJson.isEmpty) Set.empty
-    else try {
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-        .fields.collect {
-          case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] => f.name
-        }.toSet
-    } catch { case scala.util.control.NonFatal(_) => Set.empty }
-
-  /** Columns stats-eligible under the persisted schema (same type rules as
-    * [[statsEligible]]: string or numeric). An empty/unparseable schema
-    * yields the empty set — no list-level stats, never unsound pruning. */
-  private def eligibleColsOf(schemaJson: String): Set[String] =
-    if (schemaJson.isEmpty) Set.empty
-    else try {
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-        .fields.collect {
-          case f if f.dataType == org.apache.spark.sql.types.StringType ||
-            f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] => f.name
-        }.toSet
-    } catch { case scala.util.control.NonFatal(_) => Set.empty }
 
   /** Per-column zone map over a segment's entries: a column is bounded only
     * when every entry bounds it (one stat-less file makes the segment's
@@ -570,38 +527,25 @@ object Icelite {
     * unparseable numeric bounds (NaN/Infinity) drop the column.
     *
     * Only columns stats-eligible under the CURRENT schema aggregate
-    * (`eligibleCols`): merge-kept entries can carry stats for a column that
-    * was since dropped or re-typed, and aggregating such a column as UTF-8
-    * while a reader compares its bounds numerically could unsoundly prune a
-    * segment (silent row loss). Absent list-level stats are always safe. */
-  private def aggBounds(fs: Seq[FileEntry], numericCols: Set[String],
-                        eligibleCols: Set[String]): Map[String, (String, String)] = {
+    * (`statKinds`, column -> orders numerically): merge-kept entries can
+    * carry stats for a column that was since dropped or re-typed, and
+    * aggregating such a column as UTF-8 while a reader compares its bounds
+    * numerically could unsoundly prune a segment (silent row loss). The
+    * aggregation order must match the order [[boundsOverlap]] compares in.
+    * Absent list-level stats are always safe. */
+  private def aggBounds(fs: Seq[FileEntry],
+                        statKinds: Map[String, Boolean]): Map[String, (String, String)] = {
     if (fs.isEmpty) return Map.empty
-    val cols = fs.map(_.stats.keySet).reduce(_ intersect _)
-      .intersect(eligibleCols)
+    val cols = fs.map(_.stats.keySet).reduce(_ intersect _).intersect(statKinds.keySet)
     cols.iterator.flatMap { c =>
       val bs = fs.map(_.stats(c))
-      if (numericCols(c))
+      if (statKinds(c))
         try Some(c -> (bs.minBy(b => BigDecimal(b._1))._1,
                        bs.maxBy(b => BigDecimal(b._2))._2))
         catch { case _: NumberFormatException => None }
       else Some(c -> (bs.map(_._1).reduce((a, b) => if (utf8Lt(a, b)) a else b),
                       bs.map(_._2).reduce((a, b) => if (utf8Lt(a, b)) b else a)))
     }.toMap
-  }
-
-  private def manifestJson(id: Long, uuid: String, rowCount: Long,
-                           inputFingerprint: String, nBuckets: Int, bucketSpec: String,
-                           schemaJson: String, segments: Seq[SegmentRef]): String = {
-    val segJson = segments
-      .map(s => s"""{"name":"${s.name}","rows":${s.rows}${stats64Json(s.stats)}}""")
-      .mkString("[", ",", "]")
-    s"""{"id":$id,"uuid":"$uuid","rowCount":$rowCount,
-       |"inputFingerprint":"$inputFingerprint",
-       |"nBuckets":$nBuckets,
-       |"bucketSpec":"$bucketSpec",
-       |"schemaJson":"${b64enc(schemaJson)}",
-       |"segments":$segJson}""".stripMargin
   }
 
   /** Smallest `base · 2^d` with `est / it ≤ maxRows` — the modulus for a
@@ -682,7 +626,9 @@ object Icelite {
       "__slice and __h are reserved columns")
     val spec = pkCols.mkString(",")
     val hcol = pmod(hash(pkCols.map(qcol): _*), lit(Int.MaxValue))
-    // the batch is re-scanned per attempt (and per touched-slice probe); pin it
+    // the batch is re-scanned per attempt (and per touched-slice probe); pin
+    // it, and free it whether the merge commits or throws — a long-running
+    // upsert loop (streaming foreachBatch) would otherwise accumulate blocks
     val incoming = df.dropDuplicates(pkCols).withColumn("__h", hcol).localCheckpoint()
     try {
       val nIncoming = incoming.count()
@@ -767,7 +713,7 @@ object Icelite {
         }
       }
       throw new IllegalStateException(s"merge on $table lost 8 commit races")
-    } finally freeLocalCheckpoint(incoming)
+    } finally graft.Session.freeLocalCheckpoint(incoming)
   }
 
   /** Maintenance: rewrite data files violating the size bound — split files
@@ -858,11 +804,13 @@ object Icelite {
     * files are immutable and carried entries keep old snapshots readable
     * until [[expireSnapshots]] drops them.
     */
-  def readAt(spark: SparkSession, table: String, id: Long): DataFrame = {
-    val snap = readManifest(table, id)
-    if (snap.files.isEmpty) emptyTyped(spark, snap)
+  def readAt(spark: SparkSession, table: String, id: Long): DataFrame =
+    readSnapshot(spark, readManifest(table, id))
+
+  /** The rows of an already-parsed snapshot's files. */
+  private[table] def readSnapshot(spark: SparkSession, snap: Snapshot): DataFrame =
+    if (snap.files.isEmpty) emptyTyped(spark, snap.schemaJson)
     else spark.read.parquet(snap.filePaths: _*)
-  }
 
   /** Roll the table back to a retained snapshot (the Iceberg
     * `rollback_to_snapshot` analog): an O(1) pointer swap under the table
@@ -908,18 +856,20 @@ object Icelite {
   def historyDf(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     val cur = currentSnapshotId(table)
-    val idRe = """snapshot-(\d+)\.json""".r
-    val ls = Files.list(metaDir(table))
-    val ids = try ls.iterator().asScala
-      .flatMap(p => idRe.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toLong))
-      .toSeq.sorted finally ls.close()
-    ids.map { id =>
+    snapshotIds(table).map { id =>
       val s = readManifest(table, id)
       (id, s.rowCount, s.files.size, s.nBuckets, s.bucketSpec,
         s.inputFingerprint, cur.contains(id))
     }.toDF("id", "row_count", "n_files", "n_buckets", "bucket_spec",
       "input_fingerprint", "is_current")
   }
+
+  private val SnapshotFile = """snapshot-(\d+)\.json""".r
+
+  /** Ids of every retained manifest, ascending. */
+  private def snapshotIds(table: String): Seq[Long] =
+    list(metaDir(table)).map(_.getFileName.toString)
+      .collect { case SnapshotFile(id) => id.toLong }.sorted
 
   /** Manifest-level data skipping (the Iceberg scan-planning analog): read
     * only the files whose zone map can intersect `[lo, hi]` on `column`,
@@ -941,83 +891,32 @@ object Icelite {
     * IO optimization, never a semantics change — e.g. a (time range ∧ id
     * range) query over a table clustered by either column opens only the
     * doubly-matching files.
+    *
+    * Pruning runs at BOTH metadata levels: whole manifest segments whose
+    * aggregated zone map excludes a range are never even read (the Iceberg
+    * manifest-list partition-summary analog; at the 10^6-file design point
+    * this is the difference between parsing every segment's entry list on
+    * the driver and opening only the matching buckets' segments), then
+    * per-file zone maps within the surviving segments. Integrity holds with
+    * segments skipped: the list sums to rowCount and every parsed segment
+    * sums to its ref, so a truncated segment still fails loudly.
     */
   def readWhereAll(spark: SparkSession, table: String,
                    ranges: Seq[(String, Any, Any)]): DataFrame = {
     require(ranges.nonEmpty, "readWhereAll needs at least one range")
     val id = currentSnapshotId(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot in $table"))
-    val (keep, schemaJson, fallback) = planScan(table, id, ranges)
-    val base =
-      if (keep.isEmpty)
-        // everything pruned: preserve the schema metadata-only when the
-        // manifest carries it (no footer open), else via an empty scan
-        if (schemaJson.nonEmpty) emptyTypedJson(spark, schemaJson)
-        else fallback() match {
-          case Seq() => spark.emptyDataFrame
-          case fs => spark.read.parquet(fs.head.path).where(lit(false))
-        }
-      else spark.read.parquet(keep.map(_.path): _*)
-    ranges.foldLeft(base) { case (df, (c, lo, hi)) =>
+    val (snap, refs) = readHeader(table, id)
+    val liveRefs = refs.filter(r => ranges.forall { case (c, lo, hi) =>
+      r.stats.get(c).forall { case (mn, mx) => boundsOverlap(mn, mx, lo, hi) } })
+    val keep = ranges.foldLeft(loadSegments(table, liveRefs)) { case (fs, (c, lo, hi)) =>
+      pruneFiles(fs, c, lo, hi) }
+    // when everything is pruned the manifest's schema keeps the result
+    // typed without opening a footer
+    ranges.foldLeft(readSnapshot(spark, snap.copy(files = keep))) { case (df, (c, lo, hi)) =>
       df.where(qcol(c) >= lit(lo) && qcol(c) <= lit(hi))
     }
   }
-
-  /** Scan planning: the surviving file entries for a conjunctive range set,
-    * pruning at BOTH metadata levels — whole manifest segments whose
-    * aggregated zone map excludes a range are never even read (the Iceberg
-    * manifest-list partition-summary analog; at the 10^6-file design point
-    * this is the difference between parsing every segment's entry list on
-    * the driver and opening only the matching buckets' segments), then
-    * per-file zone maps within the surviving segments. Returns (kept files,
-    * persisted schema JSON, fallback thunk yielding the FULL file list for
-    * schema recovery). Legacy manifests (inline entries or plain-name refs)
-    * skip the list level. Integrity: when pruning skips segments the
-    * rowCount==Σrows invariant is enforced at the LIST level (Σ ref rows)
-    * plus per parsed segment, so a truncated segment still fails loudly.
-    */
-  private def planScan(table: String, id: Long, ranges: Seq[(String, Any, Any)])
-      : (Seq[FileEntry], String, () => Seq[FileEntry]) = {
-    val txt = Files.readString(metaDir(table).resolve(s"snapshot-$id.json"))
-    val refs = segmentRefs(txt)
-    val schemaJson = manifestOpt(txt, "schemaJson", "") match {
-      case "" => ""
-      case b64 => b64dec(b64)
-    }
-    if (refs.isEmpty || refs.exists(_.rows < 0)) {
-      // inline or legacy manifest: no list level to prune — full parse
-      val snap = readManifest(table, id)
-      val keep = ranges.foldLeft(snap.files) { case (fs, (c, lo, hi)) =>
-        pruneFiles(fs, c, lo, hi) }
-      (keep, snap.schemaJson, () => snap.files)
-    } else {
-      val rowCount = manifestField(txt, "rowCount").toLong
-      if (rowCount != refs.map(_.rows).sum)
-        throw new IllegalStateException(
-          s"manifest snapshot-$id.json of $table claims $rowCount rows but its " +
-            s"segment refs sum to ${refs.map(_.rows).sum} — corrupt manifest list")
-      val nBuckets = manifestOpt(txt, "nBuckets", "0").toInt
-      val liveRefs = refs.filter(r => ranges.forall { case (c, lo, hi) =>
-        r.stats.get(c).forall { case (mn, mx) => boundsOverlap(mn, mx, lo, hi) } })
-      val files = liveRefs.flatMap { r =>
-        val es = parseEntries(Files.readString(metaDir(table).resolve(r.name)), nBuckets)
-        if (es.map(_.rows).sum != r.rows)
-          throw new IllegalStateException(
-            s"segment ${r.name} of $table claims ${r.rows} rows but its entries " +
-              s"sum to ${es.map(_.rows).sum} — corrupt segment")
-        es
-      }
-      val keep = ranges.foldLeft(files) { case (fs, (c, lo, hi)) =>
-        pruneFiles(fs, c, lo, hi) }
-      (keep, schemaJson, () => readManifest(table, id).files)
-    }
-  }
-
-  private def emptyTypedJson(spark: SparkSession, schemaJson: String): DataFrame =
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** The manifest-pruning half of [[readWhere]], exposed for tests and scan
     * metrics: the files whose stats cannot exclude `[lo, hi]` on `column`.
@@ -1087,16 +986,12 @@ object Icelite {
       // .filter(col("__change") === ...) breaks only on the no-change case.
       // The manifest's persisted schema keeps this path METADATA-ONLY (the
       // "IO is O(changed slices)" contract: zero changed slices, zero file
-      // opens); parquet footers are only a pre-schemaJson-manifest fallback.
-      else if (b.schemaJson.nonEmpty) emptyTyped(spark, b)
-      else if (b.files.nonEmpty) spark.read.parquet(b.files.head.path)
-      else if (a.files.nonEmpty) spark.read.parquet(a.files.head.path)
-      else return spark.emptyDataFrame // pre-schema manifest of an empty table
+      // opens).
+      else emptyTyped(spark, b.schemaJson)
     val cols = schemaSource.columns.toSeq
     def side(paths: Seq[String], tag: String): DataFrame = {
       val df = if (paths.nonEmpty) spark.read.parquet(paths: _*)
-               else spark.createDataFrame(
-                 new java.util.ArrayList[org.apache.spark.sql.Row](), schemaSource.schema)
+               else emptyTyped(spark, schemaSource.schema.json)
       df.select(pkCols.map(qcol) ++ Seq(
         struct(cols.map(qcol): _*).as(s"__row_$tag"),
         xxhash64(cols.map(qcol): _*).as(s"__h_$tag")): _*)
@@ -1166,37 +1061,26 @@ object Icelite {
     if (currentSnapshotId(table).isEmpty) return (0, 0)
     withTableLock(table) {
       val cur = currentSnapshotId(table).getOrElse(return (0, 0))
-      val manifestRe = """snapshot-(\d+)\.json""".r
-      val metaLs = Files.list(metaDir(table))
-      val ids = try metaLs.iterator().asScala
-        .flatMap(p => manifestRe.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toLong))
-        .toSeq.sorted
-        finally metaLs.close()
-      val (expired, kept) = ids.partition(_ <= cur - retain)
+      val (expired, kept) = snapshotIds(table).partition(_ <= cur - retain)
       // canonicalize BOTH sides: manifest paths come from input_file_name()
       // (absolute, normalized) while the walk below is prefixed by however the
       // caller spelled `table` — a raw-string compare on a relative table path
       // would see every live file as unreferenced and GC the whole table
       def canon(p: Path): String = p.toAbsolutePath.normalize.toString
+      val keptRefs = kept.flatMap(segmentRefs(table, _)).distinct
       val referenced: Set[String] =
-        kept.flatMap(id => readManifest(table, id).filePaths)
-          .map(f => canon(Paths.get(f))).toSet
+        loadSegments(table, keptRefs).map(f => canon(Paths.get(f.path))).toSet
       val knownDead: Set[String] =
         expired.flatMap(id => readManifest(table, id).filePaths)
           .map(f => canon(Paths.get(f))).toSet -- referenced
       // segment GC: keep only manifest segments some retained snapshot
       // references (content-addressing shares segments across snapshots)
-      val keptSegs: Set[String] = kept.flatMap { id =>
-        segmentRefs(Files.readString(metaDir(table).resolve(s"snapshot-$id.json")))
-          .map(_.name)
-      }.toSet
-      expired.foreach(id => Files.delete(metaDir(table).resolve(s"snapshot-$id.json")))
-      val segLs = Files.list(metaDir(table))
-      try segLs.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith("segment-") &&
-          !keptSegs.contains(p.getFileName.toString))
-        .foreach(Files.deleteIfExists(_))
-      finally segLs.close()
+      val keptSegs = keptRefs.map(_.name).toSet
+      expired.foreach(id => Files.delete(manifestPath(table, id)))
+      list(metaDir(table)).filter { p =>
+        val name = p.getFileName.toString
+        name.startsWith("segment-") && !keptSegs(name)
+      }.foreach(Files.deleteIfExists(_))
       // GC: delete unreferenced files under data/, then prune empty dirs
       val dataRoot = Paths.get(table, "data")
       var deleted = 0
@@ -1216,55 +1100,40 @@ object Icelite {
         val inflightDir = Paths.get(table, "_inflight")
         val liveUuids: Set[String] =
           if (!Files.isDirectory(inflightDir)) Set.empty
-          else {
-            val ls = Files.list(inflightDir)
-            val markers = try ls.iterator().asScala.toSeq finally ls.close()
-            markers.flatMap { m =>
-              if (now - Files.getLastModifiedTime(m).toMillis > inflightTtlMs) {
-                Files.deleteIfExists(m); None
-              } else Some(m.getFileName.toString)
-            }.toSet
-          }
+          else list(inflightDir).flatMap { m =>
+            if (now - Files.getLastModifiedTime(m).toMillis > inflightTtlMs) {
+              Files.deleteIfExists(m); None
+            } else Some(m.getFileName.toString)
+          }.toSet
         def inLiveWrite(p: Path): Boolean = {
           val rel = dataRoot.relativize(p)
           rel.getNameCount > 0 && liveUuids.contains(rel.getName(0).toString)
         }
-        val walk = Files.walk(dataRoot)
-        try {
-          walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq.foreach { p =>
-            if (!inSet(referenced)(p) && !inLiveWrite(p)) {
-              val dead = inSet(knownDead)(p) ||
-                now - Files.getLastModifiedTime(p).toMillis > orphanGraceMs
-              if (dead) { Files.delete(p); deleted += 1 }
-            }
+        walk(dataRoot).filter(Files.isRegularFile(_)).foreach { p =>
+          if (!inSet(referenced)(p) && !inLiveWrite(p)) {
+            val dead = inSet(knownDead)(p) ||
+              now - Files.getLastModifiedTime(p).toMillis > orphanGraceMs
+            if (dead) { Files.delete(p); deleted += 1 }
           }
-        } finally walk.close()
-        pruneEmptyDirs(dataRoot)
+        }
+        // prune the directories the GC emptied, deepest first
+        walk(dataRoot).filter(d => d != dataRoot && Files.isDirectory(d))
+          .sortBy(-_.getNameCount).foreach(d => if (list(d).isEmpty) Files.delete(d))
       }
       (expired.size, deleted)
     }
   }
 
-  private def pruneEmptyDirs(root: Path): Unit = {
-    val walk = Files.walk(root)
-    val dirs = try walk.iterator().asScala.filter(Files.isDirectory(_)).toSeq
-               finally walk.close()
-    dirs.sortBy(-_.getNameCount).foreach { d =>
-      if (d != root) {
-        val ls = Files.list(d)
-        val empty = try !ls.iterator().hasNext finally ls.close()
-        if (empty) Files.delete(d)
-      }
-    }
+  /** Every path under `root` (root first) to `depth` levels, collected
+    * eagerly so the directory stream is closed before callers delete. */
+  private def walk(root: Path, depth: Int = Int.MaxValue): Seq[Path] = {
+    val s = Files.walk(root, depth)
+    try s.iterator().asScala.toSeq finally s.close()
   }
+  private def list(dir: Path): Seq[Path] = walk(dir, 1).tail
 
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      val all = try walk.iterator().asScala.toSeq finally walk.close()
-      all.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
-    }
-  }
+  private def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) walk(p).sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
 }
 
 /** Multi-stage resumable pipeline over Icelite tables. */
@@ -1276,12 +1145,11 @@ class Pipeline(spark: SparkSession, root: String) {
     */
   def stage(name: String, inputFingerprint: String)(body: => DataFrame): DataFrame = {
     val table = s"$root/$name"
-    Icelite.currentSnapshotId(table) match {
-      case Some(id) if Icelite.readManifest(table, id).inputFingerprint == inputFingerprint =>
-        Icelite.read(spark, table)
-      case _ =>
-        Icelite.commit(spark, body, table, inputFingerprint)
-        Icelite.read(spark, table)
-    }
+    // read exactly the snapshot whose fingerprint was checked (or the one
+    // just committed) — re-resolving _CURRENT could return a later commit
+    val snap = Icelite.currentSnapshotId(table).map(Icelite.readManifest(table, _))
+      .filter(_.inputFingerprint == inputFingerprint)
+      .getOrElse(Icelite.commit(spark, body, table, inputFingerprint))
+    Icelite.readSnapshot(spark, snap)
   }
 }

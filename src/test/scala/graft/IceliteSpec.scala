@@ -266,10 +266,7 @@ class IceliteSpec extends SparkSpec {
   }
 
   test("commit metadata is O(changed buckets): untouched manifest segments are reused by name") {
-    def segRefs(t: String, id: Long): Set[String] = {
-      val txt = Files.readString(Paths.get(t, "meta", s"snapshot-$id.json"))
-      """segment-[0-9a-f]{32}\.json""".r.findAllMatchIn(txt).map(_.matched).toSet
-    }
+    def segRefs(t: String, id: Long): Set[String] = Icelite.segmentRefs(t, id).map(_.name).toSet
     val t = tmpDir() + "/seg1"
     val big = (1 to 1000).map(i => (i.toLong, s"v$i")).toDF("id", "v")
     Icelite.merge(spark, big, t, Seq("id"), nBuckets = 16)
@@ -306,22 +303,12 @@ class IceliteSpec extends SparkSpec {
     val hit = Icelite.readWhere(spark, t, "tenx", 550L, 550L)
     assert(hit.as[(Long, Long)].collect().toSet === Set((55L, 550L)))
     val meta = Paths.get(t, "meta")
-    val txt = Files.readString(meta.resolve(s"snapshot-$id1.json"))
-    val segs = """segment-[0-9a-f]{32}\.json""".r.findAllMatchIn(txt).map(_.matched).toSeq.distinct
+    val refs = Icelite.segmentRefs(t, id1)
+    val segs = refs.map(_.name).distinct
     assert(segs.size > 1, "clustered commit must chunk into multiple segments")
     // the keeper: the segment whose aggregated tenx zone map contains 550
-    def dec(x: String) = new String(java.util.Base64.getDecoder.decode(x), "UTF-8")
-    val keepers = segs.filter { s =>
-      val refRe = ("""\{"name":"""" + java.util.regex.Pattern.quote(s) +
-        """","rows":\d+,"stats64":\{([^}]*)\}\}""").r
-      refRe.findFirstMatchIn(txt).exists { m =>
-        """"([A-Za-z0-9+/=]*)":\["([A-Za-z0-9+/=]*)","([A-Za-z0-9+/=]*)"\]""".r
-          .findAllMatchIn(m.group(1)).exists { p =>
-            dec(p.group(1)) == "tenx" &&
-              BigDecimal(dec(p.group(2))) <= 550 && BigDecimal(dec(p.group(3))) >= 550
-          }
-      }
-    }
+    val keepers = refs.filter(_.stats.get("tenx").exists { case (lo, hi) =>
+      BigDecimal(lo) <= 550 && BigDecimal(hi) >= 550 }).map(_.name)
     assert(keepers.size === 1, s"tight chunk bounds must keep exactly one segment, got $keepers")
     // delete every OTHER segment file: a full manifest parse now throws, but
     // the list-level pruned scan never opens them — proof the planner
@@ -330,27 +317,6 @@ class IceliteSpec extends SparkSpec {
     intercept[Exception](Icelite.read(spark, t).count())
     val pruned = Icelite.readWhere(spark, t, "tenx", 550L, 550L)
     assert(pruned.as[(Long, Long)].collect().toSet === Set((55L, 550L)))
-  }
-
-  test("round-4 inline manifests (files embedded) still read after the segment change") {
-    val t = tmpDir() + "/inline1"
-    Icelite.merge(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t, Seq("id"), nBuckets = 2)
-    val snap = Icelite.readManifest(t, 1)
-    // rewrite the manifest in the round-4 inline form (same entries, no segments)
-    val inline = snap.files.map(f =>
-      s"""{"path":"${f.path}","mod":${f.mod},"res":${f.res},"rows":${f.rows},"checksum":${f.checksum}}""")
-      .mkString("[", ",", "]")
-    Files.writeString(Paths.get(t, "meta", "snapshot-1.json"),
-      s"""{"id":1,"uuid":"${snap.uuid}","rowCount":${snap.rowCount},
-         |"inputFingerprint":"","nBuckets":2,"bucketSpec":"id",
-         |"files":$inline}""".stripMargin)
-    val back = Icelite.readManifest(t, 1)
-    // legacy inline entries carry no zone-map stats — identity modulo stats
-    assert(back.files.map(_.copy(stats = Map.empty)).toSet
-      === snap.files.map(_.copy(stats = Map.empty)).toSet)
-    assert(back.files.forall(_.stats.isEmpty))
-    assert(Icelite.read(spark, t).as[(Long, String)].collect().toSet
-      === Set((1L, "a"), (2L, "b")))
   }
 
   test("unsupported legacy manifest fails loudly instead of reading as empty") {
@@ -364,6 +330,60 @@ class IceliteSpec extends SparkSpec {
         |"files":["/some/old/file.parquet"]}""".stripMargin)
     val ex = intercept[IllegalStateException](Icelite.read(spark, t))
     assert(ex.getMessage.contains("unsupported/corrupt manifest"))
+  }
+
+  test("manifest strings are JSON-escaped: quoted table dirs, fingerprints and PK specs round-trip") {
+    val t = tmpDir() + "/q\"t"
+    Icelite.commit(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t)
+    assert(Icelite.read(spark, t).as[(Long, String)].collect().toSet === Set((1L, "a"), (2L, "b")))
+    // a fingerprint with a quote and a backslash must resume, not recompute
+    val root = tmpDir()
+    val pipe = new Pipeline(spark, root)
+    val fp = "shelve:/a\"b\\c"
+    var ran = 0
+    def body = { ran += 1; Seq((1L, "x")).toDF("id", "v") }
+    pipe.stage("s", fp)(body)
+    pipe.stage("s", fp)(body)
+    assert(ran === 1)
+    val s = s"$root/s"
+    assert(Icelite.readManifest(s, Icelite.currentSnapshotId(s).get).inputFingerprint === fp)
+    // the PK spec is persisted and compared: a quoted PK column keeps the
+    // slice-granular merge path (no full re-slice on the second merge)
+    val m = tmpDir() + "/pk"
+    val pk = "k\"ey"
+    val rows = (1 to 40).map(i => (i.toLong, s"v$i"))
+    val s1 = Icelite.merge(spark, rows.toDF(pk, "v"), m, Seq(pk), nBuckets = 4)
+    val s2 = Icelite.merge(spark, Seq((2L, "B")).toDF(pk, "v"), m, Seq(pk), nBuckets = 4)
+    assert(Icelite.readManifest(m, s2.id).bucketSpec === pk)
+    assert(s2.files.exists(f => s1.files.map(_.path).contains(f.path)),
+      "untouched slices must carry over, not be re-sliced")
+    assert(Icelite.read(spark, m).as[(Long, String)].collect().toSet
+      === rows.map { case (i, v) => (i, if (i == 2L) "B" else v) }.toSet)
+  }
+
+  test("a table written by the previous manifest writer reads back field for field") {
+    // src/test/resources/icelite: the metadata (pointer, manifest, two
+    // segments) of a 6-row merge into 2 buckets, written by the regex-era
+    // writer. Data files are not needed to parse metadata.
+    val t = Paths.get(getClass.getResource("/icelite/_CURRENT").toURI).getParent.toString
+    assert(Icelite.currentSnapshotId(t) === Some(1L))
+    val dir = "/tmp/icelite-compat8609685902722909324/t/data/5e6781ce-4ebf-460d-99c2-83e3d44245a7"
+    val part = "part-00000-b91687ae-7961-4c92-8985-96d06ea8e2dc.c000.snappy.parquet"
+    val schema = """{"type":"struct","fields":[""" +
+      """{"name":"id","type":"long","nullable":false,"metadata":{}},""" +
+      """{"name":"name","type":"string","nullable":true,"metadata":{}}]}"""
+    assert(Icelite.readManifest(t, 1) === Icelite.Snapshot(1L, "5e6781ce-4ebf-460d-99c2-83e3d44245a7",
+      Seq(
+        Icelite.FileEntry(s"$dir/__slice=2_0/$part", 2, 0, 4L, 5071385811192812117L,
+          Map("id" -> ("1", "6"), "name" -> ("alpha", "zeta"))),
+        Icelite.FileEntry(s"$dir/__slice=2_1/$part", 2, 1, 2L, -6130174000080021206L,
+          Map("id" -> ("2", "3"), "name" -> ("beta", "gamma")))),
+      6L, "compat:fixture-v1", 2, "id", schema))
+    assert(Icelite.segmentRefs(t, 1) === Seq(
+      Icelite.SegmentRef("segment-acfce4d8f6838248a78d31ab822a588c.json", 4L,
+        Map("id" -> ("1", "6"), "name" -> ("alpha", "zeta"))),
+      Icelite.SegmentRef("segment-a6d0b6625f035714aaf0526acdc49bb8.json", 2L,
+        Map("id" -> ("2", "3"), "name" -> ("beta", "gamma")))))
   }
 
   test("concurrent merge and expire are serialized; no lost rows, no GC'd live files") {
@@ -731,24 +751,6 @@ class ZoneMapSpec extends SparkSpec {
     Icelite.merge(spark, Seq((3L, "z")).toDF("id", "a.b"), t, Seq("id"))
     assert(Icelite.read(spark, t).count() === 3)
     assert(Icelite.verifyLineage(spark, t))
-  }
-
-  test("pre-key-encoding `stats` field (raw keys) still parses") {
-    val t = tmpDir() + "/z6"
-    Icelite.merge(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), t, Seq("id"), nBuckets = 2)
-    val snap = Icelite.readManifest(t, 1)
-    def b64(s: String) = java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-    // rewrite the manifest inline with the OLD stats form: raw key, b64 values
-    val inline = snap.files.map(f =>
-      s"""{"path":"${f.path}","mod":${f.mod},"res":${f.res},"rows":${f.rows},"checksum":${f.checksum},"stats":{"id":["${b64("1")}","${b64("2")}"]}}""")
-      .mkString("[", ",", "]")
-    Files.writeString(Paths.get(t, "meta", "snapshot-1.json"),
-      s"""{"id":1,"uuid":"${snap.uuid}","rowCount":${snap.rowCount},
-         |"inputFingerprint":"","nBuckets":2,"bucketSpec":"id",
-         |"files":$inline}""".stripMargin)
-    val back = Icelite.readManifest(t, 1)
-    assert(back.files.forall(_.stats.get("id").contains(("1", "2"))))
-    assert(Icelite.read(spark, t).count() === 2)
   }
 }
 
