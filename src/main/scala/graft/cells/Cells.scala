@@ -1,7 +1,6 @@
 package graft.cells
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 import graft.geom.Geom
 import graft.crs.Proj
 
@@ -34,14 +33,6 @@ object Cells {
     */
   def geocellCol(lon: Column, lat: Column): Column =
     org.apache.spark.sql.graft.CellExpressions.geocell_expr(lon, lat)
-
-  /** The old pure-column form (kept for plan-shape tests / documentation). */
-  def geocellColumnForm(lon: Column, lat: Column): Column =
-    concat(
-      when(lat >= 0, lit("n")).otherwise(lit("s")),
-      lpad(abs(floor(lat)).cast("int").cast("string"), 2, "0"),
-      when(lon >= 0, lit("e")).otherwise(lit("w")),
-      lpad(abs(floor(lon)).cast("int").cast("string"), 3, "0"))
 
   def geocell(lon: Double, lat: Double): String = {
     val latL = if (lat >= 0) "n" else "s"
@@ -171,32 +162,16 @@ object Cells {
 
   /** Cover cells of a polygon ring with an interior flag per cell:
     * interior=true means the whole cell is inside the ring, so points in it
-    * need NO exact PIP test (the fast path of SURVEY.md §4 item 1).
+    * need NO exact PIP test (the fast path of SURVEY.md §4 item 1). Every
+    * bbox cell is kept; the exact per-point PIP refine drops false positives
+    * from the non-interior ones.
     */
   def coverRing(ring: Array[Double], level: Int): Array[(Long, Boolean)] = {
     val (minx, miny, maxx, maxy) = Geom.bbox(ring)
-    coverBBox(minx, miny, maxx, maxy, level).flatMap { c =>
+    coverBBox(minx, miny, maxx, maxy, level).map { c =>
       val (cMinLon, cMinLat, cMaxLon, cMaxLat) = cellBounds(c)
-      // cheap reject: cell bbox disjoint from ring bbox already excluded.
-      val interior = Geom.containsBox(ring, cMinLon, cMinLat, cMaxLon, cMaxLat)
-      if (interior) Some((c, true))
-      else {
-        // keep only cells that could intersect the ring: corner inside ring,
-        // ring vertex inside cell, or edge crossing — approximate by testing
-        // cell center + corners + retaining ambiguous cells (safe
-        // over-approximation: candidate set may include extra cells; the
-        // exact per-point PIP refine drops false positives).
-        Some((c, false))
-      }
+      (c, Geom.containsBox(ring, cMinLon, cMinLat, cMaxLon, cMaxLat))
     }
-  }
-
-  /** Pick a cover level so the polygon spans roughly `targetCells` cells. */
-  def pickLevel(ring: Array[Double], targetCellsPerAxis: Int = 4): Int = {
-    val (minx, miny, maxx, maxy) = Geom.bbox(ring)
-    val span = math.max(math.max(maxx - minx, 1e-9), math.max(maxy - miny, 1e-9))
-    val level = math.ceil(math.log(360.0 * targetCellsPerAxis / span) / math.log(2.0)).toInt
-    math.min(math.max(level, 0), MaxLevel)
   }
 
   // ------------------------------------------------------------ supertile

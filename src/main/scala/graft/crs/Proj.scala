@@ -17,12 +17,6 @@ object Proj {
   val E2: Double = F * (2 - F)
   val E: Double = math.sqrt(E2)
 
-  /** EPSG whitelist per /root/reference/lib/dem.py:35-47. */
-  val EpsgWhitelist: Set[Int] =
-    Set(3413, 3031) ++ (32601 to 32660) ++ (32701 to 32760)
-
-  def isValidEpsg(epsg: Int): Boolean = EpsgWhitelist.contains(epsg)
-
   /** UTM zone for a lon/lat, mirroring the standard zone formula. */
   def utmEpsg(lon: Double, lat: Double): Int = {
     val zone = math.min(60, math.max(1, ((lon + 180.0) / 6.0).toInt + 1))

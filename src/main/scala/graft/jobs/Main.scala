@@ -46,7 +46,7 @@ object Main {
           println(s"""{"job":"tile","tiles":${snap.rowCount}}""")
         case "knn" =>
           val pts = Pages.fromDocuments(spark, sfDir)
-          // density-auto-picked level (override: GRAFT_KNN_LEVEL)
+          // density-auto-picked ring level (KnnJoin.pickLevel)
           val knn = KnnJoin.knnAuto(spark, pts, pts, "doc_id", "doc_id", k = 5)
           val snap = Icelite.commit(spark, knn, s"$outRoot/knn", s"knn:$sfDir")
           println(s"""{"job":"knn","rows":${snap.rowCount}}""")
@@ -93,7 +93,7 @@ object Main {
             spark, Pages.pagesFromDocuments(docsStream), tiles, table,
             s"$outRoot/stream_checkpoint",
             org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-            watermark = sys.env.getOrElse("GRAFT_STREAM_WATERMARK", "87600 hours"))
+            watermark = "87600 hours")
           q.awaitTermination()
           // every batch can be empty (e.g. all pages miss the tile grid):
           // report zero windows, not a crash on a never-created table
@@ -118,9 +118,7 @@ object Main {
           // bound on a merged table (Iceberg rewrite_data_files analog) and
           // GC expired snapshots afterwards
           val table = s"$outRoot/stac_asset_info"
-          val bound = sys.env.get("GRAFT_MAX_ROWS_PER_FILE").map(_.toLong)
-            .getOrElse(Icelite.DefaultMaxRowsPerFile)
-          val (rewritten, files) = Icelite.compact(spark, table, bound)
+          val (rewritten, files) = Icelite.compact(spark, table)
           val (mDel, fDel) = Icelite.expireSnapshots(table)
           println(s"""{"job":"compact","rewritten":$rewritten,"files":$files,""" +
             s""""manifests_expired":$mDel,"files_gcd":$fDel}""")

@@ -70,6 +70,11 @@ object Canonical {
     * prefix where possible.
     */
   def stripMaster(strips: DataFrame): DataFrame = {
+    // the scratch columns below are dropped from the output: an input column
+    // of the same name would be silently overwritten and then lost
+    val scratch = Seq("__nover", "__strip_max", "__s2s_key", "__s2s_max", "__min_lsf")
+    val clash = scratch.filter(c => strips.columns.exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty, s"stripMaster input carries reserved column(s): ${clash.mkString(", ")}")
     // ONE exchange for all three stages (round 6, guide §2.4): stage 2/3
     // group by stripdemid (resp. + s2s_ver), and the stage-1 prefix is a
     // FUNCTION of stripdemid — prepending it to the later windows'

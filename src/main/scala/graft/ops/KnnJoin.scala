@@ -148,32 +148,17 @@ object KnnJoin {
     } finally graft.Session.freeLocalCheckpoint(s)
   }
 
-  /** [[knn]] with a density-auto-picked level ([[pickLevel]]); `levelOverride`
-    * (or env `GRAFT_KNN_LEVEL`) pins it for reproducing a measurement. The
-    * level does not affect the (exact) result set, only the join's cost —
+  /** [[knn]] with a density-auto-picked level ([[pickLevel]]). The level
+    * does not affect the (exact) result set, only the join's cost —
     * BENCH.md measured 4.5× at 600k skewed points hanging on this choice, so
     * entry points must never hardcode it.
     */
   def knnAuto(spark: SparkSession, queries: DataFrame, points: DataFrame,
-              qId: String, pId: String, k: Int,
-              levelOverride: Option[Int] = None,
-              maxRounds: Int = 3, bruteThreshold: Long = 50000000L): DataFrame = {
+              qId: String, pId: String, k: Int): DataFrame =
     // by-name into knn: the level (and the pickLevel sampling pass behind
     // it) is only paid when the ring machinery actually runs — the up-front
     // self-join brute short-circuit inside knn skips it entirely
-    def level: Int = levelOverride
-      .orElse(sys.env.get("GRAFT_KNN_LEVEL").map { v =>
-        val l = try v.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"GRAFT_KNN_LEVEL must be an integer, got '$v'")
-        }
-        require(l >= 1 && l <= graft.cells.Cells.MaxLevel,
-          s"GRAFT_KNN_LEVEL out of range [1, ${graft.cells.Cells.MaxLevel}]: $l")
-        l
-      })
-      .getOrElse(pickLevel(points, k = k))
-    knn(spark, queries, points, qId, pId, k, level, maxRounds, bruteThreshold)
-  }
+    knn(spark, queries, points, qId, pId, k, pickLevel(points, k = k))
 
   /** Squared lon-wrapped millidegree distance as a column expression. */
   def dist2(lonm1: org.apache.spark.sql.Column, latm1: org.apache.spark.sql.Column,
@@ -208,6 +193,15 @@ object KnnJoin {
       .cache()
     val nPts = pts0.count() // materialize once; probed every round
 
+    // Exact brute pass of (query_id, q_lonm, q_latm) queries against all
+    // points: broadcast the query side, cross-join, bounded-heap top-k (k
+    // rows per query per partition are shuffled, not the candidate set).
+    def brute(qs: DataFrame): DataFrame = TopK.topK(spark,
+      broadcast(qs).crossJoin(pts0)
+        .filter(notSelf(col("query_id") =!= col("neighbor_id")))
+        .select(col("query_id"), col("neighbor_id"),
+          dist2(col("q_lonm"), col("q_latm"), col("p_lonm"), col("p_latm")).as("d2")), k)
+
     // Up-front brute short-circuit for the SELF-join (round 6): |Q| = |P| is
     // known from the one count just paid, so for a small-enough |P|² the
     // ring machinery — level sampling, per-round checkpoints and counts, ~7
@@ -223,16 +217,10 @@ object KnnJoin {
     // (|Q| unknown without an extra action) are untouched. Guarded against
     // |P|² overflow.
     if (selfJoin && nPts > 0 &&
-        nPts <= math.min(bruteThreshold, UpfrontBrutePairs) / nPts) {
-      val brute = broadcast(pts0.select(col("neighbor_id").as("query_id"),
+        nPts <= math.min(bruteThreshold, UpfrontBrutePairs) / nPts)
+      return brute(pts0.select(col("neighbor_id").as("query_id"),
           col("p_lonm").as("q_lonm"), col("p_latm").as("q_latm")))
-        .crossJoin(pts0)
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          dist2(col("q_lonm"), col("q_latm"), col("p_lonm"), col("p_latm")).as("d2"))
-      return TopK.topK(spark, brute, k)
         .select(col("query_id"), col("neighbor_id"), col("d2").as("dist2"), col("rn"))
-    }
 
     val lvl = level // force the by-name pick once: the rings need it
     val cellH = 180000L >> lvl // cell height in millidegrees (lat axis)
@@ -260,11 +248,6 @@ object KnnJoin {
     var rounds = 0
     var done = false
 
-    // NOTE: no up-front brute short-circuit — measured 3× slower than ring
-    // round 1 at bench scale (the dense mass resolves in one cheap
-    // cell-equi-join round; a 25M-pair typed-aggregator cross product does
-    // not beat it). The in-loop short-circuit below only fires once the
-    // REMAINING straggler set is small.
     while (!done && rounds < maxRounds) {
       val probes = remaining.withColumn("__cell",
         explode(ringRangeCol(col("__qcell"), lit(prevR), lit(r))))
@@ -328,17 +311,8 @@ object KnnJoin {
       r = math.min(r * 4, maxR)
       rounds += 1
     }
-    // stragglers: exact brute-force against all points (tiny side broadcast)
-    // + bounded-heap top-k (the per-cell bounded priority queue of the north
-    // star: shuffles k rows per query per partition, not the candidate set)
-    if (!done) {
-      val brute = broadcast(remaining.select("query_id", "q_lonm", "q_latm"))
-        .crossJoin(pts)
-        .filter(notSelf(col("query_id") =!= col("neighbor_id")))
-        .select(col("query_id"), col("neighbor_id"),
-          dist2(col("q_lonm"), col("q_latm"), col("p_lonm"), col("p_latm")).as("d2"))
-      finishedParts += TopK.topK(spark, brute, k)
-    }
+    // stragglers: the exact brute pass over the few queries left
+    if (!done) finishedParts += brute(remaining.select("query_id", "q_lonm", "q_latm"))
     finishedParts.reduce(_ unionByName _)
       .select(col("query_id"), col("neighbor_id"), col("d2").as("dist2"), col("rn"))
   }

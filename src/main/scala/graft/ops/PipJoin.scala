@@ -42,10 +42,6 @@ object PipJoin {
   private def coverCol(ring: Column, level: Int): Column =
     CellExpressions.cover_cells(ring, level)
 
-  /** Sentinel `level` value: derive the cover level from the polygon side's
-    * extent stats via [[pickCoverLevel]]. */
-  val AutoLevel: Int = -1
-
   /** Choose a cover level from the POLYGON side's extent statistics — the
     * [[graft.ops.KnnJoin.pickLevel]] pattern applied to the J2 shape. A fixed
     * level is wrong at both ends: too coarse and every polygon collapses into
@@ -86,27 +82,24 @@ object PipJoin {
   /** Join points (pointId, lon, lat) to polygons (polyId, ring) where the
     * point lies in the polygon. Returns all (pointId, polyId) matches.
     *
-    * @param level cover level; cells ≈ 360/2^level degrees wide.
-    *   [[AutoLevel]] derives it from polygon extent stats ([[pickCoverLevel]]).
-    * @param broadcastPolys force/deny broadcast; None lets Catalyst decide.
+    * @param level cover level; cells ≈ 360/2^level degrees wide
+    *   ([[pickCoverLevel]] derives one from polygon extent stats).
+    * @param broadcastPolys true forces a broadcast of the polygon side;
+    *   false lets Catalyst decide.
     */
   def join(points: DataFrame, polys: DataFrame,
            pointId: String, lon: String, lat: String,
            polyId: String, ring: String,
            level: Int = 6,
-           broadcastPolys: Option[Boolean] = Some(true)): DataFrame = {
-    val lvl = if (level == AutoLevel) pickCoverLevel(polys, ring) else level
+           broadcastPolys: Boolean = true): DataFrame = {
     val covered = polys
       .select(col(polyId), col(ring).as("__ring"))
-      .withColumn("__cov", explode(coverCol(col("__ring"), lvl)))
+      .withColumn("__cov", explode(coverCol(col("__ring"), level)))
       .select(col(polyId), col("__ring"),
         col("__cov.cell").as("__cell"), col("__cov.interior").as("__interior"))
-    val polySide = broadcastPolys match {
-      case Some(true) => broadcast(covered)
-      case _          => covered
-    }
+    val polySide = if (broadcastPolys) broadcast(covered) else covered
     val pts = points.withColumn("__cell",
-      CellExpressions.cell_at(col(lon), col(lat), lvl))
+      CellExpressions.cell_at(col(lon), col(lat), level))
     pts.join(polySide, "__cell")
       .filter(col("__interior") || pipContains(col("__ring"), col(lon), col(lat)))
       .drop("__cell", "__interior", "__ring")
@@ -122,8 +115,8 @@ object PipJoin {
     * evaluate inside the map stage. The alternative (explode matches +
     * window count over pointId) shuffles every matched row — measured ~4.6 s
     * of non-scaling shuffle IO at 77M rows; this form shuffles nothing.
-    */
-  /** @param broadcastCells false ⇒ shuffle fallback: when the per-cell
+    *
+    * @param broadcastCells false ⇒ shuffle fallback: when the per-cell
     *   candidate table outgrows broadcast (a planet-wide fine-level tile set),
     *   both sides hash-shuffle on the long cell id instead — the exactly-one
     *   pick still runs map-side after the join, and AQE skew-split covers hot
@@ -140,10 +133,9 @@ object PipJoin {
              polyId: String, ring: String,
              level: Int = 8, broadcastCells: Boolean = true,
              observer: Option[Observation] = None): DataFrame = {
-    val lvl = if (level == AutoLevel) pickCoverLevel(polys, ring) else level
     val covered = polys
       .select(col(polyId), col(ring).as("__ring"))
-      .withColumn("__cov", explode(coverCol(col("__ring"), lvl)))
+      .withColumn("__cov", explode(coverCol(col("__ring"), level)))
       .select(col(polyId), col("__ring"),
         col("__cov.cell").as("__cell"), col("__cov.interior").as("__interior"))
     val byCell = covered.groupBy("__cell")
@@ -159,7 +151,7 @@ object PipJoin {
       when(isFast, col("__cands").getItem(0).getField("pid")).as("__fastpid"),
       when(!isFast, col("__cands")).as("__slowcands"))
     val pts = points.withColumn("__cell",
-      CellExpressions.cell_at(col(lon), col(lat), lvl))
+      CellExpressions.cell_at(col(lon), col(lat), level))
     val cellSide = if (broadcastCells) broadcast(byCell2)
                    else byCell2.hint("shuffle_hash")
     // LEFT join: points whose cell holds no candidate tile at all must still

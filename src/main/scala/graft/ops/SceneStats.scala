@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   *     ⇒ -1; a -2 carried in metadata ⇒ -9999 (lib/dem.py:1175-1186,614-617).
   *   - A4 — mean acquisition time: epoch-seconds mean of per-scene
   *     timestamps; first value becomes acqdate (lib/dem.py:1188-1229,
-  *     O4 first-value pick).
+  *     O4 first-value pick). Computed inline by `q_acq_mean` in
+  *     [[graft.SparkEntry]], which needs a deterministic first pick.
   *
   * Inputs are exploded scene rows (group_id, scene_idx, metric columns) —
   * one hash aggregate, map-side partial combine, no window.
@@ -37,11 +38,4 @@ object SceneStats {
       .withColumn("rmse", when(col("rmse") === -2.0, -9999.0).otherwise(col("rmse")))
       .drop("__rmse")
 
-  /** A4 + O4: epoch-mean acquisition time and the first scene's timestamp,
-    * ordered by scene index (deterministic "first"). */
-  def acqTime(scenes: DataFrame, groupId: String, tsCol: String = "acq_ts",
-              idxCol: String = "scene_idx"): DataFrame =
-    scenes.groupBy(groupId).agg(
-      to_timestamp(avg(col(tsCol).cast("double"))).as("avg_acqtime"),
-      min_by(col(tsCol), col(idxCol)).as("acqdate"))
 }

@@ -49,11 +49,6 @@ object Tiling {
       (floor(fj) + 1).cast("int").cast("string"))
   }
 
-  /** Degree-grid quartertile: the reference's default 2×2 subdivision
-    * (attic/divide_setsm_tiles.py:231-241). */
-  def degQuartertile(lon: Column, lat: Column, step: Int): Column =
-    degSubtile(lon, lat, step, 2, 2)
-
   /** Per-subtile coverage stats over geocoded pages at an arbitrary
     * `nRows × nCols` grid: row count, distinct langs, char sum, density =
     * rows per square degree of the SUBTILE box. One hash aggregate with

@@ -73,9 +73,9 @@ object Pages {
       |     WHEN cluster = 1 THEN -70000 - h2 % 1000
       |     ELSE h2 % 170000 - 85000 END AS latm""".stripMargin
 
-  /** Pages CTE for DuckDB over the documents table ('{dir}' substituted by the
-    * driver? No — Verify dumps absolute SQL; the driver runs oracle SQL with
-    * the sf tables registered under their bare names, so reference `documents`.)
+  /** Pages CTE for DuckDB over the documents table. Oracle SQL names the sf
+    * tables bare (`documents`), with no directory to substitute: the oracle
+    * run registers each sf table as a view under its bare name.
     */
   val docPagesCte: String =
     s"""pages AS (

@@ -745,21 +745,6 @@ object TextOps {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("bin_tokens"))
   }
 
-  /** (retired per-row-array formulation kept for reference tests) */
-  private[text] def simhashArrayForm(docs: DataFrame): DataFrame = {
-    val hs = transform(tokens(col("text")), w => h32(w))
-    val bitCols = (0 until SimhashBits).map { i =>
-      aggregate(hs, lit(0L),
-        (acc, h) => acc + when(shiftright(h, i).bitwiseAND(1) === 1, 1L).otherwise(-1L))
-        .as(s"v_$i")
-    }
-    val voted = docs.select(col("doc_id") +: bitCols: _*)
-    val sim = (0 until SimhashBits).map { i =>
-      when(col(s"v_$i") > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    voted.select(col("doc_id"), sim.as("simhash"))
-  }
-
   /** Bounded per-shingle postings collector backing [[jaccardPairs]]'s
     * df-cut: keeps up to `cap` (doc_id, n_sh) postings per shingle as a flat
     * Array[Long] (primitive unsafe-array encoder across the shuffle — the

@@ -145,22 +145,8 @@ object GraftKernels {
       acc
     }
 
-    /** Exactly-one-tile pick over (pid, ring, interior) candidate structs. */
-    def shelvePick(cands: ArrayData, px: Double, py: Double): org.apache.spark.unsafe.types.UTF8String = {
-      var picked: org.apache.spark.unsafe.types.UTF8String = null
-      var hits = 0
-      var i = 0
-      val n = cands.numElements()
-      while (i < n && hits < 2) {
-        val row = cands.getStruct(i, 3)
-        val in = row.getBoolean(2) || pip(row.getArray(1), px, py)
-        if (in) { hits += 1; picked = row.getUTF8String(0) }
-        i += 1
-      }
-      if (hits == 1) picked else null
-    }
-
-    /** [[shelvePick]] plus the match count, in ONE candidate pass: returns
+    /** Exactly-one-tile pick over (pid, ring, interior) candidate structs
+      * plus the match count, in ONE candidate pass: returns
       * struct(pid: pid-if-exactly-one-else-null, n: total matches). The count
       * feeds the J2 skip metrics (the reference warns and reports ALL
       * overlapping tiles, lib/utils.py:694-702, so no early exit at 2).
@@ -216,30 +202,10 @@ object CellExpressions {
 
   /** One-pass exactly-one-tile pick (J2 shelve rule) over a per-cell
     * candidate array of structs (pid string, ring array<double>, interior
-    * boolean): returns the single containing tile's pid, or null when 0 or
-    * >1 tiles contain the point. A single codegen expression instead of a
-    * higher-order filter lambda (HOFs like ArrayFilter are CodegenFallback —
-    * measured ~1.8x slower on the 77M-row bench).
-    */
-  case class ShelvePick(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.StringType
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(cands: Any, px: Any, py: Any): Any =
-      Kernels.shelvePick(cands.asInstanceOf[ArrayData],
-        px.asInstanceOf[Double], py.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val res = nullSafeCodeGen(ctx, ev, (cands, px, py) =>
-        s"""${ev.value} = $K.shelvePick($cands, $px, $py);
-           |${ev.isNull} = (${ev.value} == null);""".stripMargin)
-      res
-    }
-    override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): ShelvePick =
-      copy(first = f, second = s, third = t)
-  }
-
-  /** [[ShelvePick]] + match count in one candidate pass, as a struct
-    * (pid: STRING nullable, n: INT). Materialized into its own projection by
+    * boolean), plus the match count, as a struct (pid: STRING, null when 0
+    * or >1 tiles contain the point; n: INT). A single codegen expression
+    * instead of a higher-order filter lambda (HOFs like ArrayFilter are
+    * CodegenFallback). Materialized into its own projection by
     * [[graft.ops.PipJoin.shelve]] so the plan carries exactly ONE call site —
     * field extraction above it touches only the struct attribute.
     */
@@ -351,12 +317,6 @@ object CellExpressions {
     ExpressionUtils.column(TileIdExpr(
       ExpressionUtils.expression(lon.cast("double")),
       ExpressionUtils.expression(lat.cast("double"))))
-
-  def shelve_pick(cands: Column, px: Column, py: Column): Column =
-    ExpressionUtils.column(ShelvePick(
-      ExpressionUtils.expression(cands),
-      ExpressionUtils.expression(px.cast("double")),
-      ExpressionUtils.expression(py.cast("double"))))
 
   def shelve_pick_n(cands: Column, px: Column, py: Column): Column =
     ExpressionUtils.column(ShelvePickN(

@@ -40,14 +40,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * The rule fires only when the condition contains a `PipContains` conjunct
   * with the ring on one side and the point coordinates on the other (any
   * remaining conjuncts stay: post-join filter for INNER, in-join for OUTER).
-  * Cover level: `spark.graft.pip.level` — an integer, or `auto` to derive it
-  * from the polygon side's extent statistics at planning time
+  * Cover level: derived from the polygon side's extent statistics at
+  * planning time
   * ([[graft.ops.PipJoin.pickCoverLevel]] over the polygon subplan; the
   * polygon side is the dim table, so the planning-time aggregation is one
   * narrow pass over thousands of rows, the same driver-side steering pattern
-  * as KnnJoin.pickLevel). Default `auto` (round 6): a fixed level is wrong
-  * at both extent extremes, and the extent-derived pick is the whole point
-  * of the mechanism — set an integer only to pin a measurement.
+  * as KnnJoin.pickLevel). A fixed level is wrong at both extent extremes.
   * Runs inside the operator-optimization batch, so pushdown/broadcast
   * selection apply to the rewritten plan in the same fixed point; the
   * rewritten join has no PipContains in its condition, so the rule cannot
@@ -60,12 +58,10 @@ object PipJoinRewrite extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  /** Resolve the cover level: conf integer, or `auto` ⇒ extent stats over
-    * the polygon subplan (fail-safe to the default on any planning error —
-    * a level choice must never fail the query, it only shifts cost). */
-  private def coverLevel(polySide: LogicalPlan, ring: Expression): Int = {
-    val confVal = conf.getConfString("spark.graft.pip.level", "auto")
-    if (confVal != "auto") return confVal.toInt
+  /** Resolve the cover level from extent stats over the polygon subplan
+    * (fail-safe to the default on any planning error — a level choice must
+    * never fail the query, it only shifts cost). */
+  private def coverLevel(polySide: LogicalPlan, ring: Expression): Int =
     try {
       val session = org.apache.spark.sql.classic.SparkSession.getActiveSession
         .getOrElse(return 6)
@@ -73,7 +69,6 @@ object PipJoinRewrite extends Rule[LogicalPlan] {
       graft.ops.PipJoin.pickCoverLevel(
         org.apache.spark.sql.classic.Dataset.ofRows(session, rings), "__graft_ring")
     } catch { case scala.util.control.NonFatal(_) => 6 }
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(left, right, jt, Some(cond), hint)

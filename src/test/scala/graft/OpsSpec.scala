@@ -66,6 +66,36 @@ class OpsSpec extends SparkSpec {
     assert(multi > 0, "fixture must exercise the >1-match skip branch")
   }
 
+  test("PIP kernels give the same answer interpreted as with codegen") {
+    val pts = points(3000).toDF("pid", "lon", "lat")
+    val pl = polys.map { case (n, r) => (n, r.toSeq) }.toDF("poly_id", "ring")
+    def run(mode: String) = {
+      // shelve caches its per-cell table: drop it so each mode evaluates the
+      // cover cells itself instead of reading the other mode's result
+      spark.catalog.clearCache()
+      val obs = org.apache.spark.sql.Observation(s"pip_$mode")
+      val shelved = PipJoin.shelve(pts, pl, "pid", "lon", "lat", "poly_id", "ring",
+          level = 6, observer = Some(obs))
+        .select("pid", "poly_id").as[(Long, String)].collect().toSet
+      val joined = PipJoin.join(pts, pl, "pid", "lon", "lat", "poly_id", "ring", level = 6)
+        .select("pid", "poly_id").as[(Long, String)].collect().toSet
+      (shelved, obs.get, joined)
+    }
+    val codegen = run("codegen")
+    val interpreted =
+      try {
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        run("interpreted")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    assert(interpreted === codegen)
+    assert(codegen._1.nonEmpty && codegen._3.nonEmpty, "fixture must produce matches")
+    assert(codegen._2("skip_multi").asInstanceOf[Long] > 0, "fixture must exercise multi-match")
+  }
+
   test("pickCoverLevel tracks polygon extent: fine for slivers, coarse for continents") {
     // tiny parcels (~0.01°): the finest capped level — cells stay selective
     val tiny = (0 until 50).map { i =>
@@ -85,11 +115,11 @@ class OpsSpec extends SparkSpec {
     assert((160.0 / cw + 2) * (140.0 / ch + 2) <= 24.0)
     // no polygons at all: the safe default
     assert(PipJoin.pickCoverLevel(tiny.where(lit(false)), "ring") === 6)
-    // AutoLevel sentinel flows through join and stays exact
+    // the derived level flows through join and stays exact
     val pts = points(500).toDF("pid", "lon", "lat")
     val pl = polys.map { case (n, r) => (n, r.toSeq) }.toDF("poly_id", "ring")
     val auto = PipJoin.join(pts, pl, "pid", "lon", "lat", "poly_id", "ring",
-        level = PipJoin.AutoLevel)
+        level = PipJoin.pickCoverLevel(pl, "ring"))
       .select("pid", "poly_id").as[(Long, String)].collect().toSet
     val fixed = PipJoin.join(pts, pl, "pid", "lon", "lat", "poly_id", "ring", level = 6)
       .select("pid", "poly_id").as[(Long, String)].collect().toSet
@@ -276,6 +306,12 @@ class OpsSpec extends SparkSpec {
     assert(got === Set("d4"))
   }
 
+  test("stripMaster rejects an input column named like one of its scratch columns") {
+    val rows = Seq(("d1", "P_2m_v030402", "4.2", false, "caller data"))
+      .toDF("dem_id", "stripdemid", "s2s_ver", "is_lsf", "__nover")
+    intercept[IllegalArgumentException](Canonical.stripMaster(rows))
+  }
+
   test("staging dedup: anti-join + min(location||index_date) tie-break (J5)") {
     val tape = Seq(("sc1", "st1", false, "/t", "2024-01-01"))
       .toDF("scenedemid", "stripdemid", "is_dsp", "location", "index_date")
@@ -308,5 +344,10 @@ class OpsSpec extends SparkSpec {
 
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("every catalog query has an oracle and every oracle a query (90 each)") {
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size === 90)
   }
 }

@@ -107,27 +107,27 @@ class RewriteSpec extends AnyFunSuite {
     }
   }
 
-  test("spark.graft.pip.level=auto derives the cover level from polygon extents") {
+  test("the rewrite derives the cover level from polygon extents") {
     withExtSession { spark =>
       import spark.implicits._
-      spark.conf.set("spark.graft.pip.level", "auto")
-      try {
-        points(1500).toDF("pid", "lon", "lat").createOrReplaceTempView("pts")
-        polys.toDF("poly_id", "ring").createOrReplaceTempView("polys")
-        val df = spark.sql(
-          """SELECT pid, poly_id FROM pts JOIN polys
-            |ON graft_st_contains(ring, lon, lat)""".stripMargin)
-        val plan = df.queryExecution.executedPlan.toString
-        assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"))
-        val got = df.as[(Long, String)].collect().toSet
-        val expected = (for {
-          (pid, lon, lat) <- points(1500)
-          (name, ring) <- polys
-          if Geom.contains(ring.toArray, lon, lat)
-        } yield (pid, name)).toSet
-        assert(got === expected)
-        assert(expected.nonEmpty)
-      } finally spark.conf.unset("spark.graft.pip.level")
+      points(1500).toDF("pid", "lon", "lat").createOrReplaceTempView("pts")
+      polys.toDF("poly_id", "ring").createOrReplaceTempView("polys")
+      val df = spark.sql(
+        """SELECT pid, poly_id FROM pts JOIN polys
+          |ON graft_st_contains(ring, lon, lat)""".stripMargin)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"))
+      val level = graft.ops.PipJoin.pickCoverLevel(spark.table("polys"), "ring")
+      assert(plan.matches(s"(?s).*covercells\\(ring#\\d+, $level\\).*"),
+        s"polygons must be covered at the extent-derived level $level:\n$plan")
+      val got = df.as[(Long, String)].collect().toSet
+      val expected = (for {
+        (pid, lon, lat) <- points(1500)
+        (name, ring) <- polys
+        if Geom.contains(ring.toArray, lon, lat)
+      } yield (pid, name)).toSet
+      assert(got === expected)
+      assert(expected.nonEmpty)
     }
   }
 

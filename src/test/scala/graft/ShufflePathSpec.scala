@@ -22,10 +22,10 @@ class ShufflePathSpec extends SparkSpec {
       ("a", Seq(-30.0, -30.0, 30.0, -30.0, 30.0, 30.0, -30.0, 30.0)),
       ("b", Seq(0.0, 0.0, 60.0, 0.0, 30.0, 50.0))).toDF("poly_id", "ring")
     val bc = PipJoin.join(pts, polys, "pid", "lon", "lat", "poly_id", "ring",
-        level = 5, broadcastPolys = Some(true))
+        level = 5, broadcastPolys = true)
       .select("pid", "poly_id").as[(Long, String)].collect().toSet
     val sh = PipJoin.join(pts, polys, "pid", "lon", "lat", "poly_id", "ring",
-        level = 5, broadcastPolys = Some(false))
+        level = 5, broadcastPolys = false)
       .select("pid", "poly_id").as[(Long, String)].collect().toSet
     assert(bc === sh)
     assert(bc.nonEmpty)
