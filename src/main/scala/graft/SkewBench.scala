@@ -71,19 +71,7 @@ object SkewBench {
         val replicated = base.crossJoin(setup.range(0, rep).toDF("rep"))
           .select((col("page_id") * rep + col("rep")).as("page_id"))
         // full Pages geocoding (keeps the 20%-hot-cell skew)
-        val h1 = (col("page_id") * 48271L + 11L) % 2147483647L
-        val h2 = (h1 * 48271L + 17L) % 2147483647L
-        val cluster = col("page_id") % 10
-        val lonmWrap = lit(179500L) + h1 % 1000L
-        val lonm = when(cluster === 0, lit(12000L) + h1 % 1000L)
-          .when(cluster === 1, when(lonmWrap >= 180000L, lonmWrap - 360000L).otherwise(lonmWrap))
-          .otherwise(h1 % 360000L - 180000L)
-        val latm = when(cluster === 0, lit(51000L) + h2 % 1000L)
-          .when(cluster === 1, lit(-70000L) - h2 % 1000L)
-          .otherwise(h2 % 170000L - 85000L)
-        replicated
-          .withColumn("lon", lonm.cast("long") / 1000.0)
-          .withColumn("lat", latm.cast("long") / 1000.0)
+        Pages.withGeo(replicated, "page_id").drop("lonm", "latm")
           .withColumn("geocell", Cells.geocellCol(col("lon"), col("lat")))
           .repartition(128)
           .write.mode("overwrite").parquet(path)

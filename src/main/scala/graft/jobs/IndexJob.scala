@@ -176,18 +176,14 @@ object IndexJob {
     val pipe = new Pipeline(spark, workRoot)
     val fp = s"pages:$sfDir"
 
+    val widths = Map("url" -> 256, "geocell" -> 7, "record_id" -> 512)
     val pages = pipe.stage("pages", fp) { Pages.fromDocuments(spark, sfDir) }
-    val index = pipe.stage("index", fp) {
-      validateWidths(indexRows(pages), Map("url" -> 256, "geocell" -> 7, "record_id" -> 512))
-    }
-    val counts = pipe.stage("geocell_counts", fp) {
+    val index = pipe.stage("index", fp) { validateWidths(indexRows(pages), widths) }
+    pipe.stage("geocell_counts", fp) {
       index.groupBy("geocell").agg(count(lit(1)).as("n"))
     }
-    counts.count() // materialize
     // O3: capped invalid-row sample as its own snapshot (first 30 errors)
-    pipe.stage("errors", fp) {
-      errorSample(indexRows(pages), Map("url" -> 256, "geocell" -> 7, "record_id" -> 512))
-    }
+    pipe.stage("errors", fp) { errorSample(indexRows(pages), widths) }
     // metrics table (A13): derived from the snapshot manifests the stages
     // already committed — indexRows is a 1:1 projection, so
     // total = pages rowCount; NO extra source pass
@@ -203,8 +199,7 @@ object IndexJob {
         .toDF("input_fingerprint", "total_record_cnt", "valid_record_cnt", "invalid_record_cnt")
     }
     // J11 --check: committed snapshot vs recomputed projection
-    val diff = Icelite.check(spark,
-      validateWidths(indexRows(pages), Map("url" -> 256, "geocell" -> 7, "record_id" -> 512)),
+    val diff = Icelite.check(spark, validateWidths(indexRows(pages), widths),
       s"$workRoot/index", "record_id")
     (valid, diff)
   }

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
 object Pages {
 
   /** Geocoding columns from an integer key column (shared by both sources). */
-  private def withGeo(df: DataFrame, key: String): DataFrame = {
+  private[graft] def withGeo(df: DataFrame, key: String): DataFrame = {
     val h1 = (col(key) * 48271L + 11L) % 2147483647L
     val h2 = (h1 * 48271L + 17L) % 2147483647L
     val cluster = col(key) % 10

@@ -3,30 +3,17 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.sql.classic.ExpressionUtils.{column, expression}
+import org.apache.spark.sql.types._
 import graft.cells.Cells
-import graft.geom.Geom
 
-/** Catalyst-native cell/geometry expressions with whole-stage codegen — the
-  * promotion path of SURVEY.md §4 item 4 (UDF → `Expression` with
-  * `doGenCode`). A Scala UDF pays encoder serialization per row and blocks
-  * codegen fusion; these generate a static call inline in the stage's
-  * generated Java, so cell encoding fuses with the surrounding projection
-  * (the "vectorized batched encoder" intent of the north star: the batch is
-  * the whole-stage-codegen loop over columnar parquet batches).
-  *
-  * Input types are guaranteed by the Column builders (explicit casts) rather
-  * than ExpectsInputTypes (private[sql] in Spark 4).
-  */
-/** Static kernels referenced from generated code. A TOP-LEVEL object so
-  * Scala emits static forwarders — Janino compiles the generated Java call
-  * `GraftKernels.cellAt(...)` against those; a nested object has no statics
-  * and the stage silently falls back to interpreted execution.
+/** Static kernels called from generated code. A TOP-LEVEL object so Scala
+  * emits static forwarders — `StaticInvoke` calls `GraftKernels.cellAt(...)`
+  * as a static method, inline in generated Java and reflectively when
+  * interpreted; a nested object has no statics to call.
   */
 object GraftKernels {
     def cellAt(lon: Double, lat: Double, level: Int): Long = Cells.cellAt(lon, lat, level)
@@ -167,196 +154,118 @@ object GraftKernels {
     }
 }
 
+/** Catalyst-native cell/geometry expressions — the promotion path of
+  * SURVEY.md §4 item 4 (UDF → Catalyst expression). A Scala UDF pays encoder
+  * serialization per row and blocks codegen fusion; these are Spark
+  * `StaticInvoke` calls of the [[GraftKernels]] methods, so the stage's
+  * generated Java calls the kernel inline and cell encoding fuses with the
+  * surrounding projection (the "vectorized batched encoder" intent of the
+  * north star: the batch is the whole-stage-codegen loop over columnar
+  * parquet batches). Interpreted evaluation calls the same method
+  * reflectively, so both modes run one Scala method.
+  *
+  * Each call declares its input types, so the analyzer casts numeric and
+  * array arguments (a decimal or integer lon/lat, an `array<int>` ring) the
+  * same way for Column builders and SQL text.
+  */
 object CellExpressions {
 
-  private val K = "org.apache.spark.sql.graft.GraftKernels"
-  private val Kernels = GraftKernels
+  /** One kernel method call as a Catalyst expression. A null argument gives
+    * a null result; otherwise the result is non-null unless `nullOnEmpty`
+    * (the kernel itself returns null on an empty input set). */
+  private[graft] def kernelCall(kernels: AnyRef, fn: String, dataType: DataType,
+      args: Seq[Expression], inputTypes: Seq[AbstractDataType],
+      nullOnEmpty: Boolean = false): Expression =
+    StaticInvoke(kernels.getClass, dataType, fn, args, inputTypes,
+      propagateNull = true, returnNullable = nullOnEmpty)
 
-  case class CellAt(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = first.nullable || second.nullable || third.nullable
-    override protected def nullSafeEval(lon: Any, lat: Any, level: Any): Any =
-      Kernels.cellAt(lon.asInstanceOf[Double], lat.asInstanceOf[Double], level.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (lon, lat, level) =>
-        s"${ev.value} = $K.cellAt($lon, $lat, $level);")
-    override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): CellAt =
-      copy(first = f, second = s, third = t)
+  private def call(fn: String, dataType: DataType, inputTypes: AbstractDataType*)(
+      args: Expression*): Expression =
+    kernelCall(GraftKernels, fn, dataType, args, inputTypes)
+
+  /** A flat ring: x0, y0, x1, y1, ... */
+  private val Ring = ArrayType(DoubleType)
+
+  def cellAt(lon: Expression, lat: Expression, level: Expression): Expression =
+    call("cellAt", LongType, DoubleType, DoubleType, IntegerType)(lon, lat, level)
+
+  /** Exact ray-cast PIP over a flat ring. */
+  def pip(ring: Expression, px: Expression, py: Expression): Expression =
+    call("pip", BooleanType, Ring, DoubleType, DoubleType)(ring, px, py)
+
+  /** Matches a [[pip]] call — the conjunct PipJoinRewrite rewrites. */
+  object PipContains {
+    def unapply(e: Expression): Option[(Expression, Expression, Expression)] = e match {
+      case StaticInvoke(cls, _, "pip", Seq(ring, px, py), _, _, _, _, _)
+          if cls == GraftKernels.getClass => Some((ring, px, py))
+      case _ => None
+    }
   }
 
-  /** Exact ray-cast PIP as a codegen expression over a flat-ring array. */
-  case class PipContains(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-    override def dataType: DataType = BooleanType
-    override def nullable: Boolean = first.nullable || second.nullable || third.nullable
-    override protected def nullSafeEval(ring: Any, px: Any, py: Any): Any =
-      Kernels.pip(ring.asInstanceOf[ArrayData],
-        px.asInstanceOf[Double], py.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (ring, px, py) =>
-        s"${ev.value} = $K.pip($ring, $px, $py);")
-    override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): PipContains =
-      copy(first = f, second = s, third = t)
-  }
+  /** Reference supertile/quartertile id via the real CRS projection. */
+  def tileId(lon: Expression, lat: Expression): Expression =
+    call("tileId", StringType, DoubleType, DoubleType)(lon, lat)
+
+  /** Cover cells of a ring at a level — the generator input of the
+    * PipJoinRewrite rule. */
+  def coverCells(ring: Expression, level: Expression): Expression =
+    call("coverCells",
+      ArrayType(StructType(Seq(
+        StructField("cell", LongType, nullable = false),
+        StructField("interior", BooleanType, nullable = false))), containsNull = false),
+      Ring, IntegerType)(ring, level)
+
+  def projRoundtripErr(lon: Expression, lat: Expression): Expression =
+    call("projRoundtripErr", DoubleType, DoubleType, DoubleType)(lon, lat)
+
+  /** Geocell string (see GraftKernels.geocell). */
+  def geocell(lon: Expression, lat: Expression): Expression =
+    call("geocell", StringType, DoubleType, DoubleType)(lon, lat)
+
+  /** Integer dot product of two array<long> columns. */
+  def dotLongs(a: Expression, b: Expression): Expression =
+    call("dotLongs", LongType, ArrayType(LongType), ArrayType(LongType))(a, b)
+
+  def cover_cells(ring: Column, level: Int): Column =
+    column(coverCells(expression(ring), Literal(level)))
+
+  def dot_longs(a: Column, b: Column): Column = column(dotLongs(expression(a), expression(b)))
+
+  def proj_roundtrip_err(lon: Column, lat: Column): Column =
+    column(projRoundtripErr(expression(lon), expression(lat)))
+
+  def geocell_expr(lon: Column, lat: Column): Column =
+    column(geocell(expression(lon), expression(lat)))
+
+  def tile_id(lon: Column, lat: Column): Column = column(tileId(expression(lon), expression(lat)))
 
   /** One-pass exactly-one-tile pick (J2 shelve rule) over a per-cell
     * candidate array of structs (pid string, ring array<double>, interior
     * boolean), plus the match count, as a struct (pid: STRING, null when 0
-    * or >1 tiles contain the point; n: INT). A single codegen expression
-    * instead of a higher-order filter lambda (HOFs like ArrayFilter are
+    * or >1 tiles contain the point; n: INT). A single kernel call instead of
+    * a higher-order filter lambda (HOFs like ArrayFilter are
     * CodegenFallback). Materialized into its own projection by
     * [[graft.ops.PipJoin.shelve]] so the plan carries exactly ONE call site —
     * field extraction above it touches only the struct attribute.
     */
-  case class ShelvePickN(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("pid", org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.IntegerType, nullable = false)))
-    override def nullable: Boolean = first.nullable || second.nullable || third.nullable
-    override protected def nullSafeEval(cands: Any, px: Any, py: Any): Any =
-      Kernels.shelvePickN(cands.asInstanceOf[ArrayData],
-        px.asInstanceOf[Double], py.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (cands, px, py) =>
-        s"${ev.value} = $K.shelvePickN($cands, $px, $py);")
-    override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): ShelvePickN =
-      copy(first = f, second = s, third = t)
-  }
-
-  /** Reference supertile/quartertile id via the real CRS projection. */
-  case class TileIdExpr(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.StringType
-    override def nullable: Boolean = left.nullable || right.nullable
-    override protected def nullSafeEval(lon: Any, lat: Any): Any =
-      Kernels.tileId(lon.asInstanceOf[Double], lat.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (lon, lat) => s"${ev.value} = $K.tileId($lon, $lat);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): TileIdExpr =
-      copy(left = l, right = r)
-  }
-
-  /** Cover cells of a ring at a level — the generator input of the
-    * PipJoinRewrite rule. */
-  case class CoverCells(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell", LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("interior", BooleanType, nullable = false))),
-      containsNull = false)
-    override protected def nullSafeEval(ring: Any, level: Any): Any =
-      Kernels.coverCells(ring.asInstanceOf[ArrayData], level.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (ring, level) =>
-        s"${ev.value} = $K.coverCells($ring, $level);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): CoverCells =
-      copy(left = l, right = r)
-  }
-
-  def cover_cells(ring: Column, level: Int): Column =
-    ExpressionUtils.column(CoverCells(
-      ExpressionUtils.expression(ring), ExpressionUtils.expression(lit(level))))
-
-  /** Reprojection roundtrip residual via the static kernel. */
-  case class ProjRoundtripErr(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-    override def nullable: Boolean = left.nullable || right.nullable
-    override protected def nullSafeEval(lon: Any, lat: Any): Any =
-      Kernels.projRoundtripErr(lon.asInstanceOf[Double], lat.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (lon, lat) => s"${ev.value} = $K.projRoundtripErr($lon, $lat);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): ProjRoundtripErr =
-      copy(left = l, right = r)
-  }
-
-  /** Geocell string via the static kernel (see GraftKernels.geocell). */
-  case class GeocellExpr(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.StringType
-    override def nullable: Boolean = left.nullable || right.nullable
-    override protected def nullSafeEval(lon: Any, lat: Any): Any =
-      Kernels.geocell(lon.asInstanceOf[Double], lat.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (lon, lat) => s"${ev.value} = $K.geocell($lon, $lat);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): GeocellExpr =
-      copy(left = l, right = r)
-  }
-
-  /** Integer dot product of two array<long> columns, codegen-fused. */
-  case class DotLongs(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = left.nullable || right.nullable
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      Kernels.dotLongs(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $K.dotLongs($a, $b);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): DotLongs =
-      copy(left = l, right = r)
-  }
-
-  def dot_longs(a: Column, b: Column): Column =
-    ExpressionUtils.column(DotLongs(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  def proj_roundtrip_err(lon: Column, lat: Column): Column =
-    ExpressionUtils.column(ProjRoundtripErr(
-      ExpressionUtils.expression(lon.cast("double")),
-      ExpressionUtils.expression(lat.cast("double"))))
-
-  def geocell_expr(lon: Column, lat: Column): Column =
-    ExpressionUtils.column(GeocellExpr(
-      ExpressionUtils.expression(lon.cast("double")),
-      ExpressionUtils.expression(lat.cast("double"))))
-
-  def tile_id(lon: Column, lat: Column): Column =
-    ExpressionUtils.column(TileIdExpr(
-      ExpressionUtils.expression(lon.cast("double")),
-      ExpressionUtils.expression(lat.cast("double"))))
-
   def shelve_pick_n(cands: Column, px: Column, py: Column): Column =
-    ExpressionUtils.column(ShelvePickN(
-      ExpressionUtils.expression(cands),
-      ExpressionUtils.expression(px.cast("double")),
-      ExpressionUtils.expression(py.cast("double"))))
+    column(call("shelvePickN",
+      StructType(Seq(
+        StructField("pid", StringType, nullable = true),
+        StructField("n", IntegerType, nullable = false))),
+      ArrayType, DoubleType, DoubleType)(expression(cands), expression(px), expression(py)))
 
   /** Ring slab (Chebyshev cell distance in (lo, hi]) as array<long> — the
     * per-round explode source of [[graft.ops.KnnJoin.knn]]. */
-  case class RingRange(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-    override def dataType: DataType =
-      org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = first.nullable || second.nullable || third.nullable
-    override protected def nullSafeEval(cell: Any, lo: Any, hi: Any): Any =
-      Kernels.ringRange(cell.asInstanceOf[Long], lo.asInstanceOf[Int], hi.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (cell, lo, hi) =>
-        s"${ev.value} = $K.ringRange($cell, $lo, $hi);")
-    override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): RingRange =
-      copy(first = f, second = s, third = t)
-  }
-
   def ring_range(cell: Column, lo: Column, hi: Column): Column =
-    ExpressionUtils.column(RingRange(
-      ExpressionUtils.expression(cell.cast("long")),
-      ExpressionUtils.expression(lo.cast("int")),
-      ExpressionUtils.expression(hi.cast("int"))))
+    column(call("ringRange", ArrayType(LongType, containsNull = false),
+      LongType, IntegerType, IntegerType)(expression(cell), expression(lo), expression(hi)))
 
   /** Column API: cell id at a quadkey level — codegen-fused, no UDF. */
   def cell_at(lon: Column, lat: Column, level: Int): Column =
-    ExpressionUtils.column(CellAt(
-      ExpressionUtils.expression(lon.cast("double")),
-      ExpressionUtils.expression(lat.cast("double")),
-      ExpressionUtils.expression(lit(level))))
+    column(cellAt(expression(lon), expression(lat), Literal(level)))
 
   /** Column API: exact PIP over a flat ring (array<double>) column. */
   def st_contains(ring: Column, px: Column, py: Column): Column =
-    ExpressionUtils.column(PipContains(
-      ExpressionUtils.expression(ring),
-      ExpressionUtils.expression(px.cast("double")),
-      ExpressionUtils.expression(py.cast("double"))))
+    column(pip(expression(ring), expression(px), expression(py)))
 }

@@ -2,7 +2,6 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions registration so the engine's Catalyst expressions
@@ -15,45 +14,31 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import CellExpressions._
+  import TextExpressions._
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+  private val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("graft_cell_at", "quadkey cell id of (lon, lat) at a level", a => cellAt(a(0), a(1), a(2))),
+    ("graft_st_contains", "ray-cast point-in-polygon over a flat ring", a => pip(a(0), a(1), a(2))),
+    ("graft_tile_id", "reference PS/UTM 100km supertile+quartertile id", a => tileId(a(0), a(1))),
+    ("graft_dot_longs", "integer dot product of two long arrays", a => dotLongs(a(0), a(1))),
+    ("graft_geocell", "reference 1-degree geocell of (lon, lat)", a => geocell(a(0), a(1))),
+    ("graft_h32", "first-32-bits-of-md5 string hash as bigint", a => h32(a(0))),
+    ("graft_shingle_hashes", "h32 of every n-gram shingle of a token array",
+      a => shingleHashes(a(0), a(1))),
+    ("graft_minhash_sig", "minhash signature array over shingle hashes",
+      a => minhashSig(a(0), a(1))),
+    ("graft_simhash_sig", "simhash signature over token hashes", a => simhashSig(a(0), a(1))),
+    ("graft_repetition_counts",
+      "[n, distinct, topCount, nBigrams, topBigramCount] of a token array",
+      a => repetitionCounts(a(0))),
+    ("graft_proj_roundtrip_err", "CRS forward+inverse roundtrip residual",
+      a => projRoundtripErr(a(0), a(1))))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_cell_at"),
-      info("graft_cell_at", "quadkey cell id of (lon, lat) at a level"),
-      (args: Seq[Expression]) => CellExpressions.CellAt(args(0), args(1), args(2))))
-    ext.injectFunction((FunctionIdentifier("graft_st_contains"),
-      info("graft_st_contains", "ray-cast point-in-polygon over a flat ring"),
-      (args: Seq[Expression]) => CellExpressions.PipContains(args(0), args(1), args(2))))
-    ext.injectFunction((FunctionIdentifier("graft_tile_id"),
-      info("graft_tile_id", "reference PS/UTM 100km supertile+quartertile id"),
-      (args: Seq[Expression]) => CellExpressions.TileIdExpr(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_dot_longs"),
-      info("graft_dot_longs", "integer dot product of two long arrays"),
-      (args: Seq[Expression]) => CellExpressions.DotLongs(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_geocell"),
-      info("graft_geocell", "reference 1-degree geocell of (lon, lat)"),
-      (args: Seq[Expression]) => CellExpressions.GeocellExpr(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_h32"),
-      info("graft_h32", "first-32-bits-of-md5 string hash as bigint"),
-      (args: Seq[Expression]) => TextExpressions.H32(args(0))))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes", "h32 of every n-gram shingle of a token array"),
-      (args: Seq[Expression]) => TextExpressions.ShingleHashes(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      info("graft_minhash_sig", "minhash signature array over shingle hashes"),
-      (args: Seq[Expression]) => TextExpressions.MinhashSig(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash_sig"),
-      info("graft_simhash_sig", "simhash signature over token hashes"),
-      (args: Seq[Expression]) => TextExpressions.SimhashSig(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_repetition_counts"),
-      info("graft_repetition_counts",
-        "[n, distinct, topCount, nBigrams, topBigramCount] of a token array"),
-      (args: Seq[Expression]) => TextExpressions.RepetitionCounts(args(0))))
-    ext.injectFunction((FunctionIdentifier("graft_proj_roundtrip_err"),
-      info("graft_proj_roundtrip_err", "CRS forward+inverse roundtrip residual"),
-      (args: Seq[Expression]) => CellExpressions.ProjRoundtripErr(args(0), args(1))))
+    for ((name, usage, build) <- functions)
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""), build))
     // plan-level integration: PIP theta joins become cell equi-joins
     ext.injectOptimizerRule(_ => PipJoinRewrite)
   }

@@ -96,11 +96,11 @@ object PipJoinRewrite extends Rule[LogicalPlan] {
 
           // point side: __graft_cell = cell_at(px, py, level)
           val cellAlias = Alias(
-            CellExpressions.CellAt(px, py, Literal(level)), "__graft_cell")()
+            CellExpressions.cellAt(px, py, Literal(level)), "__graft_cell")()
           val ptProj = Project(ptSide.output :+ cellAlias, ptSide)
 
           // polygon side: explode(cover_cells(ring, level)) → struct col
-          val cover = CellExpressions.CoverCells(ring, Literal(level))
+          val cover = CellExpressions.coverCells(ring, Literal(level))
           val covType = cover.dataType
             .asInstanceOf[org.apache.spark.sql.types.ArrayType]
             .elementType

@@ -5,12 +5,12 @@ package org.apache.spark.sql.graft
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.classic.ExpressionUtils.{column, expression}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType,
+  StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static text-hash kernels referenced from generated code. TOP-LEVEL object
@@ -246,132 +246,77 @@ object GraftTextKernels {
   }
 }
 
+/** Text-hash expressions: [[GraftTextKernels]] methods as `StaticInvoke`
+  * kernel calls (see [[CellExpressions]]), plus [[RegexpGroups]]. */
 object TextExpressions {
 
-  private val K = "org.apache.spark.sql.graft.GraftTextKernels"
-  private val Kernels = GraftTextKernels
-
   private val longArray = ArrayType(LongType, containsNull = false)
+  private val tokens = ArrayType(StringType)
 
-  case class H32(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(s: Any): Any =
-      Kernels.h32(s.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $K.h32($s);")
-    override protected def withNewChildInternal(c: Expression): H32 = copy(child = c)
-  }
+  private def call(fn: String, dataType: DataType, inputTypes: AbstractDataType*)(
+      args: Expression*): Expression =
+    CellExpressions.kernelCall(GraftTextKernels, fn, dataType, args, inputTypes)
+
+  def h32(s: Expression): Expression = call("h32", LongType, StringType)(s)
 
   /** h32 of every n-shingle of a token array — array<string> × int → array<long>. */
-  case class ShingleHashes(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = longArray
-    override protected def nullSafeEval(toks: Any, n: Any): Any =
-      Kernels.shingleHashes(toks.asInstanceOf[ArrayData], n.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (toks, n) =>
-        s"${ev.value} = $K.shingleHashes($toks, $n);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): ShingleHashes =
-      copy(left = l, right = r)
-  }
-
-  /** 60-bit variant of [[ShingleHashes]] (SimHash entropy budget). */
-  case class ShingleHashesWide(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = longArray
-    override protected def nullSafeEval(toks: Any, n: Any): Any =
-      Kernels.shingleHashesWide(toks.asInstanceOf[ArrayData], n.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (toks, n) =>
-        s"${ev.value} = $K.shingleHashesWide($toks, $n);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): ShingleHashesWide =
-      copy(left = l, right = r)
-  }
+  def shingleHashes(toks: Expression, n: Expression): Expression =
+    call("shingleHashes", longArray, tokens, IntegerType)(toks, n)
 
   /** MinHash signature array (null when the input set is empty). */
-  case class MinhashSig(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = longArray
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(hashes: Any, k: Any): Any =
-      Kernels.minhashSig(hashes.asInstanceOf[ArrayData], k.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (hashes, k) =>
-        s"""${ev.value} = $K.minhashSig($hashes, $k);
-           |${ev.isNull} = (${ev.value} == null);""".stripMargin)
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): MinhashSig =
-      copy(left = l, right = r)
-  }
+  def minhashSig(hashes: Expression, k: Expression): Expression =
+    CellExpressions.kernelCall(GraftTextKernels, "minhashSig", longArray, Seq(hashes, k),
+      Seq(ArrayType(LongType), IntegerType), nullOnEmpty = true)
+
+  /** SimHash signature long (null when the input set is empty). */
+  def simhashSig(hashes: Expression, bits: Expression): Expression =
+    CellExpressions.kernelCall(GraftTextKernels, "simhashSig", LongType, Seq(hashes, bits),
+      Seq(ArrayType(LongType), IntegerType), nullOnEmpty = true)
 
   /** One-pass repetition counts — array<string> → array<long> of
     * [n, distinct, topCnt, nBigrams, topBigramCnt]. */
-  case class RepetitionCounts(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = longArray
-    override protected def nullSafeEval(toks: Any): Any =
-      Kernels.repetitionCounts(toks.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, toks => s"${ev.value} = $K.repetitionCounts($toks);")
-    override protected def withNewChildInternal(c: Expression): RepetitionCounts =
-      copy(child = c)
-  }
-
-  /** SimHash signature long (null when the input set is empty). */
-  case class SimhashSig(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override protected def nullSafeEval(hashes: Any, bits: Any): Any =
-      Kernels.simhashSig(hashes.asInstanceOf[ArrayData], bits.asInstanceOf[Int])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (hashes, bits) =>
-        s"""java.lang.Long ${ev.value}_boxed = $K.simhashSig($hashes, $bits);
-           |${ev.isNull} = (${ev.value}_boxed == null);
-           |${ev.value} = ${ev.isNull} ? -1L : ${ev.value}_boxed.longValue();""".stripMargin)
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): SimhashSig =
-      copy(left = l, right = r)
-  }
+  def repetitionCounts(toks: Expression): Expression =
+    call("repetitionCounts", longArray, tokens)(toks)
 
   /** All groups of a (literal) pattern in one matcher pass — see
     * [[GraftTextKernels.regexpGroups]]. The compiled pattern is per-instance
     * mutable state (the RegExpExtract caching pattern), so the regex
-    * compiles once per task, not per row. */
+    * compiles once per task, not per row — state a `StaticInvoke` cannot
+    * hold, hence the one hand-written expression. */
   case class RegexpGroups(left: Expression, right: Expression) extends BinaryExpression {
-    override def dataType: DataType =
-      ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
+    override def dataType: DataType = ArrayType(StringType, containsNull = false)
     @transient private lazy val compiled = java.util.regex.Pattern.compile(
       right.eval(null).asInstanceOf[UTF8String].toString)
     override protected def nullSafeEval(s: Any, r: Any): Any =
-      Kernels.regexpGroups(compiled, s.asInstanceOf[UTF8String])
+      GraftTextKernels.regexpGroups(compiled, s.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val patCls = "java.util.regex.Pattern"
       val pat = ctx.addMutableState(patCls, "graftRegexpGroupsPattern")
       nullSafeCodeGen(ctx, ev, (s, r) =>
         s"""if ($pat == null) { $pat = $patCls.compile($r.toString()); }
-           |${ev.value} = $K.regexpGroups($pat, $s);""".stripMargin)
+           |${ev.value} =
+           |  org.apache.spark.sql.graft.GraftTextKernels.regexpGroups($pat, $s);""".stripMargin)
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): RegexpGroups =
       copy(left = l, right = r)
   }
 
   def regexp_groups(s: Column, pattern: String): Column =
-    ExpressionUtils.column(RegexpGroups(
-      ExpressionUtils.expression(s), ExpressionUtils.expression(lit(pattern))))
+    column(RegexpGroups(expression(s), Literal(pattern)))
 
-  def h32(s: Column): Column =
-    ExpressionUtils.column(H32(ExpressionUtils.expression(s)))
+  def h32(s: Column): Column = column(h32(expression(s)))
 
   def shingle_hashes(toks: Column, n: Int): Column =
-    ExpressionUtils.column(ShingleHashes(
-      ExpressionUtils.expression(toks), ExpressionUtils.expression(lit(n))))
+    column(shingleHashes(expression(toks), Literal(n)))
 
   def shingle_hashes_wide(toks: Column, n: Int): Column =
-    ExpressionUtils.column(ShingleHashesWide(
-      ExpressionUtils.expression(toks), ExpressionUtils.expression(lit(n))))
+    column(call("shingleHashesWide", longArray, tokens, IntegerType)(expression(toks), Literal(n)))
 
   def minhash_sig(hashes: Column, numHashes: Int): Column =
-    ExpressionUtils.column(MinhashSig(
-      ExpressionUtils.expression(hashes), ExpressionUtils.expression(lit(numHashes))))
+    column(minhashSig(expression(hashes), Literal(numHashes)))
 
   def simhash_sig(hashes: Column, bits: Int): Column =
-    ExpressionUtils.column(SimhashSig(
-      ExpressionUtils.expression(hashes), ExpressionUtils.expression(lit(bits))))
+    column(simhashSig(expression(hashes), Literal(bits)))
 
-  def repetition_counts(toks: Column): Column =
-    ExpressionUtils.column(RepetitionCounts(ExpressionUtils.expression(toks)))
+  def repetition_counts(toks: Column): Column = column(repetitionCounts(expression(toks)))
 }

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** SQL-text access to the engine's expressions via SparkSessionExtensions. */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("graft_* functions are callable from SQL") {
+  /** Runs `body` in a session built with the graft extensions. */
+  private def withGraftSession(body: SparkSession => Unit): Unit = {
     // extensions apply only when a session is BUILT; clear the shared test
     // session pointers so getOrCreate constructs a fresh session (reusing
     // the context), then restore
@@ -20,7 +21,18 @@ class ExtensionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
       .getOrCreate()
-    try {
+    try body(spark)
+    finally {
+      // do not stop (context shared with the other suites); restore pointers
+      prior.foreach { p =>
+        SparkSession.setDefaultSession(p)
+        SparkSession.setActiveSession(p)
+      }
+    }
+  }
+
+  test("graft_* functions are callable from SQL") {
+    withGraftSession { spark =>
       val row = spark.sql(
         """SELECT graft_cell_at(12.5d, 51.5d, 8) AS cell,
           |       graft_st_contains(array(0d,0d, 10d,0d, 10d,10d, 0d,10d), 5d, 5d) AS pip,
@@ -48,12 +60,24 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(row.getDouble(9) < 1e-6) // roundtrip residual is tiny
       // a a b a a: 5 tokens, 2 distinct, top 4; bigrams aa ab ba aa -> top 2
       assert(row.getSeq[Long](10) === Seq(5L, 2L, 4L, 4L, 2L))
-    } finally {
-      // do not stop (context shared with the other suites); restore pointers
-      prior.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      }
+    }
+  }
+
+  test("graft_* functions cast integer and decimal arguments") {
+    withGraftSession { spark =>
+      val row = spark.sql(
+        """SELECT graft_cell_at(12.5, 51.5, 8) AS cell,
+          |       graft_cell_at(12, 51, 8) AS cell_int,
+          |       graft_geocell(-55.5, 67.2) AS gc,
+          |       graft_tile_id(-45, 75) AS tile,
+          |       graft_st_contains(array(0,0, 10,0, 10,10, 0,10), 5, 5) AS pip
+          |""".stripMargin).collect()(0)
+      assert(row.getLong(0) === graft.cells.Cells.cellAt(12.5, 51.5, 8))
+      assert(row.getLong(1) === graft.cells.Cells.cellAt(12.0, 51.0, 8))
+      assert(row.getString(2) === graft.cells.Cells.geocell(-55.5, 67.2))
+      assert(row.getString(3) === graft.cells.Cells.tileId(-45.0, 75.0))
+      assert(row.getBoolean(4) ===
+        graft.geom.Geom.contains(Array(0.0, 0.0, 10.0, 0.0, 10.0, 10.0, 0.0, 10.0), 5.0, 5.0))
     }
   }
 }

@@ -96,6 +96,72 @@ class OpsSpec extends SparkSpec {
     assert(codegen._2("skip_multi").asInstanceOf[Long] > 0, "fixture must exercise multi-match")
   }
 
+  test("every kernel builder gives the same answer interpreted as with codegen") {
+    import org.apache.spark.sql.graft.{CellExpressions => C, TextExpressions => T}
+    val id = col("id")
+    // a small frame from ids alone: nothing constant-folds, so each mode
+    // evaluates every kernel itself; lon is null on every 13th row
+    val base = spark.range(0, 2000)
+      .withColumn("x", (id * 48271L % 360000L) / 1000.0 - 180.0)
+      .withColumn("y", (id * 16807L % 170000L) / 1000.0 - 85.0)
+      .withColumn("lon", when(id % 13 =!= 0, col("x")))
+      .withColumn("d", (id % 3 + 1).cast("double"))
+      .withColumn("ring", array(col("x") - col("d"), col("y") - col("d"),
+        col("x") + col("d"), col("y") - col("d"), col("x") + col("d"), col("y") + col("d"),
+        col("x") - col("d"), col("y") + col("d")))
+      .withColumn("px", col("x") + (id % 5 - 2) * 0.7)
+      .withColumn("cands", array(
+        struct(lit("A").as("pid"), col("ring").as("ring"), (id % 4 === 0).as("interior")),
+        struct(lit("B").as("pid"), array(col("x"), col("y") - 2.0, col("x") + 2.0, col("y"),
+          col("x"), col("y") + 2.0).as("ring"), lit(false).as("interior"))))
+      // every 11th text is empty: no tokens, no shingles, null signatures
+      .withColumn("text", when(id % 11 =!= 0, concat_ws(" ", (id % 5).cast("string"),
+        (id % 3).cast("string"), (id % 5).cast("string"), (id % 7).cast("string"),
+        (id % 2).cast("string"))).otherwise(lit("")))
+      .withColumn("toks", split(col("text"), " "))
+      .withColumn("hashes", T.shingle_hashes(col("toks"), 1))
+    val cases: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+      "cell_at" -> C.cell_at(col("lon"), col("y"), 9),
+      "st_contains" -> C.st_contains(col("ring"), col("px"), col("y")),
+      "shelve_pick_n" -> C.shelve_pick_n(col("cands"), col("px"), col("y")),
+      "tile_id" -> C.tile_id(col("lon"), col("y")),
+      "cover_cells" -> C.cover_cells(col("ring"), 6),
+      "ring_range" -> C.ring_range(C.cell_at(col("x"), col("y"), 6), lit(0), lit(2)),
+      "geocell_expr" -> C.geocell_expr(col("lon"), col("y")),
+      "dot_longs" -> C.dot_longs(array(id, id % 7), array(lit(3L), id % 5)),
+      "proj_roundtrip_err" -> C.proj_roundtrip_err(col("lon"), col("y")),
+      "h32" -> T.h32(col("text")),
+      "shingle_hashes" -> T.shingle_hashes(col("toks"), 2),
+      "shingle_hashes_wide" -> T.shingle_hashes_wide(col("toks"), 2),
+      "minhash_sig" -> T.minhash_sig(col("hashes"), 16),
+      "simhash_sig" -> T.simhash_sig(col("hashes"), 24),
+      "repetition_counts" -> T.repetition_counts(col("toks")),
+      "regexp_groups" -> T.regexp_groups(col("text"), "(\\d) (\\d)"))
+    // per builder: sum of the output's xxhash64 (decimal: no overflow) and its null count
+    def run(): Map[String, (java.math.BigDecimal, Long)] = {
+      val aggs = cases.flatMap { case (n, _) =>
+        Seq(sum(xxhash64(col(n)).cast("decimal(38,0)")), count_if(col(n).isNull)) }
+      val row = base.select(cases.map { case (n, c) => c.as(n) }: _*)
+        .agg(aggs.head, aggs.tail: _*).head()
+      cases.indices.map(i => cases(i)._1 -> (row.getDecimal(2 * i), row.getLong(2 * i + 1))).toMap
+    }
+    val codegen = run()
+    val interpreted =
+      try {
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        run()
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    for ((n, _) <- cases) assert(interpreted(n) === codegen(n), s"$n differs")
+    val emptyTexts = 2000 / 11 + 1
+    assert(codegen("minhash_sig")._2 === emptyTexts, "an empty hash set must give a null signature")
+    assert(codegen("simhash_sig")._2 === emptyTexts, "an empty hash set must give a null signature")
+    assert(codegen("cell_at")._2 === 2000 / 13 + 1, "a null argument must give a null result")
+  }
+
   test("pickCoverLevel tracks polygon extent: fine for slivers, coarse for continents") {
     // tiny parcels (~0.01°): the finest capped level — cells stay selective
     val tiny = (0 until 50).map { i =>

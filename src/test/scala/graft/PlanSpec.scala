@@ -85,7 +85,7 @@ class PlanSpec extends SparkSpec {
     // the Scala coverUdf (two implementations of the same cover math) is gone
     val plan = planOf(SparkEntry.queries("q_pip_shelve")(spark, Sf))
     assert(!plan.contains("UDF("), s"shelve must be UDF-free:\n${plan.take(1500)}")
-    assert(plan.contains("cover_cells") || plan.contains("covercells"),
+    assert(plan.toLowerCase.contains("cover_cells") || plan.toLowerCase.contains("covercells"),
       s"cover cells must be the kernel expression:\n${plan.take(1500)}")
   }
 

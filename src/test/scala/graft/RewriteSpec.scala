@@ -118,7 +118,7 @@ class RewriteSpec extends AnyFunSuite {
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"))
       val level = graft.ops.PipJoin.pickCoverLevel(spark.table("polys"), "ring")
-      assert(plan.matches(s"(?s).*covercells\\(ring#\\d+, $level\\).*"),
+      assert(plan.matches(s"(?is).*covercells\\(ring#\\d+, $level\\).*"),
         s"polygons must be covered at the extent-derived level $level:\n$plan")
       val got = df.as[(Long, String)].collect().toSet
       val expected = (for {
