@@ -21,7 +21,7 @@ object Session {
       case _ => ()
     }
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
-    var builder = SparkSession
+    val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -45,15 +45,7 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
-    // extra confs from the environment ("key=value;key=value") — lets a
-    // deployment or an A/B measurement tune scale-dependent settings without
-    // a code change; unset keeps the defaults above, so the driver's bench
-    // stays comparable
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) builder = builder.config(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

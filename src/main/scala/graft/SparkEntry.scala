@@ -7,6 +7,7 @@ import graft.geom.Geom
 import graft.ops.{Canonical, KnnJoin, PipJoin, Tiling}
 import graft.pages.{Ladder, Pages}
 import graft.sim.Ann
+import graft.sources.Tables
 import graft.text.{TextOps, UrlOps}
 
 /** Driver contract — one `queries` entry per implemented operator from
@@ -372,7 +373,7 @@ object SparkEntry {
     // --- J1: broadcast region-lookup left join
     "q_region_join" -> ((s, dir) => {
       val pages = Pages.fromDocuments(s, dir)
-      val dim = s.read.parquet(s"$dir/nation.parquet")
+      val dim = Tables.read(s, dir, "nation")
         .filter(col("n_nationkey") < 20)
         .select(col("n_nationkey"), col("n_name").as("region_name"))
       pages.withColumn("nk", (col("doc_id") % 25).cast("int"))
@@ -382,101 +383,101 @@ object SparkEntry {
 
     // --- text: token counting
     "q_token_count" -> ((s, dir) =>
-      TextOps.tokenCounts(s.read.parquet(s"$dir/documents.parquet"))),
+      TextOps.tokenCounts(Tables.read(s, dir, "documents"))),
 
     // --- text: quality scoring
     "q_quality" -> ((s, dir) =>
-      TextOps.qualityScore(s.read.parquet(s"$dir/documents.parquet"))),
+      TextOps.qualityScore(Tables.read(s, dir, "documents"))),
 
     // --- text: language id heuristic
     "q_langid" -> ((s, dir) =>
-      TextOps.langId(s.read.parquet(s"$dir/documents.parquet"))),
+      TextOps.langId(Tables.read(s, dir, "documents"))),
 
     // --- text: document fingerprint
     "q_fingerprint" -> ((s, dir) =>
-      TextOps.fingerprint(s.read.parquet(s"$dir/documents.parquet"))),
+      TextOps.fingerprint(Tables.read(s, dir, "documents"))),
 
     // --- dedup: exact (hash groupBy)
     "q_dedup_exact" -> ((s, dir) =>
-      TextOps.dedupExact(s.read.parquet(s"$dir/documents.parquet"))),
+      TextOps.dedupExact(Tables.read(s, dir, "documents"))),
 
     // --- dedup: MinHash LSH band signatures
     "q_minhash_bands" -> ((s, dir) =>
-      TextOps.minhashBands(s.read.parquet(s"$dir/documents.parquet"))),
+      TextOps.minhashBands(Tables.read(s, dir, "documents"))),
 
     // --- dedup: MinHash LSH candidate pairs (band bucket equi-join)
     "q_minhash_pairs" -> ((s, dir) =>
-      TextOps.minhashPairs(s.read.parquet(s"$dir/documents.parquet"))),
+      TextOps.minhashPairs(Tables.read(s, dir, "documents"))),
 
     // --- dedup: SimHash signatures
     "q_simhash" -> ((s, dir) =>
-      TextOps.simhash(s.read.parquet(s"$dir/documents.parquet"))),
+      TextOps.simhash(Tables.read(s, dir, "documents"))),
 
     // --- dedup: n-gram Jaccard near-dup pairs
     "q_jaccard_pairs" -> ((s, dir) =>
-      TextOps.jaccardPairs(s.read.parquet(s"$dir/documents.parquet"), 0.2)),
+      TextOps.jaccardPairs(Tables.read(s, dir, "documents"), 0.2)),
 
     // --- dedup: SimHash near-dup pairs (pigeonhole multi-index, exact
     // hamming verify — completes the simhash family's pair path)
     "q_simhash_pairs" -> ((s, dir) =>
-      TextOps.simhashPairs(s.read.parquet(s"$dir/documents.parquet"), maxHamming = 3)),
+      TextOps.simhashPairs(Tables.read(s, dir, "documents"), maxHamming = 3)),
 
     // --- dedup: cluster resolution — connected components (alternating
     // star contraction) over the MinHash candidate pairs; every doc gets a
     // cluster_id (= min doc_id in its component), singletons included
     "q_dedup_clusters" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       TextOps.dupClusters(docs, TextOps.minhashPairs(docs))
     }),
 
     // --- dedup: representative selection — one survivor per duplicate
     // cluster, the highest-quality doc (ties → lowest doc_id)
     "q_dedup_keep" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       TextOps.keepBest(docs, TextOps.minhashPairs(docs))
     }),
 
     // --- text: cross-doc boilerplate n-grams (global-frequency cleaning —
     // shingles in ≥ minDf distinct docs are chrome/footer content)
     "q_boilerplate" -> ((s, dir) =>
-      TextOps.boilerplate(s.read.parquet(s"$dir/documents.parquet"), minDf = 5)),
+      TextOps.boilerplate(Tables.read(s, dir, "documents"), minDf = 5)),
 
     // --- text: end-to-end corpus curation (cluster representative ∧ quality
     // ∧ boilerplate ∧ language — the full selection a corpus build ships)
     "q_corpus_select" -> ((s, dir) =>
-      TextOps.corpusSelect(s.read.parquet(s"$dir/documents.parquet"))),
+      TextOps.corpusSelect(Tables.read(s, dir, "documents"))),
 
     // --- text: benchmark decontamination (every 50th doc stands in as the
     // eval set; overlap = shared distinct 3-shingles)
     "q_decontaminate" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       TextOps.decontaminate(docs, docs.filter(col("doc_id") % 50 === 0), minOverlap = 2)
     }),
 
     // --- text: deterministic hash sampling (corpus-mixing weights)
     "q_sample_mix" -> ((s, dir) =>
-      TextOps.sampleMix(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.sampleMix(Tables.read(s, dir, "documents"),
         Map("en" -> 0.5, "de" -> 0.25))),
 
     // --- text: per-language token-budget fill (running prefix-sum cap)
     "q_token_budget" -> ((s, dir) =>
-      TextOps.tokenBudget(s.read.parquet(s"$dir/documents.parquet"), budget = 2000L)),
+      TextOps.tokenBudget(Tables.read(s, dir, "documents"), budget = 2000L)),
 
     // --- text: deterministic distributed corpus shuffle (seeded hash order
     // within hash shards — the training-read permutation without a global sort)
     "q_shuffle_shards" -> ((s, dir) =>
-      TextOps.shuffleShards(s.read.parquet(s"$dir/documents.parquet"), nShards = 16)),
+      TextOps.shuffleShards(Tables.read(s, dir, "documents"), nShards = 16)),
 
     // --- text: within-doc repetition signals (Gopher/C4-style quality rules)
     "q_repetition" -> ((s, dir) =>
-      TextOps.repetitionStats(s.read.parquet(s"$dir/documents.parquet"))),
+      TextOps.repetitionStats(Tables.read(s, dir, "documents"))),
 
     // --- text: PII scrub. The fixture's text is clean, so the query
     // deterministically decorates a third of the docs with an email and a
     // third with an IP + long numeric id first (q_url_normalize precedent),
     // then masks; the oracle mirrors both steps.
     "q_pii_scrub" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val dirty = when(col("doc_id") % 3 === 0,
           concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
             lit("@mail.example.com now")))
@@ -490,12 +491,12 @@ object SparkEntry {
 
     // --- text: fixed-size overlapping context-window chunking
     "q_chunks" -> ((s, dir) =>
-      TextOps.chunkWindows(s.read.parquet(s"$dir/documents.parquet"),
+      TextOps.chunkWindows(Tables.read(s, dir, "documents"),
         chunkSize = 32, stride = 24)),
 
     // --- text: sequence packing into fixed-token-budget bins (per lang)
     "q_pack_bins" -> ((s, dir) =>
-      TextOps.packBins(s.read.parquet(s"$dir/documents.parquet"), binTokens = 512L)),
+      TextOps.packBins(Tables.read(s, dir, "documents"), binTokens = 512L)),
 
     // --- text: URL canonicalization (the dedup key a crawl pipeline uses
     // BEFORE content hashing). The fixture's URLs are uniform, so the query
@@ -503,7 +504,7 @@ object SparkEntry {
     // tracking params, default/explicit ports, case variants, trailing
     // slashes, fragments — then normalizes; the oracle mirrors both steps.
     "q_url_normalize" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.read(s, dir, "documents")
       val base = concat(col("lang"), lit("/doc-"), col("doc_id").cast("string"))
       val raw = when(col("doc_id") % 5 === 0,
           concat(lit("HTTP://WWW.Example.org:80/"), base, lit("/?utm_source=feed&b=2&a=1#frag")))
@@ -520,67 +521,67 @@ object SparkEntry {
 
     // --- similarity: exact brute-force cosine top-k
     "q_ann_brute" -> ((s, dir) =>
-      Ann.bruteTopK(s.read.parquet(s"$dir/embeddings.parquet"), col("vec_id") < 32, k = 5)
+      Ann.bruteTopK(Tables.read(s, dir, "embeddings"), col("vec_id") < 32, k = 5)
         .withColumn("rn", col("rn").cast("long"))),
 
     // --- similarity: int8 scalar-quantized top-k with exact re-rank (the
     // memory-bandwidth knob: 8x smaller scan, recall bounded by the
     // k·rerank approximate window)
     "q_quant_topk" -> ((s, dir) =>
-      Ann.quantTopK(s.read.parquet(s"$dir/embeddings.parquet"), col("vec_id") < 32, k = 5)
+      Ann.quantTopK(Tables.read(s, dir, "embeddings"), col("vec_id") < 32, k = 5)
         .withColumn("rn", col("rn").cast("long"))),
 
     // --- similarity: embedding-cosine near-dup pairs
     "q_cosine_pairs" -> ((s, dir) =>
-      Ann.cosinePairs(s.read.parquet(s"$dir/embeddings.parquet"), 0.2)),
+      Ann.cosinePairs(Tables.read(s, dir, "embeddings"), 0.2)),
 
     // --- similarity: LSH-bucketed near-dup pairs (the scale path for pairs —
     // the embedding analog of q_minhash_pairs; q_cosine_pairs is its brute twin)
     "q_lsh_pairs" -> ((s, dir) =>
-      Ann.lshPairs(s.read.parquet(s"$dir/embeddings.parquet"), 0.2)),
+      Ann.lshPairs(Tables.read(s, dir, "embeddings"), 0.2)),
 
     // --- similarity: BANDED LSH near-dup pairs (b×r OR-of-ANDs — the recall
     // knob over q_lsh_pairs' single signature; threshold at the fixture's
     // near-dup tier, recall vs the brute twin measured in BENCH.md)
     "q_lsh_pairs_banded" -> ((s, dir) =>
-      Ann.lshPairsBanded(s.read.parquet(s"$dir/embeddings.parquet"), 0.4)),
+      Ann.lshPairsBanded(Tables.read(s, dir, "embeddings"), 0.4)),
 
     // --- similarity: LSH bucket assignment (the scale path)
     "q_lsh_buckets" -> ((s, dir) =>
-      Ann.lshBuckets(s.read.parquet(s"$dir/embeddings.parquet"))
+      Ann.lshBuckets(Tables.read(s, dir, "embeddings"))
         .select(col("vec_id"), col("bucket"))),
 
     // --- similarity: LSH-bucketed ANN top-k
     "q_lsh_topk" -> ((s, dir) =>
-      Ann.lshTopK(s.read.parquet(s"$dir/embeddings.parquet"), col("vec_id") < 32, k = 3)
+      Ann.lshTopK(Tables.read(s, dir, "embeddings"), col("vec_id") < 32, k = 3)
         .withColumn("rn", col("rn").cast("long"))),
 
     // --- similarity: IVF cell assignment (deterministic centroids)
     "q_ivf_cells" -> ((s, dir) =>
-      Ann.ivfAssign(s.read.parquet(s"$dir/embeddings.parquet"))
+      Ann.ivfAssign(Tables.read(s, dir, "embeddings"))
         .select(col("vec_id"), col("ivf_cell"))),
 
     // --- similarity: IVF-probed ANN top-k
     "q_ivf_topk" -> ((s, dir) =>
-      Ann.ivfTopK(s.read.parquet(s"$dir/embeddings.parquet"), col("vec_id") < 32, k = 3)
+      Ann.ivfTopK(Tables.read(s, dir, "embeddings"), col("vec_id") < 32, k = 3)
         .withColumn("rn", col("rn").cast("long"))),
 
     // --- similarity: IVF multi-probe top-k (recall knob: 2 cells per query)
     "q_ivf_multiprobe" -> ((s, dir) =>
-      Ann.ivfMultiProbeTopK(s.read.parquet(s"$dir/embeddings.parquet"),
+      Ann.ivfMultiProbeTopK(Tables.read(s, dir, "embeddings"),
           col("vec_id") < 32, k = 3, nProbe = 2)
         .withColumn("rn", col("rn").cast("long"))),
 
     // --- events: tumbling-window aggregation
     "q_event_window" -> ((s, dir) =>
-      s.read.parquet(s"$dir/events.parquet")
+      Tables.read(s, dir, "events")
         .groupBy(date_trunc("hour", col("ts").cast("timestamp")).cast("long").as("hr_epoch"),
           col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))),
 
     // --- events: json-ish props extraction (S11 analog)
     "q_props_extract" -> ((s, dir) =>
-      s.read.parquet(s"$dir/events.parquet")
+      Tables.read(s, dir, "events")
         .select(col("event_id"),
           regexp_extract(col("props"), "([0-9]+)", 1).cast("long").as("k"))),
 
@@ -642,14 +643,13 @@ object SparkEntry {
 
     // --- O5: zero-padded version keys + s2s release mapping
     "q_verkey" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val semver = concat((lit(3) + col("o_orderkey") % 2).cast("string"), lit("."),
         (col("o_orderkey") % 5).cast("string"), lit("."),
         (col("o_orderkey") % 11).cast("string"))
       val s2s = when(col("o_orderkey") % 4 === 0, "3")
         .when(col("o_orderkey") % 4 === 1, "4")
         .when(col("o_orderkey") % 4 === 2, "4.2").otherwise("4.10")
-      o.select(col("o_orderkey").as("okey"),
+      Tables.read(s, dir, "orders").select(col("o_orderkey").as("okey"),
         graft.parse.Versions.verkeyCol(semver).as("verkey"),
         graft.parse.Versions.s2sReleaseCol(s2s).as("release_ver"))
     }),
@@ -692,7 +692,6 @@ object SparkEntry {
     // --- P9: the full custom-path template family (BP/PGC≡BW/CSS × scene/strip)
     "q_custom_paths" -> ((s, dir) => {
       import graft.jobs.IndexJob.CustomPaths
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val k = col("o_orderkey")
       val pairname = concat(lit("WV0"), (lit(1) + k % 3).cast("string"), lit("_"),
         (lit(2015) + k % 9).cast("string"), lpad((lit(1) + k % 12).cast("string"), 2, "0"),
@@ -709,7 +708,7 @@ object SparkEntry {
       val releaseVer = concat(lit("s2s04"), (lit(1) + k % 2).cast("string"))
       val s2sVersion = concat(lit("4."), (lit(1) + k % 2).cast("string"))
       val pfx = lit("/pfx")
-      o.select(k.as("okey"),
+      Tables.read(s, dir, "orders").select(k.as("okey"),
         CustomPaths.bp("scene", pfx, pairname, resStr, resDir, groupId, bpRegion).as("bp_scene"),
         CustomPaths.pgc("scene", pfx, region, resDir, groupId, srcfn, releaseVer).as("pgc_scene"),
         CustomPaths.css("scene", pfx, pairname, resDir, groupId, srcfn, s2sVersion).as("css_scene"),
@@ -722,7 +721,6 @@ object SparkEntry {
     // title version, key: value header, alignment row, scene blocks incl. the
     // scene_name splitext and Output Projection special cases)
     "q_strip_meta_parse" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val k = col("o_orderkey")
       val meta = concat(
         lit("Strip Metadata (v2."), (k % 5).cast("string"), lit(")\n"),
@@ -739,7 +737,7 @@ object SparkEntry {
       // form planned SEVEN copies of the UDF call (one per extracted field;
       // plan-level CSE does not merge them, plans/r06/q_strip_meta_parse)
       val sm = graft.parse.MetaParsers.stripMetaUdf(meta)
-      val parsed = o.select(k.as("okey"), sm.as("__sm"))
+      val parsed = Tables.read(s, dir, "orders").select(k.as("okey"), sm.as("__sm"))
       val h = col("__sm").getField("header")
       val sc = col("__sm").getField("scenes")
       val al = col("__sm").getField("alignment")
@@ -760,8 +758,7 @@ object SparkEntry {
 
     // --- A3: RMSE mean with the -1 / -9999 sentinel ladder
     "q_rmse" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val aligns = li.select(col("l_orderkey").as("gid"),
+      val aligns = Tables.read(s, dir, "lineitem").select(col("l_orderkey").as("gid"),
         when(col("l_orderkey") % 97 === 0, -2.0)
           .when(col("l_linenumber") % 3 === 0, 0.0)
           .otherwise(col("l_linenumber") / 4.0).as("scene_rmse"))
@@ -770,8 +767,7 @@ object SparkEntry {
 
     // --- A4 + O4: epoch-mean acquisition time + deterministic first pick
     "q_acq_mean" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val scenes = li.select(col("l_orderkey").as("gid"),
+      val scenes = Tables.read(s, dir, "lineitem").select(col("l_orderkey").as("gid"),
         col("l_shipdate").cast("timestamp").as("acq_ts"),
         col("l_linenumber").as("scene_idx"))
       // deterministic first pick: the fixture has duplicate scene_idx per
@@ -785,8 +781,7 @@ object SparkEntry {
 
     // --- A2: group means over nullable metrics
     "q_group_means" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val scenes = li.select(col("l_orderkey").as("gid"),
+      val scenes = Tables.read(s, dir, "lineitem").select(col("l_orderkey").as("gid"),
         when(col("l_linenumber") % 2 === 0, col("l_quantity")).as("conv_angle"),
         col("l_discount").as("exp_height_acc"),
         when(col("l_linenumber") % 3 === 0, col("l_tax")).as("sun_el1"),
@@ -810,11 +805,10 @@ object SparkEntry {
 
     // --- P14: multi-format datetime normalization via try-parse coalesce
     "q_date_normalize" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val str = when(col("o_orderkey") % 3 === 0, date_format(col("o_orderdate"), "yyyy-MM-dd"))
         .when(col("o_orderkey") % 3 === 1, date_format(col("o_orderdate"), "dd/MM/yyyy"))
         .otherwise(date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss"))
-      o.select(col("o_orderkey").as("okey"), str.as("raw"),
+      Tables.read(s, dir, "orders").select(col("o_orderkey").as("okey"), str.as("raw"),
         coalesce(
           try_to_timestamp(str, lit("dd/MM/yyyy")),
           try_to_timestamp(str, lit("yyyy-MM-dd")),
@@ -825,8 +819,7 @@ object SparkEntry {
     // --- P4 + S16 + A14: packaging quality filter + per-item manifest
     // (package_setsm.py:23-25 thresholds; tar content as manifest rows)
     "q_package_manifest" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val items = li.select(
+      val items = Tables.read(s, dir, "lineitem").select(
         (col("l_orderkey") * 10 + col("l_linenumber")).as("item_id"),
         (col("l_quantity") * 2).as("valid_area"),
         (col("l_discount") + 0.01).as("masked_density"),
@@ -843,7 +836,7 @@ object SparkEntry {
 
     // --- batch sessionization (SQL twin of streaming.EventStream.sessionize)
     "q_sessionize" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.read(s, dir, "events")
         .select(col("user_id"),
           unix_micros(col("ts").cast("timestamp")).as("te"), col("value"))
       val w = org.apache.spark.sql.expressions.Window
@@ -939,7 +932,6 @@ object SparkEntry {
 
     // --- P2: completeness predicate over file-size arrays
     "q_complete" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val k = col("o_orderkey")
       val demSizes = array(
         when(k % 7 =!= 0, k % 5), lit(null).cast("long"), k % 3)
@@ -947,7 +939,7 @@ object SparkEntry {
         k % 4 + 1, when(k % 11 === 0, 0L).otherwise(3L),
         when(k % 13 === 0, lit(null).cast("long")).otherwise(lit(2L)))
       val optSizes = array(when(k % 6 === 0, 0L).otherwise(lit(null).cast("long")))
-      o.select(k.as("okey"),
+      Tables.read(s, dir, "orders").select(k.as("okey"),
         graft.ops.Inclusion.isComplete(demSizes, reqSizes, optSizes).as("is_complete"))
     }),
 
@@ -971,7 +963,6 @@ object SparkEntry {
     // parser, and the extracted fields must equal the oracle's direct
     // computation — if the parser mangles anything, the hash diverges.
     "q_meta_parse" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val k = col("o_orderkey")
       val meta = concat(
         lit("Image 1=img_"), k.cast("string"), lit(".tif\n"),
@@ -982,7 +973,7 @@ object SparkEntry {
         lit("Creation Date=2024-01-"), lpad((lit(1) + k % 28).cast("string"), 2, "0"))
       // two-step select: one parse per row (see q_strip_meta_parse)
       val m = graft.parse.MetaParsers.sceneMetaUdf(meta)
-      o.select(k.as("okey"), m.as("__m"))
+      Tables.read(s, dir, "orders").select(k.as("okey"), m.as("__m"))
         .select(col("okey"),
           try_element_at(col("__m"), lit("Image 1")).as("image1"),
           try_element_at(col("__m"), lit("Group Version")).as("group_version"),
@@ -992,7 +983,6 @@ object SparkEntry {
 
     // --- S8 parser differential: nested BEGIN_GROUP/END_GROUP mdf doc
     "q_mdf_parse" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val k = col("o_orderkey")
       val mdf = concat(
         lit("BEGIN_GROUP = IMAGE_1\n"),
@@ -1002,7 +992,7 @@ object SparkEntry {
         lit("version = \"28."), (k % 4).cast("string"), lit("\";"))
       // two-step select: one parse per row (see q_strip_meta_parse)
       val m = graft.parse.MetaParsers.mdfUdf(mdf)
-      o.select(k.as("okey"), m.as("__m"))
+      Tables.read(s, dir, "orders").select(k.as("okey"), m.as("__m"))
         .select(col("okey"),
           try_element_at(col("__m"), lit("IMAGE_1_satId")).as("sat_id"),
           try_element_at(col("__m"), lit("IMAGE_1_meanSunEl")).as("mean_sun_el"),
@@ -1011,22 +1001,20 @@ object SparkEntry {
 
     // --- S11: from_json record source (schema-typed JSON decode)
     "q_from_json" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val k = col("o_orderkey")
       val js = concat(lit("{\"a\": "), k % 97, lit(", \"b\": \"v"),
         (k % 13).cast("string"), lit("\", \"nest\": {\"c\": "), k % 7, lit("}}"))
       val parsed = from_json(js, org.apache.spark.sql.types.StructType.fromDDL(
         "a BIGINT, b STRING, nest STRUCT<c: BIGINT>"))
-      o.select(k.as("okey"), parsed.getField("a").as("a"),
+      Tables.read(s, dir, "orders").select(k.as("okey"), parsed.getField("a").as("a"),
         parsed.getField("b").as("b"), parsed.getField("nest").getField("c").as("c"))
     }),
 
     // --- S5: scaled-int band read (scale/offset except at nodata)
     "q_scaled_band" -> ((s, dir) => {
-      val em = s.read.parquet(s"$dir/embeddings.parquet")
       val raw = transform(col("embedding"), x => round(x.cast("double") * 1000).cast("long"))
       val scaled = transform(raw, v => when(v =!= 0L, v * 2 + 5))
-      em.select(col("vec_id"),
+      Tables.read(s, dir, "embeddings").select(col("vec_id"),
         aggregate(scaled, lit(0L), (acc, v) => acc + coalesce(v, lit(0L))).as("band_sum"),
         size(filter(scaled, v => v.isNull)).cast("long").as("n_nodata"))
     }),
@@ -1035,7 +1023,6 @@ object SparkEntry {
     // release_fileurl/release_s3url <placeholder> replace chain
     // (index_setsm.py:1072-1091) as a codegen replace chain
     "q_url_template" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val k = col("o_orderkey")
       val tmpl = lit("https://data.example.org/<project>/<type>/<version>/<resolution>/<group>/<dem_id>.json")
       val project = when(k % 3 === 0, "arcticdem").when(k % 3 === 1, "rema")
@@ -1045,7 +1032,7 @@ object SparkEntry {
       val grp = concat(lit("n"), lpad((k % 90).cast("string"), 2, "0"),
         lit("w"), lpad((k % 180).cast("string"), 3, "0"))
       val demId = concat(lit("SETSM_s2s041_WV01_"), k.cast("string"))
-      o.select(k.as("okey"),
+      Tables.read(s, dir, "orders").select(k.as("okey"),
         graft.ops.UrlTemplate.fileUrl(tmpl, project, "strip", version, res, grp, demId)
           .as("fileurl"),
         graft.ops.UrlTemplate.s3Url(tmpl, project, "strip", version, res, grp, demId)
@@ -1056,11 +1043,10 @@ object SparkEntry {
     // (lib/dem.py:1126-1144); field values chosen /8, /4, /2, /16 so the
     // double → string → double round trip is exact in binary
     "q_reg_parse" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val k = col("o_orderkey")
       // two-step select: one parse per row (see q_strip_meta_parse)
       val m = graft.parse.MetaParsers.regUdf(regText(k))
-      o.select(k.as("okey"), m.as("__m"))
+      Tables.read(s, dir, "orders").select(k.as("okey"), m.as("__m"))
         .select(col("okey"),
           try_element_at(col("__m"), lit("dz")).as("dz"),
           try_element_at(col("__m"), lit("dx")).as("dx"),
@@ -1073,14 +1059,13 @@ object SparkEntry {
     // shifts the geotransform origin / extent and the DEM values
     // (apply_setsm_registration.py:182-258)
     "q_reg_apply" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val k = col("o_orderkey")
       // three-step select (round 6): the parse UDF and the shifted-extent
       // struct are each a non-collapsible alias, so the parser runs once per
       // row and the extent math once — the single-projection form planned a
       // UDF copy under every extracted field of every struct reference
       val m = graft.parse.MetaParsers.regUdf(regText(k))
-      val s1 = o.select(k.as("okey"), m.as("__m"))
+      val s1 = Tables.read(s, dir, "orders").select(k.as("okey"), m.as("__m"))
       val ok = col("okey")
       val ext = graft.ops.Registration.shiftedExtent(
         (ok % 360).cast("double") - 180.0, (ok % 170).cast("double") - 85.0,
@@ -1103,7 +1088,7 @@ object SparkEntry {
     // timed pass measures the cache-HIT path, which is the operator);
     // the fingerprint folds in the whole derivation's oracle SQL (pages CTE
     // + geocell formula + mask threshold + density math — the oracle IS the
-    // computation's spec) AND the input parquet's (size, mtime), so either a
+    // computation's spec) AND the input files' Tables.stamp, so either a
     // logic change or regenerated data invalidates the cache instead of
     // serving stale rows against a fresh oracle
     "q_density_cache" -> ((s, dir) => {
@@ -1112,10 +1097,8 @@ object SparkEntry {
         sys.props("java.io.tmpdir"), "graft-density-cache").toString
       def md5(x: String) = java.security.MessageDigest.getInstance("MD5")
         .digest(x.getBytes("UTF-8")).map(b => "%02x".format(b)).mkString.take(12)
-      val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-      val dataStamp = java.nio.file.Files.size(src) + ":" +
-        java.nio.file.Files.getLastModifiedTime(src).toMillis
-      val fp = s"pages:$dir:${md5(oracleSql("q_density_cache"))}:${md5(dataStamp)}"
+      val fp = s"pages:$dir:${md5(oracleSql("q_density_cache"))}:" +
+        md5(Tables.stamp(dir, "documents"))
       graft.ops.Tiling.densityCached(s, pages, root, fp)
     }),
 
@@ -1153,7 +1136,6 @@ object SparkEntry {
     // oracle recomputes every field directly — a parser mangle diverges the
     // hash. Pure regexp_extract column expressions, codegen, no UDF.
     "q_asp_index" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
       val k = col("o_orderkey")
       val fn = concat(
         lit("WV0"), (lit(1) + k % 3).cast("string"), lit("_"),
@@ -1168,7 +1150,7 @@ object SparkEntry {
       // two-step select keeps the array a non-collapsible alias so the
       // kernel evaluates once
       val g = org.apache.spark.sql.graft.TextExpressions.regexp_groups(fn, pat)
-      o.select(k.as("okey"), fn.as("__fn"), g.as("__g"))
+      Tables.read(s, dir, "orders").select(k.as("okey"), fn.as("__fn"), g.as("__g"))
         .select(col("okey"),
           element_at(col("__g"), 1).as("pairname"),
           element_at(col("__g"), 2).as("sensor"),

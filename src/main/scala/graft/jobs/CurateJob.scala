@@ -3,6 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
 import graft.table.Icelite
 import graft.text.TextOps
 
@@ -36,7 +37,7 @@ object CurateJob {
           defaultRate: Double = 0.25,
           budgetPerShard: Long = 50000L, nShards: Int = 8,
           chunkSize: Int = 64, stride: Int = 48): Result = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.read(spark, sfDir, "documents")
 
     // 1. scrub (kept separate from selection: quality/dedup signals must see
     // the ORIGINAL text — a mass-masked page should score as its raw self)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cells.Cells
 import graft.pages.Pages
+import graft.sources.Tables
 import graft.table.{Icelite, Pipeline}
 
 /** The flagship lifecycle of the reference
@@ -171,10 +172,15 @@ object IndexJob {
       .withColumn("status", statusCol(col("location"), None))
   }
 
+  /** The stages' input fingerprint: the documents table's location and its
+    * files' stamp, so a rewritten input recomputes instead of resuming. */
+  def inputFingerprint(sfDir: String): String =
+    s"pages:$sfDir:${Tables.stamp(sfDir, "documents")}"
+
   /** Run the full job; returns (rows indexed, check diff count — 0 = pass). */
   def run(spark: SparkSession, sfDir: String, workRoot: String): (Long, Long) = {
     val pipe = new Pipeline(spark, workRoot)
-    val fp = s"pages:$sfDir"
+    val fp = inputFingerprint(sfDir)
 
     val widths = Map("url" -> 256, "geocell" -> 7, "record_id" -> 512)
     val pages = pipe.stage("pages", fp) { Pages.fromDocuments(spark, sfDir) }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.{Session, SparkEntry}
 import graft.ops.{KnnJoin, PipJoin, StacDocs, Tiling}
 import graft.pages.Pages
+import graft.sources.Tables
 import graft.table.Icelite
 
 /** spark-submit entry points (north rule: "jobs run via spark-submit ...
@@ -65,20 +66,13 @@ object Main {
           // a file-stream source watches a DIRECTORY; stage the input file(s)
           // as symlinks so a multi-part table arrives as multiple batches
           import java.nio.file.{Files, Paths}
-          import scala.jdk.CollectionConverters._
-          val src = Paths.get(s"$sfDir/documents.parquet")
+          val docs = Tables.path(sfDir, "documents")
           val inDir = Files.createDirectories(Paths.get(outRoot, "stream_in"))
-          val parts =
-            if (Files.isDirectory(src)) {
-              val ls = Files.list(src)
-              try ls.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
-              finally ls.close()
-            } else Seq(src)
-          parts.sorted.zipWithIndex.foreach { case (p, i) =>
+          Tables.files(docs).zipWithIndex.foreach { case (f, i) =>
             val target = inDir.resolve(s"part-$i.parquet")
-            if (!Files.exists(target)) Files.createSymbolicLink(target, p.toAbsolutePath)
+            if (!Files.exists(target)) Files.createSymbolicLink(target, Paths.get(f.getPath.toUri))
           }
-          val docsSchema = spark.read.parquet(src.toString).schema
+          val docsSchema = Tables.schema(spark, docs)
           val docsStream = spark.readStream.schema(docsSchema)
             .option("maxFilesPerTrigger", "1")
             .parquet(inDir.toString)
@@ -132,7 +126,7 @@ object Main {
           // arrived in an earlier batch keeps that member, and earlier
           // batches' singleton survivors are never dropped by a later run.
           // A re-run converges (idempotent pairs, idempotent merges).
-          val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+          val docs = Tables.read(spark, sfDir, "documents")
           val pairs = graft.text.TextOps.incrementalDedup(
             spark, docs, s"$outRoot/dedup_sigs")
           try {
@@ -160,7 +154,7 @@ object Main {
           // index refresh is a full (snapshot-versioned) rebuild, the
           // standard trade for a sorted/clustered index layout.
           import graft.sim.Ann
-          val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+          val vecs = Tables.read(spark, sfDir, "embeddings")
           val idx = Ann.ivfAssign(vecs).repartition(Ann.IvfCells, col("ivf_cell"))
           val table = s"$outRoot/ann_index"
           val snap = Icelite.commit(spark, idx, table, s"annindex:$sfDir")

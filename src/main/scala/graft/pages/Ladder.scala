@@ -1,7 +1,8 @@
 package graft.pages
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Deterministic version-ladder fixtures derived from the orders table —
   * the analog of the reference's scene/strip version sets that its
@@ -17,18 +18,25 @@ import org.apache.spark.sql.functions._
   */
 object Ladder {
 
+  /** `P<custkey % 40>`: the pair name an order's scenes and strips share. */
+  private val pairname: Column =
+    concat(lit("P"), lpad((col("o_custkey") % 40).cast("string"), 2, "0"))
+
+  /** `<pairname>_<res>_v<ver>`: the strip id, one ladder per pair and res. */
+  private val stripdemid: Column = concat(
+    pairname,
+    lit("_"), when(col("o_orderkey") % 2 === 0, "2m").otherwise("8m"),
+    lit("_v"),
+    lpad((lit(3) + col("o_orderkey") % 2).cast("string"), 2, "0"),
+    lpad((col("o_orderkey") % 5).cast("string"), 2, "0"),
+    lpad((col("o_orderkey") % 11).cast("string"), 2, "0"))
+
   /** Scene rows: one per order, grouped into pair+res ladders. */
   def scenes(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    val o = Tables.read(spark, sfDir, "orders")
     o.select(
       concat(lit("SC"), col("o_orderkey").cast("string")).as("scenedemid"),
-      concat(
-        lit("P"), lpad((col("o_custkey") % 40).cast("string"), 2, "0"),
-        lit("_"), when(col("o_orderkey") % 2 === 0, "2m").otherwise("8m"),
-        lit("_v"),
-        lpad((lit(3) + col("o_orderkey") % 2).cast("string"), 2, "0"),
-        lpad((col("o_orderkey") % 5).cast("string"), 2, "0"),
-        lpad((col("o_orderkey") % 11).cast("string"), 2, "0")).as("stripdemid"),
+      stripdemid.as("stripdemid"),
       (col("o_orderkey") % 7 === 0).as("is_dsp"),
       concat(lit("/loc"), (col("o_orderkey") % 3).cast("string")).as("location"),
       concat(lit("2024-01-"), lpad((lit(1) + col("o_orderkey") % 28).cast("string"), 2, "0")).as("index_date"),
@@ -61,22 +69,16 @@ object Ladder {
     * the STAC assembly joins need (pairname, geocell).
     */
   def strips(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    val o = Tables.read(spark, sfDir, "orders")
     o.select(
       concat(lit("SD"), col("o_orderkey").cast("string")).as("dem_id"),
-      concat(
-        lit("P"), lpad((col("o_custkey") % 40).cast("string"), 2, "0"),
-        lit("_"), when(col("o_orderkey") % 2 === 0, "2m").otherwise("8m"),
-        lit("_v"),
-        lpad((lit(3) + col("o_orderkey") % 2).cast("string"), 2, "0"),
-        lpad((col("o_orderkey") % 5).cast("string"), 2, "0"),
-        lpad((col("o_orderkey") % 11).cast("string"), 2, "0")).as("stripdemid"),
+      stripdemid.as("stripdemid"),
       when(col("o_orderkey") % 4 === 0, "3")
         .when(col("o_orderkey") % 4 === 1, "4")
         .when(col("o_orderkey") % 4 === 2, "4.2")
         .otherwise("4.10").as("s2s_ver"),
       (col("o_orderkey") % 3 === 0).as("is_lsf"),
-      concat(lit("P"), lpad((col("o_custkey") % 40).cast("string"), 2, "0")).as("pairname"),
+      pairname.as("pairname"),
       concat(lit("n"), lpad((col("o_orderkey") % 89).cast("string"), 2, "0"),
         lit("e"), lpad((col("o_orderkey") % 179).cast("string"), 3, "0")).as("geocell"))
   }

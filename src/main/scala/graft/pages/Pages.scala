@@ -2,6 +2,7 @@ package graft.pages
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** The graft input table: Common-Crawl-style web pages
   * `(url, warc_ts, html, text, lang)` per BASELINE.json `input_hint`,
@@ -118,11 +119,11 @@ object Pages {
 
   /** Web pages from the documents table: full input_hint schema + geocoding. */
   def fromDocuments(spark: SparkSession, sfDir: String): DataFrame =
-    pagesFromDocuments(spark.read.parquet(s"$sfDir/documents.parquet"))
+    pagesFromDocuments(Tables.read(spark, sfDir, "documents"))
 
   /** Scaled page set from lineitem: (page_id, lonm, latm, lon, lat). */
   def fromLineitem(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
       .select((col("l_orderkey") * 10 + col("l_linenumber")).cast("long").as("page_id"))
     withGeo(li, "page_id")
   }

@@ -167,9 +167,6 @@ object MetaParsers {
   val sceneMetaUdf = udf(parseSceneMeta _)
   val mdfUdf = udf(parseMdf _)
   val regUdf = udf(parseReg _)
-  val stripMetaHeaderUdf = udf((s: String) => parseStripMeta(s).header)
-  val stripMetaScenesUdf = udf((s: String) => parseStripMeta(s).scenes)
-  val stripMetaAlignUdf = udf((s: String) => parseStripMeta(s).alignment)
 
   /** One-parse wrapper: the whole [[StripMeta]] as a struct column, so a
     * query extracting several fields parses the text once per row (common
@@ -197,11 +194,6 @@ object MetaParsers {
       "_(?<res>(\\d+|0\\.\\d+)c?m)_(lsf_)?(?<partnum>SEG\\d+)_" +
       "((?<relversion2>v[\\d\\.]+)_)?" +
       "(?<suffix>dem(_water-masked|_cloud-masked|_cloud-water-masked|_masked)?\\.(tif|jpg))$").r
-
-    /** setsm_strip_pattern2, lib/dem.py:87-97. */
-    val strip2 = ("(?i)" + pairnameSrc +
-      "_(?<partnum>SEG\\d+)_(?<res>(\\d+|0\\.\\d+)c?m)_" +
-      "((?<relversion>v[\\d\\.]+)_)?(lsf_)?(?<suffix>dem\\.(tif|jpg))$").r
 
     /** asp_strip_pattern, lib/dem.py:99-104. */
     val asp = ("(?i)(?<pairname>(?<sensor>[A-Z]{2}\\d{2})_(?<timestamp>\\d{8})_" +

@@ -110,12 +110,16 @@ object Icelite {
     def filePaths: Seq[String] = files.map(_.path)
   }
 
-  /** Typed empty frame from a persisted schema — a zero-file snapshot
-    * (committed empty DataFrame) must still read back with its columns, or
-    * every downstream `.select`/`.filter` breaks only on the empty case. */
-  private def emptyTyped(spark: SparkSession, schemaJson: String): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      DataType.fromJson(schemaJson).asInstanceOf[StructType])
+  /** The rows of committed data `paths`, read with the schema their
+    * manifest records: no inference job, and zero paths read back as an
+    * empty frame that still has the table's columns, so a downstream
+    * `.select`/`.filter` never breaks only on the empty case. A directory
+    * path of `__slice=` subdirectories reads with `__slice` appended. */
+  private def scan(spark: SparkSession, schemaJson: String, paths: Seq[String]): DataFrame =
+    spark.read.schema(structOf(schemaJson)).parquet(paths: _*)
+
+  private def structOf(schemaJson: String): StructType =
+    DataType.fromJson(schemaJson).asInstanceOf[StructType]
 
   /** Column reference by EXACT name: `col("a.b")` parses the dot as nested
     * field access and fails on a legal flat column named `a.b`; backtick
@@ -268,12 +272,13 @@ object Icelite {
   }
 
   /** Per-file lineage of freshly written parquet under `dataDir`: one scan,
-    * grouped by physical file. `dataCols` is the logical schema (the
+    * grouped by physical file. `schemaJson` is the logical schema (the
     * `__slice` partition directory column is layout, not data).
     */
   private def fileLineage(spark: SparkSession, dataDir: Path,
-                          dataCols: Seq[String]): Seq[FileEntry] = {
-    val written = spark.read.parquet(dataDir.toString)
+                          schemaJson: String): Seq[FileEntry] = {
+    val written = scan(spark, schemaJson, Seq(dataDir.toString))
+    val dataCols = written.columns.filterNot(_ == "__slice").toSeq
     val sliceRe = """__slice=(\d+)_(\d+)""".r
     // zone maps ride the same single pass as the checksum (min/max are
     // map-side-combinable — the stats cost nothing beyond the scan the
@@ -401,14 +406,8 @@ object Icelite {
         .write.mode("overwrite").partitionBy("__slice").parquet(dataDir.toString)
     else
       df.write.mode("overwrite").parquet(dataDir.toString)
-    val dataCols = df.columns.filterNot(_ == "__slice").toSeq
-    val hasData = list(dataDir).exists(p =>
-      p.toString.endsWith(".parquet") || Files.isDirectory(p))
-    val entries =
-      if (hasData) fileLineage(spark, dataDir, dataCols)
-      else Seq.empty // empty write: only _SUCCESS
     val schemaJson = StructType(df.schema.fields.filterNot(_.name == "__slice")).json
-    (uuid, entries, schemaJson)
+    (uuid, fileLineage(spark, dataDir, schemaJson), schemaJson)
   }
 
   /** The commit section: id allocation + manifest + pointer swap, serialized
@@ -479,7 +478,7 @@ object Icelite {
                             nBuckets: Int, schemaJson: String): Seq[SegmentRef] = {
     val base = math.max(1, nBuckets)
     // columns stats-eligible under the persisted schema -> orders numerically
-    val statKinds = statsEligible(DataType.fromJson(schemaJson).asInstanceOf[StructType])
+    val statKinds = statsEligible(structOf(schemaJson))
       .map { case (c, kind) => c -> (kind != StatString) }.toMap
     // Sliced (hash-claim) entries segment BY BASE BUCKET: the grouping is
     // stable across merges, so untouched buckets content-address to the same
@@ -654,7 +653,7 @@ object Icelite {
                 val carry = carryIdx.map(base.files)
                 val merged =
                   if (hot.isEmpty) incoming
-                  else spark.read.parquet(hot.map(_.path): _*)
+                  else scan(spark, base.schemaJson, hot.map(_.path))
                     .join(incoming.select(pkCols.map(qcol): _*).distinct(), pkCols, "left_anti")
                     .withColumn("__h", hcol)
                     .unionByName(incoming)
@@ -670,7 +669,7 @@ object Icelite {
                 // PK-spec / bucket-base change, or unsliced commit() snapshot:
                 // claims computed under a different key are untrustworthy —
                 // full re-slicing rewrite
-                val all = spark.read.parquet(base.filePaths: _*)
+                val all = scan(spark, base.schemaJson, base.filePaths)
                   .join(incoming.select(pkCols.map(qcol): _*).distinct(), pkCols, "left_anti")
                   .withColumn("__h", hcol)
                   .unionByName(incoming)
@@ -773,7 +772,7 @@ object Icelite {
       val rewriting = groups.flatMap(_._1).map(_.path).toSet
       val carried = base.files.filterNot(f => rewriting(f.path))
       val rewritten = groups.map { case (fs, target) =>
-        spark.read.parquet(fs.map(_.path): _*)
+        scan(spark, base.schemaJson, fs.map(_.path))
           .withColumn("__h", hcol)
           .withColumn("__slice", concat_ws("_", lit(target), pmod(col("__h"), lit(target))))
           .drop("__h")
@@ -809,8 +808,7 @@ object Icelite {
 
   /** The rows of an already-parsed snapshot's files. */
   private[table] def readSnapshot(spark: SparkSession, snap: Snapshot): DataFrame =
-    if (snap.files.isEmpty) emptyTyped(spark, snap.schemaJson)
-    else spark.read.parquet(snap.filePaths: _*)
+    scan(spark, snap.schemaJson, snap.filePaths)
 
   /** Roll the table back to a retained snapshot (the Iceberg
     * `rollback_to_snapshot` analog): an O(1) pointer swap under the table
@@ -978,25 +976,17 @@ object Icelite {
     val b = readManifest(table, toId)
     val aPaths = (a.files.toSet -- b.files.toSet).map(_.path).toSeq.sorted
     val bPaths = (b.files.toSet -- a.files.toSet).map(_.path).toSeq.sorted
-    val schemaSource =
-      if (bPaths.nonEmpty) spark.read.parquet(bPaths: _*)
-      else if (aPaths.nonEmpty) spark.read.parquet(aPaths: _*)
-      // identical manifests / empty table: no changed rows, but the result
-      // must still carry the pk + __change schema or a downstream
-      // .filter(col("__change") === ...) breaks only on the no-change case.
-      // The manifest's persisted schema keeps this path METADATA-ONLY (the
-      // "IO is O(changed slices)" contract: zero changed slices, zero file
-      // opens).
-      else emptyTyped(spark, b.schemaJson)
-    val cols = schemaSource.columns.toSeq
-    def side(paths: Seq[String], tag: String): DataFrame = {
-      val df = if (paths.nonEmpty) spark.read.parquet(paths: _*)
-               else emptyTyped(spark, schemaSource.schema.json)
-      df.select(pkCols.map(qcol) ++ Seq(
-        struct(cols.map(qcol): _*).as(s"__row_$tag"),
-        xxhash64(cols.map(qcol): _*).as(s"__h_$tag")): _*)
-    }
-    val joined = side(aPaths, "old").join(side(bPaths, "new"), pkCols, "full_outer")
+    // the result's columns are those of the newer side's changed files (the
+    // older side's when only deletions changed); a side with no changed
+    // files reads as an empty frame of those columns, opening no file
+    val src = if (bPaths.nonEmpty || aPaths.isEmpty) b else a
+    val cols = structOf(src.schemaJson).fieldNames.toSeq
+    def side(snap: Snapshot, paths: Seq[String], tag: String): DataFrame =
+      scan(spark, (if (paths.isEmpty) src else snap).schemaJson, paths)
+        .select(pkCols.map(qcol) ++ Seq(
+          struct(cols.map(qcol): _*).as(s"__row_$tag"),
+          xxhash64(cols.map(qcol): _*).as(s"__h_$tag")): _*)
+    val joined = side(a, aPaths, "old").join(side(b, bPaths, "new"), pkCols, "full_outer")
     val change = when(col("__h_new").isNull, lit("delete"))
       .when(col("__h_old").isNull, lit("insert"))
       .when(col("__h_old") =!= col("__h_new"), lit("update"))
@@ -1019,8 +1009,7 @@ object Icelite {
   def verifyLineage(spark: SparkSession, table: String): Boolean = {
     val id = currentSnapshotId(table).getOrElse(return false)
     val snap = readManifest(table, id)
-    if (snap.files.isEmpty) return snap.rowCount == 0
-    val df = spark.read.parquet(snap.filePaths: _*)
+    val df = scan(spark, snap.schemaJson, snap.filePaths)
     val row = df.agg(
       count(lit(1)).as("n"),
       bit_xor(xxhash64(df.columns.map(qcol): _*)).as("x")).head()

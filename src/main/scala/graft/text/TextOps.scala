@@ -318,14 +318,6 @@ object TextOps {
     (blocks * width, width)
   }
 
-  /** [[simhashPairs]] with geometry derived from the corpus size (one cheap
-    * count — the documented driver-steering hybrid, same pattern as
-    * [[graft.ops.KnnJoin.pickLevel]]). */
-  def simhashPairsAuto(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val (bits, _) = simhashGeometry(docs.count(), maxHamming)
-    simhashPairs(docs, maxHamming, bits)
-  }
-
   /** SimHash near-dup pairs at hamming distance ≤ `maxHamming` via the
     * standard pigeonhole multi-index: split the signature into
     * `maxHamming + 1` bit-blocks — two signatures within the distance MUST
@@ -336,7 +328,7 @@ object TextOps {
     *
     * Scale: block selectivity is 2^(bits/blocks) buckets — 32 768 per block
     * at the default 60-bit signature and d=3 (expected occupancy ≤ 50 up to
-    * ~1.6M docs; `bits` via [[simhashGeometry]]/[[simhashPairsAuto]] tracks
+    * ~1.6M docs; `bits` via [[simhashGeometry]] tracks
     * log2 N below that). The hash entropy budget caps the derivation at 60
     * bits; past ~10^8 docs per slice, near-dup extraction runs on
     * [[minhashPairs]] / banded embedding LSH.

@@ -74,7 +74,7 @@ class IceliteSpec extends SparkSpec {
     assert(diff1 === 0)
     // "killed" run: only the first stage committed
     val pipe = new Pipeline(spark, resumeRoot)
-    pipe.stage("pages", s"pages:$Sf") { graft.pages.Pages.fromDocuments(spark, Sf) }
+    pipe.stage("pages", IndexJob.inputFingerprint(Sf)) { graft.pages.Pages.fromDocuments(spark, Sf) }
     // resume: full run on the partially-complete root
     val (n2, diff2) = IndexJob.run(spark, Sf, resumeRoot)
     assert(diff2 === 0)
