@@ -944,7 +944,7 @@ object SparkEntry {
     }),
 
     // --- skew: salted hot-key join == plain join (semantics oracle; the
-    // timing evidence lives in SkewBench / BENCH.md). The two hot geocells
+    // timing evidence lives in BENCH.md). The two hot geocells
     // hold 20% of rows by construction (graft.pages.Pages scaladoc).
     "q_salted_join" -> ((s, dir) => {
       val pages = Pages.fromLineitem(s, dir)

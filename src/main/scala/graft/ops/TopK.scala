@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -35,10 +35,19 @@ object TopK {
     private def worse(d1: Long, i1: Long, d2: Long, i2: Long): Boolean =
       d1 > d2 || (d1 == d2 && i1 > i2)
 
-    override def reduce(b: Array[Long], e: (Long, Long)): Array[Long] = {
+    private def holds(b: Array[Long], d: Long, id: Long): Boolean = {
+      var i = 0
+      while (i < b.length && (b(i) != d || b(i + 1) != id)) i += 2
+      i < b.length
+    }
+
+    // an entry already held (from a repeated query or point row) is not
+    // added twice
+    private def insert(b: Array[Long], d: Long, id: Long): Array[Long] = {
       if (b.length < 2 * k) {
+        if (holds(b, d, id)) return b
         val nb = java.util.Arrays.copyOf(b, b.length + 2)
-        nb(b.length) = e._1; nb(b.length + 1) = e._2
+        nb(b.length) = d; nb(b.length + 1) = id
         nb
       } else {
         // replace the worst pair if the new entry beats it
@@ -48,15 +57,20 @@ object TopK {
           if (worse(b(i), b(i + 1), b(wi), b(wi + 1))) wi = i
           i += 2
         }
-        if (worse(b(wi), b(wi + 1), e._1, e._2)) { b(wi) = e._1; b(wi + 1) = e._2 }
+        if (worse(b(wi), b(wi + 1), d, id) && !holds(b, d, id)) { b(wi) = d; b(wi + 1) = id }
         b
       }
     }
 
+    // distances are squares: a negative one marks a group member without a
+    // candidate (an outer join's unmatched row), which adds no entry
+    override def reduce(b: Array[Long], e: (Long, Long)): Array[Long] =
+      if (e._1 < 0) b else insert(b, e._1, e._2)
+
     override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
       var r = a
       var i = 0
-      while (i < b.length) { r = reduce(r, (b(i), b(i + 1))); i += 2 }
+      while (i < b.length) { r = insert(r, b(i), b(i + 1)); i += 2 }
       r
     }
 
@@ -67,26 +81,24 @@ object TopK {
     override def outputEncoder: Encoder[Seq[Entry]] = outEnc
   }
 
-  /** Top-k of `cands` (query_id, neighbor_id, d2) per query; output
-    * (query_id, neighbor_id, d2, rn) identical to the window form
-    * `row_number over (partition by query_id order by d2, neighbor_id) <= k`.
+  /** The best k distinct (d2, neighbor_id) entries of `cands` per group of
+    * `keys`, as column `__topk`: array<struct<_1: d2, _2: neighbor_id>>,
+    * sorted ascending (the window order `d2, neighbor_id`). The one binding of
+    * [[TopKAgg]]: an untyped UDAF keeps rows in Tungsten format end to end
+    * (a typed groupByKey converts every candidate row to Scala tuples).
     */
-  def topK(spark: SparkSession, cands: DataFrame, k: Int): DataFrame = {
+  def best(spark: SparkSession, cands: DataFrame, keys: Seq[String], k: Int): DataFrame = {
     import spark.implicits._
-    // untyped UDAF binding of the same aggregator (round 6): the previous
-    // typed groupByKey form deserialized every candidate row to Scala tuples
-    // through two AppendColumns lambdas and re-serialized the flatMap output
-    // — pure object-boundary overhead on the hottest aggregation; the UDAF
-    // form keeps rows in Tungsten format end to end and emits ranks with a
-    // codegen posexplode. Identical output (finish() returns the entries
-    // sorted, so pos + 1 IS the row_number).
     val f = udaf(new TopKAgg(k))
-    cands.groupBy("query_id")
-      .agg(f(col("d2"), col("neighbor_id")).as("__topk"))
-      .select(col("query_id"), posexplode(col("__topk")))
-      .select(col("query_id"),
-        col("col._2").as("neighbor_id"),
-        col("col._1").as("d2"),
-        (col("pos") + 1).as("rn"))
+    cands.groupBy(keys.map(col): _*).agg(f(col("d2"), col("neighbor_id")).as("__topk"))
   }
+
+  /** One row per entry of the sorted `entries` array: `keys`, neighbor_id,
+    * d2 and its rank rn (pos + 1). Over [[best]] grouped by query_id this is
+    * the window form `row_number over (partition by query_id order by d2,
+    * neighbor_id) <= k` over the distinct candidate rows. */
+  def ranked(groups: DataFrame, keys: Seq[String], entries: Column): DataFrame =
+    groups.select(keys.map(col) :+ posexplode(entries): _*)
+      .select(keys.map(col) ++ Seq(col("col._2").as("neighbor_id"), col("col._1").as("d2"),
+        (col("pos") + 1).as("rn")): _*)
 }

@@ -256,7 +256,8 @@ object CellExpressions {
       ArrayType, DoubleType, DoubleType)(expression(cands), expression(px), expression(py)))
 
   /** Ring slab (Chebyshev cell distance in (lo, hi]) as array<long> — the
-    * per-round explode source of [[graft.ops.KnnJoin.knn]]. */
+    * explode source of each [[graft.ops.KnnJoin.knn]] ring pass, with a
+    * per-row lo and hi; empty when hi ≤ lo. */
   def ring_range(cell: Column, lo: Column, hi: Column): Column =
     column(call("ringRange", ArrayType(LongType, containsNull = false),
       LongType, IntegerType, IntegerType)(expression(cell), expression(lo), expression(hi)))

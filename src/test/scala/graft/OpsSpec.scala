@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import graft.geom.Geom
 import graft.ops.{Canonical, KnnJoin, PipJoin}
 import graft.pages.Pages
@@ -212,37 +212,44 @@ class OpsSpec extends SparkSpec {
     assert(m("skip_nomatch").asInstanceOf[Long] > 0, "fixture must exercise 0-match")
   }
 
-  test("kNN join equals brute force incl. lon wrap (k=3)") {
-    // 400 points; includes near-antimeridian pairs via the modular spread
-    val n = 400
-    val ptsSeq = points(n).map { case (i, lon, lat) =>
-      (i, math.round(lon * 1000), math.round(lat * 1000)) }
-    val pts = ptsSeq.toDF("id", "lonm", "latm")
-    val got = KnnJoin.knn(spark, pts, pts, "id", "id", k = 3, level = 4, maxRounds = 20)
-      .select("query_id", "neighbor_id", "dist2", "rn")
-      .as[(Long, Long, Long, Int)].collect().toSet
-    def d2(a: (Long, Long, Long), b: (Long, Long, Long)): Long = {
-      val adlon = math.abs(a._2 - b._2)
-      val dlon = math.min(adlon, 360000 - adlon)
-      val dlat = a._3 - b._3
-      dlon * dlon + dlat * dlat
-    }
-    val expected = (for (q <- ptsSeq) yield {
-      ptsSeq.filter(_._1 != q._1)
+  private def d2(a: (Long, Long, Long), b: (Long, Long, Long)): Long = {
+    val adlon = math.abs(a._2 - b._2)
+    val dlon = math.min(adlon, 360000 - adlon)
+    val dlat = a._3 - b._3
+    dlon * dlon + dlat * dlat
+  }
+
+  /** Brute-force kNN of (id, lonm, latm) queries: the k nearest points by
+    * (dist2, id), self matches excluded only when `self`. */
+  private def bruteKnn(qs: Seq[(Long, Long, Long)], ps: Seq[(Long, Long, Long)], k: Int,
+                       self: Boolean): Set[(Long, Long, Long, Int)] =
+    qs.flatMap { q =>
+      ps.filter(p => !self || p._1 != q._1)
         .map(p => (p._1, d2(q, p)))
         .sortBy(t => (t._2, t._1))
-        .take(3).zipWithIndex
+        .take(k).zipWithIndex
         .map { case ((nid, d), idx) => (q._1, nid, d, idx + 1) }
-    }).flatten.toSet
-    assert(got === expected)
+    }.toSet
+
+  private def knnRows(df: DataFrame): Array[(Long, Long, Long, Int)] =
+    df.select("query_id", "neighbor_id", "dist2", "rn").as[(Long, Long, Long, Int)].collect()
+
+  private def pointsM(n: Int): Seq[(Long, Long, Long)] =
+    points(n).map { case (i, lon, lat) => (i, math.round(lon * 1000), math.round(lat * 1000)) }
+
+  test("kNN join equals brute force incl. lon wrap (k=3)") {
+    // 400 points; includes near-antimeridian pairs via the modular spread
+    val ptsSeq = pointsM(400)
+    val pts = ptsSeq.toDF("id", "lonm", "latm")
+    val got = knnRows(KnnJoin.knn(spark, pts, pts, "id", "id", k = 3, level = 4)).toSet
+    assert(got === bruteKnn(ptsSeq, ptsSeq, 3, self = true))
   }
 
   test("kNN ring escalation at a small level: no wrapped-cell duplicates") {
-    // level=3 -> 8 cells per lon axis; bruteThreshold=0 disables the brute
-    // short-circuit so rounds 2+ actually run up to the radius cap. Sparse
-    // points near the antimeridian force multi-round escalation — before the
-    // radius cap, wrapped ring cells re-joined the same candidate and
-    // row_number assigned two ranks to one neighbor.
+    // level=3 -> 8 cells per lon axis, radius cap 3: sparse points near the
+    // antimeridian leave queries unfinished after pass 1, so passes 2-3 probe
+    // up to the cap. Before the radius cap, wrapped ring cells re-joined the
+    // same candidate and the top-k assigned two ranks to one neighbor.
     val ptsSeq = (0L until 40L).map { i =>
       val h1 = (i * 48271 + 11) % 2147483647L
       val h2 = (h1 * 48271 + 17) % 2147483647L
@@ -251,35 +258,74 @@ class OpsSpec extends SparkSpec {
       (i, lonm, h2 % 170000L - 85000L)
     }
     val pts = ptsSeq.toDF("id", "lonm", "latm")
-    val got = KnnJoin.knn(spark, pts, pts, "id", "id", k = 3, level = 3,
-        maxRounds = 6, bruteThreshold = 0L)
-      .select("query_id", "neighbor_id", "dist2", "rn")
-      .as[(Long, Long, Long, Int)].collect()
+    val got = knnRows(KnnJoin.knn(spark, pts, pts, "id", "id", k = 3, level = 3))
     // no (query, neighbor) pair may appear twice
     assert(got.length === got.map(t => (t._1, t._2)).distinct.length)
-    def d2(a: (Long, Long, Long), b: (Long, Long, Long)): Long = {
-      val adlon = math.abs(a._2 - b._2)
-      val dlon = math.min(adlon, 360000 - adlon)
-      val dlat = a._3 - b._3
-      dlon * dlon + dlat * dlat
-    }
-    val expected = (for (q <- ptsSeq) yield {
-      ptsSeq.filter(_._1 != q._1)
-        .map(p => (p._1, d2(q, p)))
-        .sortBy(t => (t._2, t._1))
-        .take(3).zipWithIndex
-        .map { case ((nid, d), idx) => (q._1, nid, d, idx + 1) }
-    }).flatten.toSet
-    assert(got.toSet === expected)
+    assert(got.toSet === bruteKnn(ptsSeq, ptsSeq, 3, self = true))
   }
 
   test("kNN non-self join keeps a neighbor whose id equals the query id") {
     val qs = Seq((1L, 10000L, 10000L), (2L, 20000L, 20000L)).toDF("id", "lonm", "latm")
     val ps = Seq((1L, 10100L, 10000L), (9L, 10200L, 10000L)).toDF("id", "lonm", "latm")
-    val got = KnnJoin.knn(spark, qs, ps, "id", "id", k = 2, level = 4, maxRounds = 10)
+    val got = KnnJoin.knn(spark, qs, ps, "id", "id", k = 2, level = 4)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     // query 1 must keep point 1 (distinct datasets — not a self match)
     assert(got.contains((1L, 1L)) && got.contains((1L, 9L)))
+  }
+
+  test("kNN with k >= |P| ends every query in the brute pass") {
+    val ptsSeq = pointsM(6)
+    val pts = ptsSeq.toDF("id", "lonm", "latm")
+    val got = knnRows(KnnJoin.knn(spark, pts, pts, "id", "id", k = 8, level = 4))
+    assert(got.toSet === bruteKnn(ptsSeq, ptsSeq, 8, self = true))
+    assert(got.length === 6 * 5)
+  }
+
+  test("kNN keeps a query with no point in its pass-1 disk") {
+    // level 6: the pass-1 disk reaches ~3 degrees; every query is farther
+    // than that from the cluster, some within the pass-2/3 radii, some not
+    val ps = (0L until 50L).map(i => (i, -120000L + (i * 37) % 900, -40000L + (i * 53) % 700))
+    val qs = Seq((100L, -112000L, -40000L), (101L, -120000L, -25000L), (102L, 0L, 0L),
+      (103L, 60000L, 70000L))
+    val got = knnRows(KnnJoin.knn(spark, qs.toDF("id", "lonm", "latm"),
+      ps.toDF("id", "lonm", "latm"), "id", "id", k = 2, level = 6))
+    assert(got.toSet === bruteKnn(qs, ps, 2, self = false))
+    assert(got.length === qs.length * 2)
+  }
+
+  test("kNN ranks co-located points by id and counts a repeated row once") {
+    // 30 points at one location plus a spread of near ones: ties at distance
+    // 0. Five rows repeat exactly (same id): each is one query, and one
+    // neighbor of every other query.
+    val dupes = (0L until 30L).map(i => (i, 15000L, 45000L))
+    val near = (30L until 60L).map(i => (i, 15000L + (i * 31) % 400, 45000L + (i * 17) % 300))
+    val ptsSeq = dupes ++ near ++ near.take(5)
+    val pts = ptsSeq.toDF("id", "lonm", "latm")
+    val got = knnRows(KnnJoin.knn(spark, pts, pts, "id", "id", k = 4, level = 8))
+    assert(got.length === 60 * 4)
+    assert(got.toSet === bruteKnn(ptsSeq.distinct, ptsSeq.distinct, 4, self = true))
+    val far = Seq((99L, 15000L + 5, 45000L))
+    val fromFar = knnRows(KnnJoin.knn(spark, far.toDF("id", "lonm", "latm"), pts, "id", "id",
+      k = 40, level = 8))
+    assert(fromFar.toSeq.sortBy(_._4) ===
+      bruteKnn(far, ptsSeq.distinct, 40, self = false).toSeq.sortBy(_._4))
+  }
+
+  test("kNN finishes a query whose k-th distance equals the searched radius exactly") {
+    // level 4: cellH = 11250 mdeg. Points 1 and 2 sit exactly one cell
+    // height north and south of the query (d2 = 11250², a tie broken on id),
+    // point 0 just beyond; with k = 2 the k-th distance equals the pass-1
+    // bound (1·cellH)²
+    assert((180000L >> 4) === 11250L)
+    val qs = Seq((7L, 5000L, 5000L))
+    val ps = Seq((0L, 16251L, 5000L), (1L, 5000L, 16250L), (2L, 5000L, -6250L), (3L, 90000L, 5000L))
+    val expected = bruteKnn(qs, ps, 2, self = false)
+    assert(expected.map(_._3) === Set(11250L * 11250L))
+    for (k <- Seq(1, 2)) {
+      val got = knnRows(KnnJoin.knn(spark, qs.toDF("id", "lonm", "latm"),
+        ps.toDF("id", "lonm", "latm"), "id", "id", k = k, level = 4))
+      assert(got.toSet === bruteKnn(qs, ps, k, self = false), s"k=$k")
+    }
   }
 
   test("pickLevel chooses a finer level for the skewed page cloud, and kNN stays exact") {
@@ -287,12 +333,11 @@ class OpsSpec extends SparkSpec {
       .select(col("page_id").as("id"), col("lonm"), col("latm"))
     // 20% of ~60k points sit in two 1-degree cells; a coarse level would put
     // thousands of points in one cell
-    val level = KnnJoin.pickLevel(pts, targetMaxPerCell = 256, sampleFraction = 0.2)
+    val level = KnnJoin.pickLevel(pts)
     assert(level >= 8, s"skewed cloud must push the level finer, got $level")
     // the picked level still yields exact results on a small subset
     val sub = pts.filter(col("id") < 2000).localCheckpoint()
-    val got = KnnJoin.knn(spark, sub, sub, "id", "id", k = 2, level = level,
-        maxRounds = 12)
+    val got = KnnJoin.knn(spark, sub, sub, "id", "id", k = 2, level = level)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     val rows = sub.select("id", "lonm", "latm").as[(Long, Long, Long)].collect()
     val distinctIds = rows.map(_._1).distinct.length
@@ -300,11 +345,10 @@ class OpsSpec extends SparkSpec {
   }
 
   test("pickLevel falls back to the coarsest level on an empty sample") {
-    val tiny = Seq((1L, 1000L, 1000L), (2L, 2000L, 2000L)).toDF("id", "lonm", "latm")
-    // sample fraction so small the sample is (almost surely) empty — must not
-    // NPE on the NULL max aggregate, must return the first candidate
-    val level = KnnJoin.pickLevel(tiny, sampleFraction = 1e-9)
-    assert(level === 2)
+    // empty input: must not NPE on the absent aggregates, must return the
+    // coarsest level
+    val empty = Seq((1L, 1000L, 1000L)).toDF("id", "lonm", "latm").where(lit(false))
+    assert(KnnJoin.pickLevel(empty) === 2)
   }
 
   test("pickLevel escapes past the fixed candidate ceiling when every level <= 14 is ineligible") {
@@ -312,13 +356,13 @@ class OpsSpec extends SparkSpec {
     // sizes: level 14 ~ 11 mdeg (whole cluster in ~1 cell, occ ~ 24k),
     // level 16 ~ 2.75 mdeg (up to 3x3 grid positions/cell -> occ ~ 1530 >
     // 1024), level 18 ~ 0.69 mdeg (< 1 mdeg quantum -> occ = 170 dupes,
-    // eligible). The pre-round-4 ladder stopped at 14 and fell back to an
-    // ineligible level — the quadratic hot-cell case at the design point.
+    // eligible). A ladder that stopped at 14 fell back to an ineligible
+    // level — the quadratic hot-cell case at the design point.
     val dense = for {
       x <- 0 until 12; y <- 0 until 12; c <- 0 until 170
     } yield ((x * 12 + y) * 170L + c, 10000L + x, 20000L + y)
     val pts = dense.toDF("id", "lonm", "latm")
-    val level = KnnJoin.pickLevel(pts, sampleFraction = 1.0)
+    val level = KnnJoin.pickLevel(pts)
     assert(level > 14, s"pick must escape the fixed ladder, got $level")
     assert(level <= graft.cells.Cells.MaxLevel)
   }
@@ -338,9 +382,50 @@ class OpsSpec extends SparkSpec {
       (i, 12000L + h, 51000L + (h * 7) % 997)
     }
     val sparse = (200L until 210L).map(i => (i, -170000L + i * 1000, -80000L + i * 500))
-    val all = (hot ++ sparse).toDF("id", "lonm", "latm")
-    val got = KnnJoin.knn(spark, all, all, "id", "id", k = 2, level = 6, maxRounds = 40)
-    assert(got.count() === 210 * 2)
+    val ptsSeq = hot ++ sparse
+    val all = ptsSeq.toDF("id", "lonm", "latm")
+    val got = knnRows(KnnJoin.knn(spark, all, all, "id", "id", k = 2, level = 6))
+    assert(got.length === 210 * 2)
+    assert(got.toSet === bruteKnn(ptsSeq, ptsSeq, 2, self = true))
+  }
+
+  test("building the kNN plan launches no Spark job, knnAuto only its level pick's") {
+    val qs = pointsM(200).toDF("id", "lonm", "latm")
+    val ps = pointsM(3000).toDF("id", "lonm", "latm")
+    assert(jobsDuring(KnnJoin.knn(spark, qs, ps, "id", "id", k = 3, level = 4)) === 0)
+    // one collect; AQE runs each of its map stages as a job of its own
+    val auto = jobsDuring(KnnJoin.knnAuto(spark, qs, ps, "id", "id", k = 3))
+    assert(auto >= 1 && auto <= 3, s"knnAuto launched $auto jobs")
+  }
+
+  test("kNN results do not depend on partitioning, AQE, join strategy or codegen") {
+    // the skewed page cloud one scale factor up from Sf
+    val sub = Pages.fromLineitem(spark, s"${new java.io.File(Sf).getParent}/sf0.01")
+      .select(col("page_id").as("id"), col("lonm"), col("latm"))
+      .filter(col("id") < 2000)
+    // order-insensitive: the xxhash64 sum of every row, and the row count
+    def hash(df: DataFrame): Row =
+      df.agg(sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")), count(lit(1))).head()
+    def run(): (Row, Row) = (hash(SparkEntry.queries("q_knn")(spark, Sf)),
+      hash(KnnJoin.knnAuto(spark, sub, sub, "id", "id", k = 5)))
+    val base = run()
+    assert(base._1.getLong(1) > 0 && base._2.getLong(1) > 0)
+    val confs = Seq(
+      Seq("spark.sql.shuffle.partitions" -> "1"),
+      Seq("spark.sql.shuffle.partitions" -> "7"),
+      Seq("spark.sql.adaptive.enabled" -> "false"),
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+      Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for (conf <- confs) {
+      val saved = conf.map { case (key, _) => key -> spark.conf.getOption(key) }
+      val got =
+        try { conf.foreach { case (key, v) => spark.conf.set(key, v) }; run() }
+        finally saved.foreach {
+          case (key, Some(v)) => spark.conf.set(key, v)
+          case (key, None) => spark.conf.unset(key)
+        }
+      assert(got === base, s"under $conf")
+    }
   }
 
   test("canonical scene: zero-padded verkey makes string max = semver max (J3)") {

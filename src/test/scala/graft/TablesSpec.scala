@@ -1,8 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.LinkedBlockingQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import graft.jobs.IndexJob
@@ -17,24 +15,6 @@ class TablesSpec extends SparkSpec {
 
   private val fixtureTables = Seq("customer", "documents", "embeddings", "events",
     "lineitem", "nation", "orders", "part", "region", "supplier")
-
-  /** Spark jobs started while `body` runs. Listener events arrive in order,
-    * so once a sentinel job's start is seen every earlier start has been. */
-  private def jobsDuring(body: => Unit): Int = {
-    val groups = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.put(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup("tables-spec-sentinel", "sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      Iterator.continually(groups.take()).takeWhile(_ != "tables-spec-sentinel").size
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("every fixture table reads with the schema inference would find") {
     fixtureTables.foreach { t =>
