@@ -6,9 +6,12 @@ Every `graft.Bench` invocation writes one raw artifact under bench_runs/
 This script derives the round's headline numbers FROM those artifacts so the
 composite is reproducible from the repo alone:
 
-  - per-query minimum across every timed pass of every run,
+  - per-query minimum across every timed pass of every run, leaving out a
+    query's time in a pass that lists it as `failed` (artifacts written
+    before Bench recorded failures list none),
   - the min-composite total (sum of per-query minima),
-  - per-run context (timed totals, load ranges) for host-noise adjudication.
+  - per-run context (timed totals, failed queries, load ranges) for
+    host-noise adjudication.
 
 Usage: scripts/bench_composite.py [bench_runs_dir] [--baseline BENCH_rN.json]
        scripts/bench_composite.py [bench_runs_dir] --scaling
@@ -105,12 +108,15 @@ def main():
             "path": run["_path"],
             "sf": run.get("sf"),
             "timed_totals": [round(p["total"], 3) for p in timed],
+            "failed": sorted({q for p in timed for q in p.get("failed", [])}),
             "load_min": min(loads) if loads else None,
             "load_max": max(loads) if loads else None,
         })
         for p in timed:
+            failed = set(p.get("failed", []))
             for q, t in p["queries"].items():
-                best[q] = min(best.get(q, float("inf")), t)
+                if q not in failed:  # a fast failure is not a minimum
+                    best[q] = min(best.get(q, float("inf")), t)
 
     out = {
         "n_runs": len(runs),

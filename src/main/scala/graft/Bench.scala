@@ -21,7 +21,9 @@ import org.apache.spark.sql.SparkSession
   * EVIDENCE PROTOCOL (round 5): every invocation also writes a raw artifact
   * — one JSON file under `bench_runs/` (override: SPARK_GRAFT_BENCH_RUNS)
   * holding EVERY pass (warmup included) with per-query seconds and the
-  * host's /proc/loadavg sampled before and after each pass. Multi-pass
+  * host's /proc/loadavg sampled before and after each pass, and the names
+  * of the queries that failed in it (`failed`; their times are still in
+  * `queries`, and the stdout line still counts them). Multi-pass
   * min-composites are then computed by `scripts/bench_composite.py` over the
   * committed artifacts instead of by-hand aggregation, so a round's headline
   * is reproducible from the repo alone and host-noise claims are checkable
@@ -43,19 +45,21 @@ object Bench {
       try Files.readString(Paths.get("/proc/loadavg")).split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
 
-    case class Pass(kind: String, queries: Seq[(String, Double)],
+    case class Pass(kind: String, queries: Seq[(String, Double)], failed: Seq[String],
                     loadBefore: Double, loadAfter: Double)
     def runPass(kind: String): Pass = {
       val lb = loadAvg()
+      val failed = Seq.newBuilder[String]
       val qs = SparkEntry.queries.toSeq.map { case (name, fn) =>
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
         }
         name -> (System.nanoTime() - t0) / 1e9
       }
-      Pass(kind, qs, lb, loadAvg())
+      Pass(kind, qs, failed.result(), lb, loadAvg())
     }
 
     val passes = runPass("warmup") +: (1 to nPasses).map(_ => runPass("timed"))
@@ -65,6 +69,7 @@ object Bench {
     def passJson(p: Pass): String =
       s"""{"kind":"${p.kind}","total":${p.queries.map(_._2).sum},""" +
         s""""load_before":${p.loadBefore},"load_after":${p.loadAfter},""" +
+        s""""failed":${p.failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""queries":${qJson(p.queries)}}"""
 
     val epochMs = System.currentTimeMillis()

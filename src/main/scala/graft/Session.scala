@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session factory with scale-appropriate defaults.
   *
@@ -10,16 +11,25 @@ import org.apache.spark.sql.SparkSession
   */
 object Session {
 
-  /** Free the block-cache of a localCheckpoint()ed DataFrame. Dataset
-    * .unpersist only drops CacheManager entries, not the checkpoint RDD's
-    * blocks — long-running drivers that checkpoint in a loop (merge batches,
-    * level probes) otherwise accumulate blocks until the RDD is GC'd.
+  /** Run `body` on a pinned copy of `df` (an eager `localCheckpoint`) and
+    * free the pin's blocks when `body` returns or throws. The pinned frame
+    * must not escape `body`: a plan that still reads it fails once freed.
     */
-  def freeLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+  def pinned[T](df: DataFrame)(body: DataFrame => T): T = {
+    val pin = df.localCheckpoint()
+    try body(pin) finally release(pin)
+  }
+
+  /** Free the blocks of a locally checkpointed frame. `Dataset.unpersist`
+    * only drops CacheManager entries, not the checkpoint RDD's blocks, which
+    * otherwise stay until the RDD is garbage-collected.
+    */
+  private[graft] def release(pin: DataFrame): Unit =
+    pin.queryExecution.analyzed match {
+      case l: LogicalRDD => l.rdd.unpersist(false)
       case _ => ()
     }
+
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()

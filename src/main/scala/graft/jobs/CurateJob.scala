@@ -1,8 +1,9 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.sources.Tables
 import graft.table.Icelite
 import graft.text.TextOps
@@ -44,24 +45,20 @@ object CurateJob {
     val scrubbed = TextOps.piiScrub(docs)
       .select(col("doc_id"), col("clean_text"))
 
-    // Each stage's surviving IDS are checkpointed: an id frame is tiny
-    // relative to the corpus, and without the pin every downstream action
-    // (the next stage's semi-join, the commit, each metrics count) would
-    // re-run the whole selection pipeline — corpusSelect alone carries the
+    // Each stage's surviving IDS are pinned: an id frame is tiny relative
+    // to the corpus, and without the pin every downstream action (the next
+    // stage's semi-join, the commit, each metrics count) would re-run the
+    // whole selection pipeline — corpusSelect alone carries the
     // minhash/cluster/boilerplate shuffles — from the scan up.
     // 2-3. survivors ∩ sample
-    val selectedIds = TextOps.corpusSelect(docs).select("doc_id").localCheckpoint()
-    try {
+    Session.pinned(TextOps.corpusSelect(docs).select("doc_id")) { selectedIds =>
       val sampledIds = TextOps.sampleMix(docs, rates, defaultRate).select("doc_id")
-      val mixedIds = selectedIds.join(sampledIds, Seq("doc_id"), "left_semi")
-        .localCheckpoint()
-      try {
+      Session.pinned(selectedIds.join(sampledIds, Seq("doc_id"), "left_semi")) { mixedIds =>
         // 4. budget fill over the mixed set (deterministic doc_id order)
         val mixedDocs = docs.select(col("doc_id"), col("lang"), col("text"))
           .join(mixedIds, Seq("doc_id"), "left_semi")
-        val budgetedIds = TextOps.tokenBudgetSharded(
-          mixedDocs, budgetPerShard, nShards).select("doc_id").localCheckpoint()
-        try {
+        Session.pinned(TextOps.tokenBudgetSharded(
+            mixedDocs, budgetPerShard, nShards).select("doc_id")) { budgetedIds =>
           // 5. chunk the SCRUBBED text of the budgeted survivors
           val toChunk = scrubbed.join(budgetedIds, Seq("doc_id"), "left_semi")
             .select(col("doc_id"), col("clean_text").as("text"))
@@ -73,8 +70,8 @@ object CurateJob {
             .agg(coalesce(sum(col("n_chunk_tokens")), lit(0L))).head().getLong(0)
           Result(docs.count(), selectedIds.count(), mixedIds.count(),
             budgetedIds.count(), snap.rowCount, chunkTokens, snap.id)
-        } finally graft.Session.freeLocalCheckpoint(budgetedIds)
-      } finally graft.Session.freeLocalCheckpoint(mixedIds)
-    } finally graft.Session.freeLocalCheckpoint(selectedIds)
+        }
+      }
+    }
   }
 }

@@ -127,23 +127,21 @@ object Main {
           // batches' singleton survivors are never dropped by a later run.
           // A re-run converges (idempotent pairs, idempotent merges).
           val docs = Tables.read(spark, sfDir, "documents")
-          val pairs = graft.text.TextOps.incrementalDedup(
-            spark, docs, s"$outRoot/dedup_sigs")
-          try {
+          graft.text.TextOps.incrementalDedup(spark, docs, s"$outRoot/dedup_sigs") { pairs =>
             Icelite.merge(spark, pairs, s"$outRoot/dedup_pairs",
               Seq("doc_a", "doc_b"), s"dedup-pairs:$sfDir")
-            Icelite.merge(spark,
-              graft.text.TextOps.qualityScore(docs)
-                .select(col("doc_id"), col("quality_score")),
-              s"$outRoot/dedup_quality", Seq("doc_id"), s"dedup-quality:$sfDir")
-            val allPairs = Icelite.read(spark, s"$outRoot/dedup_pairs")
-            val scored = Icelite.read(spark, s"$outRoot/dedup_quality")
-            val keep = graft.text.TextOps.keepBestScored(scored, allPairs)
-            val snap = Icelite.commit(spark, keep, s"$outRoot/dedup_keep", s"dedup:$sfDir")
-            val nDocs = scored.count() // corpus-so-far, not just this batch
-            println(s"""{"job":"dedup","docs":$nDocs,"clusters":${snap.rowCount},""" +
-              s""""dropped":${nDocs - snap.rowCount}}""")
-          } finally graft.Session.freeLocalCheckpoint(pairs)
+          }
+          Icelite.merge(spark,
+            graft.text.TextOps.qualityScore(docs)
+              .select(col("doc_id"), col("quality_score")),
+            s"$outRoot/dedup_quality", Seq("doc_id"), s"dedup-quality:$sfDir")
+          val allPairs = Icelite.read(spark, s"$outRoot/dedup_pairs")
+          val scored = Icelite.read(spark, s"$outRoot/dedup_quality")
+          val keep = graft.text.TextOps.keepBestScored(scored, allPairs)
+          val snap = Icelite.commit(spark, keep, s"$outRoot/dedup_keep", s"dedup:$sfDir")
+          val nDocs = scored.count() // corpus-so-far, not just this batch
+          println(s"""{"job":"dedup","docs":$nDocs,"clusters":${snap.rowCount},""" +
+            s""""dropped":${nDocs - snap.rowCount}}""")
         case "annindex" =>
           // ANN index build (one-time O(corpus)) + partition-pruned serving:
           // IVF assignments committed to Icelite CELL-CLUSTERED (repartition

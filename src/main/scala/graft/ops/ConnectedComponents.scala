@@ -134,6 +134,9 @@ object ConnectedComponents {
         return spark.createDataset(out).toDF("node", "component")
       }
     }
+    // raw pins, not Session.pinned: round i is freed only after round i+1
+    // is pinned (the next round reads it), an overlap nested scopes cannot
+    // express, and the terminal round may outlive this call (see below)
     var edges = edges0.localCheckpoint()
     // fixed-point check on a canonical multiset digest: one cheap aggregate
     // instead of a two-way anti-join per round. A digest collision could only
@@ -154,14 +157,14 @@ object ConnectedComponents {
     var prevDigest = digest(edges) // carried forward: one digest action/round
     while (!converged && rounds < MaxRounds) {
       rounds += 1
-      val next = smallStar(largeStar(edges)).localCheckpoint()
+      val next = smallStar(largeStar(edges)).localCheckpoint() // raw: see above
       val nextDigest = digest(next)
       converged = nextDigest == prevDigest
       prevDigest = nextDigest
       // intermediate rounds' blocks are freed eagerly; the terminal edge
       // list stays pinned because the returned plan reads it (and it is
       // small: at most one edge per non-root node)
-      Session.freeLocalCheckpoint(edges)
+      Session.release(edges)
       edges = next
     }
     require(converged, s"connected components did not converge in $MaxRounds rounds")
@@ -180,7 +183,7 @@ object ConnectedComponents {
       val spark = pairs.sparkSession
       import spark.implicits._
       val es = edges.as[(Long, Long)].collect()
-      Session.freeLocalCheckpoint(edges)
+      Session.release(edges)
       // leaf edges are (leaf > root) with unique leaves, so only the ROOT
       // self-labels need dedup — primitive sort + in-place unique, no boxed
       // tuple hash set

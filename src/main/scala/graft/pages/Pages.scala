@@ -121,7 +121,14 @@ object Pages {
   def fromDocuments(spark: SparkSession, sfDir: String): DataFrame =
     pagesFromDocuments(Tables.read(spark, sfDir, "documents"))
 
-  /** Scaled page set from lineitem: (page_id, lonm, latm, lon, lat). */
+  /** Scaled page set from lineitem: (page_id, lonm, latm, lon, lat).
+    * `page_id` (l_orderkey·10 + l_linenumber) is not a key on the fixtures:
+    * their lineitem repeats (l_orderkey, l_linenumber) pairs, so sf0.01 has
+    * 60,000 pages and 45,832 distinct ids (sf0.001: 6,000 and 4,599). A
+    * repeated id is a repeated row, since the coordinates derive from the id
+    * alone; a join or kNN on `page_id` sees the copies as one point or as
+    * many, depending on the operator.
+    */
   def fromLineitem(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.read(spark, sfDir, "lineitem")
       .select((col("l_orderkey") * 10 + col("l_linenumber")).cast("long").as("page_id"))

@@ -82,14 +82,12 @@ object Ann {
     * standard LSH trade — more planes ⇒ higher precision, lower recall).
     */
   def lshPairs(vecs: DataFrame, threshold: Double): DataFrame = {
+    // both sides alias one plan, so a shuffle join reuses its exchange
     val all = lshBuckets(vecs)
-    val a = all.select(col("bucket"), col("vec_id").as("id_a"),
-      col("em").as("em_a"), col("n2").as("n2_a"))
-    val b = all.select(col("bucket"), col("vec_id").as("id_b"),
-      col("em").as("em_b"), col("n2").as("n2_b"))
-    a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosine(doti(col("em_a"), col("em_b")), col("n2_a"), col("n2_b")).as("cos_sim"))
+    all.as("a").join(all.as("b"),
+        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
+        cosine(doti(col("a.em"), col("b.em")), col("a.n2"), col("b.n2")).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
   }
 
@@ -152,39 +150,22 @@ object Ann {
     * the sf0.01 fixture), while b bands recover `1-(1-p^r)^b` — the `bands`
     * parameter is the recall knob the judge asked for.
     *
-    * Dedup across bands WITHOUT a distinct: band b's equi-join keeps a pair
-    * only when every earlier band's keys differ, so each candidate pair
-    * materializes exactly once (first matching band). Scale shape: `bands`
-    * equi-joins, each one shuffle on an 8-bit-salted key, unioned — never
-    * all-pairs, no global distinct over the candidate set.
+    * Dedup across bands WITHOUT a distinct: [[graft.text.TextOps.firstBandPairs]]
+    * keeps a pair only at its first agreeing band, so each candidate pair
+    * materializes exactly once. Scale shape: one equi-join on (band, key)
+    * over `bands` rows per vector, one shuffle that both sides share —
+    * never all-pairs, no global distinct over the candidate set.
     */
   def lshPairsBanded(vecs: DataFrame, threshold: Double,
                      bands: Int = PairBands,
                      planes: Int = PairBandPlanes): DataFrame = {
-    // pin the keyed table: the multi-band form is a union of `bands`
-    // self-joins whose sides rename columns, so NOTHING reuses across the
-    // 2·bands plan references — unpinned, the quantize + bands·planes·Dim
-    // dot-product key derivation re-ran 12× at the 6×6 default (same
-    // rationale as TextOps.simhashPairs' pinned signatures)
-    val withKeys = (0 until bands).foldLeft(prepared(vecs))((df, b) =>
-      df.withColumn(s"k$b", pairBandKey(b, planes)))
-      .localCheckpoint()
-    def side(tag: String): DataFrame =
-      withKeys.select(
-        col("vec_id").as(s"id_$tag") +: col("em").as(s"em_$tag") +:
-          col("n2").as(s"n2_$tag") +:
-          (0 until bands).map(b => col(s"k$b").as(s"k$tag$b")): _*)
-    val a = side("a"); val bb = side("b")
-    val perBand = (0 until bands).map { band =>
-      val firstMatch = (0 until band)
-        .map(i => col(s"ka$i") =!= col(s"kb$i"))
-        .foldLeft(lit(true))(_ && _)
-      a.join(bb, col(s"ka$band") === col(s"kb$band")
-          && col("id_a") < col("id_b") && firstMatch)
-        .select(col("id_a"), col("id_b"),
-          cosine(doti(col("em_a"), col("em_b")), col("n2_a"), col("n2_b")).as("cos_sim"))
-    }
-    perBand.reduce(_ unionByName _).filter(col("cos_sim") >= threshold)
+    val keys = (0 until bands).map(b => s"k$b")
+    val keyed = keys.zipWithIndex.foldLeft(prepared(vecs)) { case (df, (k, b)) =>
+      df.withColumn(k, pairBandKey(b, planes)) }
+    graft.text.TextOps.firstBandPairs(keyed, "vec_id", keys)
+      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
+        cosine(doti(col("a.em"), col("b.em")), col("a.n2"), col("b.n2")).as("cos_sim"))
+      .filter(col("cos_sim") >= threshold)
   }
 
   /** [[lshPairsBanded]] with geometry SOLVED from the (threshold, recall)

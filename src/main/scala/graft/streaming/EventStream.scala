@@ -126,12 +126,14 @@ object EventStream {
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
-          val pairs = graft.text.TextOps.incrementalDedup(spark, batch.toDF(), sigTable)
-          try {
-            if (!pairs.isEmpty)
-              graft.table.Icelite.merge(spark, pairs, pairsTable,
-                Seq("doc_a", "doc_b"), inputFingerprint = s"batch:$batchId")
-          } finally graft.Session.freeLocalCheckpoint(pairs)
+          graft.text.TextOps.incrementalDedup(spark, batch.toDF(), sigTable) { pairs =>
+            // pinned so the emptiness probe and the merge share one pass
+            graft.Session.pinned(pairs) { p =>
+              if (!p.isEmpty)
+                graft.table.Icelite.merge(spark, p, pairsTable,
+                  Seq("doc_a", "doc_b"), inputFingerprint = s"batch:$batchId")
+            }
+          }
         }
         ()
       }

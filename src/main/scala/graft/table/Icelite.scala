@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -382,6 +382,21 @@ object Icelite {
   private def inflightMarker(table: String, uuid: String): Path =
     Paths.get(table, "_inflight", uuid)
 
+  /** Drop an uncommitted write (a lost race or a stale base): its data dir
+    * and its inflight marker. */
+  private def abandon(table: String, uuid: String): Unit = {
+    deleteRecursively(Paths.get(table, "data", uuid))
+    Files.deleteIfExists(inflightMarker(table, uuid))
+  }
+
+  /** The non-negative PK hash a file's slice claim is taken over (`__h`). */
+  private def sliceHash(pkCols: Seq[String]): Column =
+    pmod(hash(pkCols.map(qcol): _*), lit(Int.MaxValue))
+
+  /** The `__slice` partition value `<m>_<__h mod m>` at output modulus `m`. */
+  private def sliceOf(m: Int): Column =
+    concat_ws("_", lit(m), pmod(col("__h"), lit(m)))
+
   /** Write `df` into a fresh uuid data dir (slice-partitioned when the
     * `__slice` column is present) and return its per-file lineage entries.
     * An `_inflight/<uuid>` marker brackets the write so [[expireSnapshots]]
@@ -624,78 +639,74 @@ object Icelite {
     require(!df.columns.contains("__slice") && !df.columns.contains("__h"),
       "__slice and __h are reserved columns")
     val spec = pkCols.mkString(",")
-    val hcol = pmod(hash(pkCols.map(qcol): _*), lit(Int.MaxValue))
-    // the batch is re-scanned per attempt (and per touched-slice probe); pin
-    // it, and free it whether the merge commits or throws — a long-running
-    // upsert loop (streaming foreachBatch) would otherwise accumulate blocks
-    val incoming = df.dropDuplicates(pkCols).withColumn("__h", hcol).localCheckpoint()
-    try {
+    val hcol = sliceHash(pkCols)
+    // the batch is re-scanned per attempt (and per touched-slice probe): pin
+    // it for the merge's duration
+    graft.Session.pinned(df.dropDuplicates(pkCols).withColumn("__h", hcol)) { incoming =>
       val nIncoming = incoming.count()
-      var attempt = 0
-      while (attempt < 8) {
-        attempt += 1
+      // one optimistic attempt: Some(snapshot), or None when the base moved
+      // under it (a lost commit race, or a read of a superseded base)
+      def attempt(n: Int): Option[Snapshot] = {
         val baseId = currentSnapshotId(table)
         val attemptUuid = UUID.randomUUID().toString
         try {
-        val (carried, toMerge, estRows, atLeastMod): (Seq[FileEntry], DataFrame, Long, Int) =
-          baseId match {
-            case None => (Seq.empty, incoming, nIncoming, 1)
-            case Some(id) =>
-              val base = readManifest(table, id)
-              if (base.files.isEmpty) {
-                // zero-file base (a committed empty frame): nothing to carry
-                (Seq.empty, incoming, nIncoming, 1)
-              } else if (base.bucketSpec == spec && base.nBuckets == nBuckets) {
-                // slice-granular path: rewrite only claim-intersecting files
-                val touched = touchedFiles(spark, incoming, base.files)
-                val (hotIdx, carryIdx) = base.files.indices.partition(touched)
-                val hot = hotIdx.map(base.files)
-                val carry = carryIdx.map(base.files)
-                val merged =
-                  if (hot.isEmpty) incoming
-                  else scan(spark, base.schemaJson, hot.map(_.path))
+          val (carried, toMerge, estRows, atLeastMod): (Seq[FileEntry], DataFrame, Long, Int) =
+            baseId match {
+              case None => (Seq.empty, incoming, nIncoming, 1)
+              case Some(id) =>
+                val base = readManifest(table, id)
+                if (base.files.isEmpty) {
+                  // zero-file base (a committed empty frame): nothing to carry
+                  (Seq.empty, incoming, nIncoming, 1)
+                } else if (base.bucketSpec == spec && base.nBuckets == nBuckets) {
+                  // slice-granular path: rewrite only claim-intersecting files
+                  val touched = touchedFiles(spark, incoming, base.files)
+                  val (hotIdx, carryIdx) = base.files.indices.partition(touched)
+                  val hot = hotIdx.map(base.files)
+                  val carry = carryIdx.map(base.files)
+                  val merged =
+                    if (hot.isEmpty) incoming
+                    else scan(spark, base.schemaJson, hot.map(_.path))
+                      .join(incoming.select(pkCols.map(qcol): _*).distinct(), pkCols, "left_anti")
+                      .withColumn("__h", hcol)
+                      .unionByName(incoming)
+                  // a hot slice's surviving rows stay concentrated in its
+                  // claim region (m/f.mod residues of the output modulus), so
+                  // the output must be at least each hot file's concentrated
+                  // split point — the uniform estimate alone would leave a
+                  // fat slice's rows in one oversized output file
+                  val hotFloor = (1 +: hot.map(f =>
+                    concentratedModulus(f.mod, f.rows, maxRowsPerFile))).max
+                  (carry, merged, hot.map(_.rows).sum + nIncoming, hotFloor)
+                } else {
+                  // PK-spec / bucket-base change, or unsliced commit() snapshot:
+                  // claims computed under a different key are untrustworthy —
+                  // full re-slicing rewrite
+                  val all = scan(spark, base.schemaJson, base.filePaths)
                     .join(incoming.select(pkCols.map(qcol): _*).distinct(), pkCols, "left_anti")
                     .withColumn("__h", hcol)
                     .unionByName(incoming)
-                // a hot slice's surviving rows stay concentrated in its
-                // claim region (m/f.mod residues of the output modulus), so
-                // the output must be at least each hot file's concentrated
-                // split point — the uniform estimate alone would leave a
-                // fat slice's rows in one oversized output file
-                val hotFloor = (1 +: hot.map(f =>
-                  concentratedModulus(f.mod, f.rows, maxRowsPerFile))).max
-                (carry, merged, hot.map(_.rows).sum + nIncoming, hotFloor)
-              } else {
-                // PK-spec / bucket-base change, or unsliced commit() snapshot:
-                // claims computed under a different key are untrustworthy —
-                // full re-slicing rewrite
-                val all = scan(spark, base.schemaJson, base.filePaths)
-                  .join(incoming.select(pkCols.map(qcol): _*).distinct(), pkCols, "left_anti")
-                  .withColumn("__h", hcol)
-                  .unionByName(incoming)
-                (Seq.empty, all, base.rowCount + nIncoming, 1)
-              }
-          }
-        // output modulus: nBuckets·2^d sized to the rewrite set (not the
-        // table), floored at every hot file's concentrated split point; the
-        // bound is approximate (hot + uniform parts can stack to ~2×) —
-        // [[compact]] enforces it strictly
-        val m = math.max(uniformModulus(nBuckets, estRows, maxRowsPerFile), atLeastMod)
-        val sliced = toMerge
-          .withColumn("__slice", concat_ws("_", lit(m), pmod(col("__h"), lit(m))))
-          // a USING join puts the key columns first — restore the caller's
-          // column order so every data file shares one schema layout
-          .select(df.columns.map(qcol) :+ col("__slice"): _*)
-        // safe to stream from the current snapshot: data is written to a fresh
-        // uuid dir, so the plan's input files are never overwritten mid-scan
-        val (uuid, newEntries, schemaJson) = writeData(spark, sliced, table, attemptUuid)
-        commitEntries(table, uuid, carried ++ newEntries, inputFingerprint,
-          nBuckets, spec, schemaJson, Some(baseId)) match {
-          case Some(snap) => return snap
-          case None => // base advanced under us: drop the orphan write, recompute
-            deleteRecursively(Paths.get(table, "data", uuid))
-            Files.deleteIfExists(inflightMarker(table, uuid))
-        }
+                  (Seq.empty, all, base.rowCount + nIncoming, 1)
+                }
+            }
+          // output modulus: nBuckets·2^d sized to the rewrite set (not the
+          // table), floored at every hot file's concentrated split point; the
+          // bound is approximate (hot + uniform parts can stack to ~2×) —
+          // [[compact]] enforces it strictly
+          val m = math.max(uniformModulus(nBuckets, estRows, maxRowsPerFile), atLeastMod)
+          val sliced = toMerge
+            .withColumn("__slice", sliceOf(m))
+            // a USING join puts the key columns first — restore the caller's
+            // column order so every data file shares one schema layout
+            .select(df.columns.map(qcol) :+ col("__slice"): _*)
+          // safe to stream from the current snapshot: data is written to a fresh
+          // uuid dir, so the plan's input files are never overwritten mid-scan
+          val (uuid, newEntries, schemaJson) = writeData(spark, sliced, table, attemptUuid)
+          val committed = commitEntries(table, uuid, carried ++ newEntries, inputFingerprint,
+            nBuckets, spec, schemaJson, Some(baseId))
+          // base advanced under us: drop the orphan write, recompute
+          if (committed.isEmpty) abandon(table, uuid)
+          committed
         } catch {
           // a lost-race base's files can be GC'd (expire retains only the
           // newest snapshots) while this attempt is still scanning them —
@@ -705,14 +716,15 @@ object Icelite {
           // never without dropping the attempt's half-written data + marker
           // (the marker would otherwise shield the orphan from GC for a day).
           case scala.util.control.NonFatal(e) if currentSnapshotId(table) != baseId =>
-            deleteRecursively(Paths.get(table, "data", attemptUuid))
-            Files.deleteIfExists(inflightMarker(table, attemptUuid))
-            System.err.println(s"[icelite] merge attempt $attempt on $table " +
+            abandon(table, attemptUuid)
+            System.err.println(s"[icelite] merge attempt $n on $table " +
               s"read a superseded base ($baseId): ${e.getMessage}; retrying")
+            None
         }
       }
-      throw new IllegalStateException(s"merge on $table lost 8 commit races")
-    } finally graft.Session.freeLocalCheckpoint(incoming)
+      (1 to 8).iterator.flatMap(attempt).nextOption().getOrElse(
+        throw new IllegalStateException(s"merge on $table lost 8 commit races"))
+    }
   }
 
   /** Maintenance: rewrite data files violating the size bound — split files
@@ -755,7 +767,7 @@ object Icelite {
           s"compact($table): table has no PK slice spec (written by commit(), " +
             "not merge()) — re-slice it with a merge first")
       val pkCols = base.bucketSpec.split(",").toSeq
-      val hcol = pmod(hash(pkCols.map(qcol): _*), lit(Int.MaxValue))
+      val hcol = sliceHash(pkCols)
       val baseM = math.max(1, base.nBuckets)
 
       val oversized = base.files.filter(_.rows > maxRowsPerFile)
@@ -774,16 +786,14 @@ object Icelite {
       val rewritten = groups.map { case (fs, target) =>
         scan(spark, base.schemaJson, fs.map(_.path))
           .withColumn("__h", hcol)
-          .withColumn("__slice", concat_ws("_", lit(target), pmod(col("__h"), lit(target))))
+          .withColumn("__slice", sliceOf(target))
           .drop("__h")
       }.reduce(_ unionByName _)
       val (uuid, newEntries, schemaJson) = writeData(spark, rewritten, table)
       commitEntries(table, uuid, carried ++ newEntries, base.inputFingerprint,
         base.nBuckets, base.bucketSpec, schemaJson, Some(Some(baseId))) match {
         case Some(snap) => return (rewriting.size, snap.files.size)
-        case None =>
-          deleteRecursively(Paths.get(table, "data", uuid))
-          Files.deleteIfExists(inflightMarker(table, uuid))
+        case None => abandon(table, uuid)
       }
     }
     throw new IllegalStateException(s"compact on $table lost 8 commit races")

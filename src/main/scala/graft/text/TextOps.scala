@@ -64,18 +64,22 @@ object TextOps {
 
   private val StopWords = Seq("the", "a", "of", "and", "to", "in", "is", "on")
 
-  /** The composite quality score as ONE expression over `text` — shared by
-    * [[qualityScore]] and [[corpusSelect]]'s single-pass scorecard so the
-    * two can never drift. */
-  private def qualityScoreExpr: Column = {
+  /** The quality components over `text`, defined once for [[qualityScore]]
+    * and [[corpusSelect]]'s single-pass scorecard so the two can never
+    * drift. */
+  private case class QualityParts(nTok: Column, nStop: Column, nPunct: Column,
+                                  textLen: Column) {
+    /** The composite quality score as ONE expression. */
+    def score: Column =
+      round((nStop.cast("double") / nTok) * 2.0
+        - (nPunct.cast("double") / textLen) * 5.0
+        + when(nTok.cast("long") >= 10 && nTok.cast("long") <= 1000, 1.0).otherwise(0.0), 6)
+  }
+
+  private def qualityParts: QualityParts = {
     val toks = tokens(col("text"))
-    val nTok = size(toks)
-    val nStop = size(filter(toks, w => w.isin(StopWords: _*)))
-    val nPunct = regexp_count(col("text"), lit("[^a-zA-Z0-9 ]"))
-    val textLen = length(col("text"))
-    round((nStop.cast("double") / nTok) * 2.0
-      - (nPunct.cast("double") / textLen) * 5.0
-      + when(nTok.cast("long") >= 10 && nTok.cast("long") <= 1000, 1.0).otherwise(0.0), 6)
+    QualityParts(size(toks), size(filter(toks, w => w.isin(StopWords: _*))),
+      regexp_count(col("text"), lit("[^a-zA-Z0-9 ]")), length(col("text")))
   }
 
   /** Quality scoring: length, token stats, stopword ratio, punctuation
@@ -83,11 +87,7 @@ object TextOps {
     * family used by web-corpus quality filters).
     */
   def qualityScore(docs: DataFrame): DataFrame = {
-    val toks = tokens(col("text"))
-    val nTok = size(toks)
-    val nStop = size(filter(toks, w => w.isin(StopWords: _*)))
-    val nPunct = regexp_count(col("text"), lit("[^a-zA-Z0-9 ]"))
-    val textLen = length(col("text"))
+    val q @ QualityParts(nTok, nStop, nPunct, textLen) = qualityParts
     docs.select(
       col("doc_id"),
       textLen.cast("long").as("text_len"),
@@ -95,7 +95,7 @@ object TextOps {
       (nStop.cast("double") / nTok).as("stopword_ratio"),
       (nPunct.cast("double") / textLen).as("punct_ratio"),
       ((textLen - (nTok - 1)).cast("double") / nTok).as("avg_token_len"),
-      qualityScoreExpr.as("quality_score"))
+      q.score.as("quality_score"))
   }
 
   /** Language-ID heuristic: score each candidate language by its marker-word
@@ -216,6 +216,31 @@ object TextOps {
       .distinct()
   }
 
+  /** Candidate pairs of a per-band key table, each pair once. `keyed` holds
+    * an `id` column and one key column per band (`keys`, in band order).
+    * The keys are posexploded into (band, key) rows, and two aliases of
+    * that one plan, "a" and "b", equi-join on (band, key) with a.id < b.id.
+    * A pair is kept only at its first agreeing band, so no distinct is
+    * needed. Callers select their output through the "a" and "b" aliases.
+    */
+  private[graft] def firstBandPairs(keyed: DataFrame, id: String,
+                                    keys: Seq[String]): DataFrame = {
+    // the hash exchange on (band, key) is the join's own partitioning, and
+    // both sides share it whichever join Spark picks, so the keys are
+    // derived once even when one side is broadcast (without it the probe
+    // side re-ran the simhash kernel)
+    val rows = keyed.select(col("*"),
+        posexplode(array(keys.map(col): _*)).as(Seq("__band", "__key")))
+      .repartition(col("__band"), col("__key"))
+    // no earlier band agrees: band i's keys differ wherever i < __band
+    val firstAgreeing = keys.init.zipWithIndex.map { case (k, i) =>
+      col("a.__band") <= i || col(s"a.$k") =!= col(s"b.$k")
+    }.foldLeft(lit(true))(_ && _)
+    rows.as("a").join(rows.as("b"), col("a.__band") === col("b.__band")
+      && col("a.__key") === col("b.__key") && col(s"a.$id") < col(s"b.$id")
+      && firstAgreeing)
+  }
+
   /** Near-dup candidate pairs from the MinHash bands (a < b, distinct). */
   def minhashPairs(docs: DataFrame): DataFrame =
     pairsOfBands(minhashBands(docs))
@@ -231,20 +256,22 @@ object TextOps {
     * AQE broadcasts it, so the corpus bands never shuffle, never sort, never
     * pair up outside shared buckets).
     *
-    * Returns the batch's candidate pairs (doc_a < doc_b, distinct), i.e.
-    * every pair involving at least one batch document. Idempotent: re-running
-    * the same batch returns the same pairs (self-matches against the already
-    * -merged copy are excluded by doc_id inequality) and the merge converges.
-    * The union over successive batches equals [[minhashPairs]] of the full
-    * corpus (spec-asserted).
+    * `consume` receives the batch's candidate pairs (doc_a < doc_b,
+    * distinct), i.e. every pair involving at least one batch document, and
+    * its result is returned. The pairs plan reads the batch's pinned bands,
+    * so it is valid only inside `consume`. The batch's signatures are merged
+    * into `sigTable` after `consume` returns: a failed consumer leaves the
+    * index as it was. Idempotent: re-running the same batch yields the same
+    * pairs (self-matches against the already-merged copy are excluded by
+    * doc_id inequality) and the merge converges. The union over successive
+    * batches equals [[minhashPairs]] of the full corpus (spec-asserted).
     */
-  def incrementalDedup(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
-                       sigTable: String): DataFrame = {
-    import graft.table.Icelite
+  def incrementalDedup[T](spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
+                          sigTable: String)(consume: DataFrame => T): T =
     // pinned: referenced by two join branches and the merge — unpinned, the
     // corpus-sized shingle+minhash kernel would re-run three times
-    val batchBands = minhashBands(batch).localCheckpoint()
-    try {
+    graft.Session.pinned(minhashBands(batch)) { batchBands =>
+      import graft.table.Icelite
       val corpus = Icelite.currentSnapshotId(sigTable) match {
         case Some(id) => Icelite.readAt(spark, sigTable, id) // pinned snapshot id
         case None => spark.createDataFrame(
@@ -259,19 +286,10 @@ object TextOps {
           col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key")
             && col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      // materialized (eager checkpoint) so freeing batchBands below is safe
-      val pairs = newVsCorpus.unionByName(newVsNew).distinct().localCheckpoint()
-      // if the signature merge dies (lost-race exhaustion, IO), free the
-      // pairs blocks too — the caller never receives the handle, and a
-      // streaming foreachBatch loop would otherwise pin one pairs-sized
-      // block set per failed batch for the session's life
-      try Icelite.merge(spark, batchBands, sigTable, pkCols = Seq("doc_id", "band"))
-      catch { case e: Throwable =>
-        graft.Session.freeLocalCheckpoint(pairs); throw e
-      }
-      pairs
-    } finally graft.Session.freeLocalCheckpoint(batchBands)
-  }
+      val out = consume(newVsCorpus.unionByName(newVsNew).distinct())
+      Icelite.merge(spark, batchBands, sigTable, pkCols = Seq("doc_id", "band"))
+      out
+    }
 
   /** SimHash signature width. 60 bits (was 24 through round 4): the
     * pigeonhole multi-index splits the signature into maxHamming+1 blocks,
@@ -321,8 +339,8 @@ object TextOps {
   /** SimHash near-dup pairs at hamming distance ≤ `maxHamming` via the
     * standard pigeonhole multi-index: split the signature into
     * `maxHamming + 1` bit-blocks — two signatures within the distance MUST
-    * agree exactly on at least one block — equi-join per block (first-block
-    * dedup built into the join conditions, like [[graft.sim.Ann.lshPairsBanded]]),
+    * agree exactly on at least one block — equi-join on (block, value) with
+    * first-block dedup ([[firstBandPairs]], as [[graft.sim.Ann.lshPairsBanded]]),
     * then verify the exact hamming distance with `bit_count(xor)`.
     * Output (doc_a, doc_b, hamming), doc_a < doc_b, each pair once.
     *
@@ -337,27 +355,14 @@ object TextOps {
                    bits: Int = SimhashBits): DataFrame = {
     val blocks = maxHamming + 1
     val blockBits = bits / blocks
-    // pin the signatures: the multi-index is a union of `blocks` self-joins,
-    // i.e. 2·blocks plan references — without this every branch re-scans and
-    // re-tokenizes+hashes the corpus (8× the work at maxHamming = 3)
-    val sigs = simhash(docs, bits).localCheckpoint()
-    def side(tag: String): DataFrame = {
-      val cols = col("doc_id").as(s"id_$tag") +: col("simhash").as(s"sh_$tag") +:
-        (0 until blocks).map(b => shiftright(col("simhash"), b * blockBits)
-          .bitwiseAND(lit((1L << blockBits) - 1)).as(s"b$tag$b"))
-      sigs.select(cols: _*)
-    }
-    val a = side("a"); val bb = side("b")
-    val perBlock = (0 until blocks).map { blk =>
-      val firstMatch = (0 until blk)
-        .map(i => col(s"ba$i") =!= col(s"bb$i"))
-        .foldLeft(lit(true))(_ && _)
-      a.join(bb, col(s"ba$blk") === col(s"bb$blk")
-          && col("id_a") < col("id_b") && firstMatch)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-          bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
-    }
-    perBlock.reduce(_ unionByName _).filter(col("hamming") <= maxHamming)
+    val keys = (0 until blocks).map(b => s"blk$b")
+    val keyed = simhash(docs, bits).select(col("doc_id") +: col("simhash") +:
+      keys.zipWithIndex.map { case (k, b) => shiftright(col("simhash"), b * blockBits)
+        .bitwiseAND(lit((1L << blockBits) - 1)).as(k) }: _*)
+    firstBandPairs(keyed, "doc_id", keys)
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
   }
 
   /** Cross-document boilerplate detection: shingles that appear in at least
@@ -514,10 +519,13 @@ object TextOps {
     // frame is payload-sized — materializing it would cost more than the
     // rescans it saves). Identical output (same component expressions, same
     // join/filter semantics; oracle-checked).
-    val scored0 = docs.select(col("doc_id") +: qualityScoreExpr.as("quality_score") +:
+    val scored0 = docs.select(col("doc_id") +: qualityParts.score.as("quality_score") +:
       minhashSigExpr.as("sig") +:
       langScoreCols.map { case (n, c) => c.as(n) }: _*)
     val (pred, _) = predLangFromScores
+    // a raw pin, not a scoped one: the returned plan reads the scorecard in
+    // four places (the band pairs, the cluster labels, keep-best's quality
+    // and pred_lang), so the pin must outlive this call
     val f1 = scored0.select(col("doc_id"), col("quality_score"),
         pred.as("pred_lang"), col("sig"))
       .localCheckpoint()

@@ -62,8 +62,7 @@ class AnnSpec extends SparkSpec {
         ((pmod(xxhash64(col("vec_id"), i), lit(2001)) - 1000).cast("double") / 1000.0)
         ).cast("float"))
     val clones = vecs.select((col("vec_id") + 1000000).as("vec_id"), noisy.as("embedding"))
-    val planted = vecs.select("vec_id", "embedding").unionByName(clones).localCheckpoint()
-    try {
+    Session.pinned(vecs.select("vec_id", "embedding").unionByName(clones)) { planted =>
       val thr = 0.7
       val truth = Ann.cosinePairs(planted, thr)
         .select(col("id_a"), col("id_b"), col("cos_sim"))
@@ -82,7 +81,7 @@ class AnnSpec extends SparkSpec {
       assert(math.abs(measured - predicted) <= 0.15,
         f"measured $measured%.3f vs predicted $predicted%.3f out of tolerance")
       assert(measured >= 0.8 - 0.15, "tuned geometry must approach the recall target")
-    } finally graft.Session.freeLocalCheckpoint(planted)
+    }
   }
 
   test("banded LSH emits each candidate pair exactly once (first-band dedup)") {

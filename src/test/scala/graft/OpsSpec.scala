@@ -398,33 +398,60 @@ class OpsSpec extends SparkSpec {
     assert(auto >= 1 && auto <= 3, s"knnAuto launched $auto jobs")
   }
 
+  // order-insensitive: the xxhash64 sum of every row, and the row count
+  private def hash(df: DataFrame): Row =
+    df.agg(sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")), count(lit(1))).head()
+
+  /** The settings a result must not depend on. */
+  private val IncidentalConfs = Seq(
+    Seq("spark.sql.shuffle.partitions" -> "1"),
+    Seq("spark.sql.shuffle.partitions" -> "7"),
+    Seq("spark.sql.adaptive.enabled" -> "false"),
+    Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+    Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
+  /** `body` with `conf` set, the session's previous values restored after. */
+  private def withConf[T](conf: Seq[(String, String)])(body: => T): T = {
+    val saved = conf.map { case (key, _) => key -> spark.conf.getOption(key) }
+    try { conf.foreach { case (key, v) => spark.conf.set(key, v) }; body }
+    finally saved.foreach {
+      case (key, Some(v)) => spark.conf.set(key, v)
+      case (key, None) => spark.conf.unset(key)
+    }
+  }
+
   test("kNN results do not depend on partitioning, AQE, join strategy or codegen") {
     // the skewed page cloud one scale factor up from Sf
     val sub = Pages.fromLineitem(spark, s"${new java.io.File(Sf).getParent}/sf0.01")
       .select(col("page_id").as("id"), col("lonm"), col("latm"))
       .filter(col("id") < 2000)
-    // order-insensitive: the xxhash64 sum of every row, and the row count
-    def hash(df: DataFrame): Row =
-      df.agg(sum(xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")), count(lit(1))).head()
     def run(): (Row, Row) = (hash(SparkEntry.queries("q_knn")(spark, Sf)),
       hash(KnnJoin.knnAuto(spark, sub, sub, "id", "id", k = 5)))
     val base = run()
     assert(base._1.getLong(1) > 0 && base._2.getLong(1) > 0)
-    val confs = Seq(
-      Seq("spark.sql.shuffle.partitions" -> "1"),
-      Seq("spark.sql.shuffle.partitions" -> "7"),
-      Seq("spark.sql.adaptive.enabled" -> "false"),
-      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
-      Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-    for (conf <- confs) {
-      val saved = conf.map { case (key, _) => key -> spark.conf.getOption(key) }
-      val got =
-        try { conf.foreach { case (key, v) => spark.conf.set(key, v) }; run() }
-        finally saved.foreach {
-          case (key, Some(v)) => spark.conf.set(key, v)
-          case (key, None) => spark.conf.unset(key)
-        }
-      assert(got === base, s"under $conf")
+    for (conf <- IncidentalConfs) assert(withConf(conf)(run()) === base, s"under $conf")
+  }
+
+  test("simhash and LSH pair joins do not depend on partitioning, AQE, join strategy or codegen") {
+    val names = Seq("q_simhash_pairs", "q_lsh_pairs_banded", "q_lsh_pairs")
+    def run(): Seq[Row] = names.map(q => hash(SparkEntry.queries(q)(spark, Sf)))
+    val base = run()
+    names.zip(base).foreach { case (q, r) => assert(r.getLong(1) > 0, s"$q is empty at $Sf") }
+    for (conf <- IncidentalConfs) assert(withConf(conf)(run()) === base, s"under $conf")
+    // both sides of each self-join are one exchange, computed once and
+    // reused: under a shuffle join for all three, and under the default
+    // (broadcast) join too for the first-band joins, whose band rows are
+    // hash-partitioned before the join. A one-sided filter breaks the reuse.
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val shuffled = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    for ((q, conf) <- names.map(_ -> shuffled) ++
+        Seq("q_simhash_pairs", "q_lsh_pairs_banded").map(_ -> Seq.empty)) withConf(conf) {
+      val df = SparkEntry.queries(q)(spark, Sf)
+      df.collect()
+      val reused = plans.collect(df.queryExecution.executedPlan) {
+        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+      }
+      assert(reused.nonEmpty, s"$q under $conf: no ReusedExchange in\n${df.queryExecution.executedPlan}")
     }
   }
 

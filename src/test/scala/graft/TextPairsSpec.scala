@@ -44,8 +44,7 @@ class TextPairsSpec extends SparkSpec {
     val docs = spark.range(n).select(col("id").as("doc_id"),
       concat_ws(" ", (0 until 7).map(j =>
         substring(md5(concat(col("id").cast("string"), lit(s"-$j"))), 1, 8)): _*).as("text"))
-    val sigs = TextOps.simhash(docs, bits).localCheckpoint()
-    try {
+    Session.pinned(TextOps.simhash(docs, bits)) { sigs =>
       val blocks = 4
       val maxOcc = (0 until blocks).map { b =>
         sigs.select(shiftright(col("simhash"), b * width)
@@ -55,7 +54,7 @@ class TextPairsSpec extends SparkSpec {
       val expected = n.toDouble / (1L << width) // ~49 per bucket
       assert(maxOcc <= expected * 10 + 50,
         s"hot block bucket at $maxOcc vs expected ~$expected — geometry failed to bound occupancy")
-    } finally graft.Session.freeLocalCheckpoint(sigs)
+    }
   }
 }
 
@@ -149,14 +148,16 @@ class IncrementalDedupSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").localCheckpoint()
     val b1 = docs.filter(col("doc_id") % 2 === 0)
     val b2 = docs.filter(col("doc_id") % 2 === 1)
-    val p1 = TextOps.incrementalDedup(spark, b1, t).as[(Long, Long)].collect().toSet
-    val p2 = TextOps.incrementalDedup(spark, b2, t).as[(Long, Long)].collect().toSet
+    def pairsOf(b: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      TextOps.incrementalDedup(spark, b, t)(_.as[(Long, Long)].collect().toSet)
+    val p1 = pairsOf(b1)
+    val p2 = pairsOf(b2)
     val full = TextOps.minhashPairs(docs).as[(Long, Long)].collect().toSet
     assert(p1.union(p2) === full,
       "union over batches must equal the batch recompute — no pair lost, none invented")
     assert(full.nonEmpty)
     // idempotent re-run: same pairs out, table row count unchanged
-    val p2Again = TextOps.incrementalDedup(spark, b2, t).as[(Long, Long)].collect().toSet
+    val p2Again = pairsOf(b2)
     assert(p2Again === p2)
     val sigRows = graft.table.Icelite.read(spark, t).count()
     assert(sigRows === TextOps.minhashBands(docs).count(),
@@ -170,26 +171,25 @@ class IncrementalDedupSpec extends SparkSpec {
     // batch must keep that member
     import graft.table.Icelite
     val root = java.nio.file.Files.createTempDirectory("dedupjob").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").localCheckpoint()
-    val batches = Seq(docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1))
-    batches.foreach { b =>
-      val pairs = TextOps.incrementalDedup(spark, b, s"$root/sigs")
-      try {
-        Icelite.merge(spark, pairs, s"$root/pairs", Seq("doc_a", "doc_b"))
+    Session.pinned(spark.read.parquet("/root/testdata/sf0.01/documents.parquet")) { docs =>
+      val batches = Seq(docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1))
+      batches.foreach { b =>
+        TextOps.incrementalDedup(spark, b, s"$root/sigs") { pairs =>
+          Icelite.merge(spark, pairs, s"$root/pairs", Seq("doc_a", "doc_b"))
+        }
         Icelite.merge(spark,
           TextOps.qualityScore(b).select(col("doc_id"), col("quality_score")),
           s"$root/quality", Seq("doc_id"))
-      } finally graft.Session.freeLocalCheckpoint(pairs)
+      }
+      def keyOf(df: org.apache.spark.sql.DataFrame) =
+        df.select("cluster_id", "keep_id", "keep_quality", "n_docs")
+          .as[(Long, Long, Double, Long)].collect().toSet
+      val incremental = keyOf(TextOps.keepBestScored(
+        Icelite.read(spark, s"$root/quality"), Icelite.read(spark, s"$root/pairs")))
+      val full = keyOf(TextOps.keepBest(docs, TextOps.minhashPairs(docs)))
+      assert(incremental === full,
+        "accumulated keep-best must match the full-corpus recompute")
     }
-    def keyOf(df: org.apache.spark.sql.DataFrame) =
-      df.select("cluster_id", "keep_id", "keep_quality", "n_docs")
-        .as[(Long, Long, Double, Long)].collect().toSet
-    val incremental = keyOf(TextOps.keepBestScored(
-      Icelite.read(spark, s"$root/quality"), Icelite.read(spark, s"$root/pairs")))
-    val full = keyOf(TextOps.keepBest(docs, TextOps.minhashPairs(docs)))
-    assert(incremental === full,
-      "accumulated keep-best must match the full-corpus recompute")
-    graft.Session.freeLocalCheckpoint(docs)
   }
 
   test("jaccardPairs grouped-postings form: df-cut cap drops hot shingles exactly, pairs match a brute reference") {
