@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LineageWrite
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** "Icelite": a from-scratch Iceberg-style snapshot table layer (no Iceberg
@@ -271,71 +272,18 @@ object Icelite {
     snap.copy(files = loadSegments(table, refs))
   }
 
-  /** Per-file lineage of freshly written parquet under `dataDir`: one scan,
-    * grouped by physical file. `schemaJson` is the logical schema (the
-    * `__slice` partition directory column is layout, not data).
-    */
-  private def fileLineage(spark: SparkSession, dataDir: Path,
-                          schemaJson: String): Seq[FileEntry] = {
-    val written = scan(spark, schemaJson, Seq(dataDir.toString))
-    val dataCols = written.columns.filterNot(_ == "__slice").toSeq
-    val sliceRe = """__slice=(\d+)_(\d+)""".r
-    // zone maps ride the same single pass as the checksum (min/max are
-    // map-side-combinable — the stats cost nothing beyond the scan the
-    // lineage already pays)
-    val statCols = statsEligible(written.schema)
-    val statAggs = statCols.flatMap { case (c, kind) =>
-      // Float columns collect their bounds THROUGH double: the stored string
-      // is then the shortest repr of the exact binary value, so the
-      // BigDecimal compare in [[pruneFiles]] is order-isomorphic with the
-      // scan filter's float→double upcast. Storing the float's own shortest
-      // repr would let a double query bound land in the sub-ulp gap between
-      // the repr and the exact value and prune a file the filter keeps.
-      val base = if (kind == StatFloat) qcol(c).cast("double") else qcol(c)
-      Seq(min(base).cast("string").as(s"__mn_$c"),
-          max(base).cast("string").as(s"__mx_$c"))
-    }
-    written
-      .withColumn("__file", input_file_name())
-      // order-independent checksum; bit_xor never overflows (ANSI mode is on
-      // by default in Spark 4 and sum(long) would throw)
-      .groupBy("__file")
-      .agg(count(lit(1)).as("rows"),
-        (bit_xor(xxhash64(dataCols.map(qcol): _*)).as("checksum") +: statAggs): _*)
-      .collect()
-      .map { r =>
-        val path = new java.net.URI(r.getString(0)).getPath
-        val (mod, res) = sliceRe.findFirstMatchIn(path)
-          .map(m => (m.group(1).toInt, m.group(2).toInt)).getOrElse((0, 0))
-        val stats = statCols.zipWithIndex.flatMap { case ((c, kind), i) =>
-          val (mn, mx) = (r.getString(3 + 2 * i), r.getString(3 + 2 * i + 1))
-          if (mn == null || mx == null) None // all-null column: no bounds
-          // truncation is a STRING-ordering transform — numeric string forms
-          // are kept whole (a truncated "1.23E15" would corrupt the numeric
-          // compare at prune time; numeric casts are bounded-length anyway)
-          else if (kind == StatString) truncateBounds(mn, mx).map(c -> _)
-          else Some(c -> (mn, mx))
-        }.toMap
-        FileEntry(path, mod, res, r.getLong(1), r.getLong(2), stats)
-      }.toSeq.sortBy(_.path)
-  }
-
-  private val StatString = 0
-  private val StatNumeric = 1
-  private val StatFloat = 2 // single-precision: bounds collected via double
-
-  /** Top-level columns eligible for zone maps: numeric or string, first
-    * [[MaxStatsCols]] in schema order. (Timestamps/dates are excluded: their
-    * string casts aren't order-faithful across precisions — callers range on
-    * epoch columns, which are numeric.) */
-  private def statsEligible(schema: StructType): Seq[(String, Int)] = {
+  /** Top-level columns eligible for zone maps, each with whether it is a
+    * string (else numeric), first [[MaxStatsCols]] in schema order.
+    * (Timestamps/dates are excluded: their string casts aren't
+    * order-faithful across precisions — callers range on epoch columns,
+    * which are numeric.) */
+  private def statsEligible(schema: StructType): Seq[(String, Boolean)] = {
     import org.apache.spark.sql.types._
     schema.fields.iterator
       .filter(f => f.name != "__slice")
       .collect {
-        case f if f.dataType == StringType => (f.name, StatString)
-        case f if f.dataType == FloatType => (f.name, StatFloat)
-        case f if f.dataType.isInstanceOf[NumericType] => (f.name, StatNumeric)
+        case f if f.dataType == StringType => (f.name, true)
+        case f if f.dataType.isInstanceOf[NumericType] => (f.name, false)
       }
       .take(MaxStatsCols).toSeq
   }
@@ -398,31 +346,53 @@ object Icelite {
     concat_ws("_", lit(m), pmod(col("__h"), lit(m)))
 
   /** Write `df` into a fresh uuid data dir (slice-partitioned when the
-    * `__slice` column is present) and return its per-file lineage entries.
+    * `__slice` column is present) and return its per-file lineage entries,
+    * collected while the files are written ([[LineageWrite]]): one Spark job,
+    * no read-back. `schemaJson` is the logical schema (the `__slice`
+    * partition directory column is layout, not data).
+    *
+    * Zone maps: float bounds come through double. The stored string is then
+    * the shortest repr of the exact binary value, so the BigDecimal compare
+    * in [[pruneFiles]] is order-isomorphic with the scan filter's
+    * float→double upcast; the float's own shortest repr would let a double
+    * query bound land in the sub-ulp gap between the repr and the exact
+    * value and prune a file the filter keeps. String bounds are truncated
+    * here; numeric string forms are kept whole (a truncated "1.23E15" would
+    * corrupt the numeric compare at prune time).
+    *
     * An `_inflight/<uuid>` marker brackets the write so [[expireSnapshots]]
     * never GCs a live writer's files no matter how long the Spark job runs
     * (the orphan grace window alone cannot protect a write slower than the
     * grace); the caller clears the marker after commit or abort, and a
     * crashed writer's marker ages out under the inflight TTL.
     */
-  private def writeData(spark: SparkSession, df: DataFrame, table: String,
+  private def writeData(df: DataFrame, table: String,
                         uuid: String = UUID.randomUUID().toString): (String, Seq[FileEntry], String) = {
     val marker = inflightMarker(table, uuid)
     Files.createDirectories(marker.getParent)
     Files.writeString(marker, "")
-    val dataDir = Paths.get(table, "data", uuid)
+    val dataDir = Paths.get(table, "data", uuid).toString
+    val schema = StructType(df.schema.fields.filterNot(_.name == "__slice"))
+    val statCols = statsEligible(schema)
     val sliced = df.columns.contains("__slice")
-    if (sliced)
-      // co-locate each slice into one task before the partitioned write:
-      // without it every task writes a file per slice value it holds
-      // (#tasks × #slices files per merge — file-count rot at scale);
-      // with it a slice is one file
-      df.repartition(col("__slice"))
-        .write.mode("overwrite").partitionBy("__slice").parquet(dataDir.toString)
-    else
-      df.write.mode("overwrite").parquet(dataDir.toString)
-    val schemaJson = StructType(df.schema.fields.filterNot(_.name == "__slice")).json
-    (uuid, fileLineage(spark, dataDir, schemaJson), schemaJson)
+    // co-locate each slice into one task before the partitioned write:
+    // without it every task writes a file per slice value it holds
+    // (#tasks × #slices files per merge — file-count rot at scale); with it
+    // a slice is one file
+    val written = LineageWrite.parquet(if (sliced) df.repartition(col("__slice")) else df,
+      dataDir, if (sliced) Seq("__slice") else Nil, statCols.map(_._1))
+    val sliceRe = """__slice=(\d+)_(\d+)""".r
+    val entries = written.map { f =>
+      val (mod, res) = sliceRe.findFirstMatchIn(f.path)
+        .map(m => (m.group(1).toInt, m.group(2).toInt)).getOrElse((0, 0))
+      val stats = statCols.flatMap { case (c, isString) =>
+        f.bounds.get(c).flatMap { case (mn, mx) =>
+          if (isString) truncateBounds(mn, mx).map(c -> _) else Some(c -> (mn, mx))
+        }
+      }.toMap
+      FileEntry(f.path, mod, res, f.rows, f.checksum, stats)
+    }
+    (uuid, entries.sortBy(_.path), schema.json)
   }
 
   /** The commit section: id allocation + manifest + pointer swap, serialized
@@ -470,7 +440,7 @@ object Icelite {
     */
   def commit(spark: SparkSession, df: DataFrame, table: String,
              inputFingerprint: String = ""): Snapshot = {
-    val (uuid, entries, schemaJson) = writeData(spark, df, table)
+    val (uuid, entries, schemaJson) = writeData(df, table)
     commitEntries(table, uuid, entries, inputFingerprint, 0, "", schemaJson, None).get
   }
 
@@ -494,7 +464,7 @@ object Icelite {
     val base = math.max(1, nBuckets)
     // columns stats-eligible under the persisted schema -> orders numerically
     val statKinds = statsEligible(structOf(schemaJson))
-      .map { case (c, kind) => c -> (kind != StatString) }.toMap
+      .map { case (c, isString) => c -> !isString }.toMap
     // Sliced (hash-claim) entries segment BY BASE BUCKET: the grouping is
     // stable across merges, so untouched buckets content-address to the same
     // segment file (commit metadata O(changed buckets)). Their aggregated
@@ -701,7 +671,7 @@ object Icelite {
             .select(df.columns.map(qcol) :+ col("__slice"): _*)
           // safe to stream from the current snapshot: data is written to a fresh
           // uuid dir, so the plan's input files are never overwritten mid-scan
-          val (uuid, newEntries, schemaJson) = writeData(spark, sliced, table, attemptUuid)
+          val (uuid, newEntries, schemaJson) = writeData(sliced, table, attemptUuid)
           val committed = commitEntries(table, uuid, carried ++ newEntries, inputFingerprint,
             nBuckets, spec, schemaJson, Some(baseId))
           // base advanced under us: drop the orphan write, recompute
@@ -789,7 +759,7 @@ object Icelite {
           .withColumn("__slice", sliceOf(target))
           .drop("__h")
       }.reduce(_ unionByName _)
-      val (uuid, newEntries, schemaJson) = writeData(spark, rewritten, table)
+      val (uuid, newEntries, schemaJson) = writeData(rewritten, table)
       commitEntries(table, uuid, carried ++ newEntries, base.inputFingerprint,
         base.nBuckets, base.bucketSpec, schemaJson, Some(Some(baseId))) match {
         case Some(snap) => return (rewriting.size, snap.files.size)
@@ -1008,7 +978,9 @@ object Icelite {
   }
 
   /** Lineage verification: recompute the snapshot's content fingerprint from
-    * its data files and compare against the manifest's per-file lineage.
+    * its data files and compare against the manifest's per-file lineage —
+    * the independent check that the checksums a commit collected while
+    * writing equal what a reader sees.
     * Row hashes xor-combine associatively, so the check is independent of
     * how a re-read re-partitions the files: total rows must equal the
     * manifest rowCount and the global xor of row hashes must equal the xor
@@ -1061,10 +1033,11 @@ object Icelite {
     withTableLock(table) {
       val cur = currentSnapshotId(table).getOrElse(return (0, 0))
       val (expired, kept) = snapshotIds(table).partition(_ <= cur - retain)
-      // canonicalize BOTH sides: manifest paths come from input_file_name()
-      // (absolute, normalized) while the walk below is prefixed by however the
-      // caller spelled `table` — a raw-string compare on a relative table path
-      // would see every live file as unreferenced and GC the whole table
+      // canonicalize BOTH sides: manifest paths are the written files'
+      // qualified (absolute, normalized) paths while the walk below is
+      // prefixed by however the caller spelled `table` — a raw-string compare
+      // on a relative table path would see every live file as unreferenced
+      // and GC the whole table
       def canon(p: Path): String = p.toAbsolutePath.normalize.toString
       val keptRefs = kept.flatMap(segmentRefs(table, _)).distinct
       val referenced: Set[String] =

@@ -526,6 +526,157 @@ class IceliteSpec extends SparkSpec {
     assert(Icelite.verifyLineage(spark, t))
   }
 
+  /** The read-back lineage of the files under `dataDir`: one scan grouped by
+    * `input_file_name()`, aggregating rows, `bit_xor(xxhash64(cols…))` and
+    * per-column min/max cast to string. Commits computed their entries this
+    * way before lineage was collected at write time; it stays here as the
+    * reference those entries must equal field for field. */
+  private def readBackLineage(dataDir: String, schemaJson: String): Seq[Icelite.FileEntry] = {
+    import org.apache.spark.sql.types._
+    val written = spark.read.schema(DataType.fromJson(schemaJson).asInstanceOf[StructType])
+      .parquet(dataDir)
+    def q(c: String) = col("`" + c.replace("`", "``") + "`")
+    val dataCols = written.columns.filterNot(_ == "__slice").toSeq
+    // 0 = string, 1 = numeric, 2 = float (bounds through double)
+    val statCols = written.schema.fields.iterator.filter(_.name != "__slice").collect {
+      case f if f.dataType == StringType => (f.name, 0)
+      case f if f.dataType == FloatType => (f.name, 2)
+      case f if f.dataType.isInstanceOf[NumericType] => (f.name, 1)
+    }.take(Icelite.MaxStatsCols).toSeq
+    val statAggs = statCols.flatMap { case (c, kind) =>
+      val base = if (kind == 2) q(c).cast("double") else q(c)
+      Seq(min(base).cast("string"), max(base).cast("string"))
+    }
+    val sliceRe = """__slice=(\d+)_(\d+)""".r
+    written.withColumn("__file", input_file_name()).groupBy("__file")
+      .agg(count(lit(1)), (bit_xor(xxhash64(dataCols.map(q): _*)) +: statAggs): _*)
+      .collect().map { r =>
+        val path = new java.net.URI(r.getString(0)).getPath
+        val (mod, res) = sliceRe.findFirstMatchIn(path)
+          .map(m => (m.group(1).toInt, m.group(2).toInt)).getOrElse((0, 0))
+        val stats = statCols.zipWithIndex.flatMap { case ((c, kind), i) =>
+          val (mn, mx) = (r.getString(3 + 2 * i), r.getString(4 + 2 * i))
+          if (mn == null || mx == null) None
+          else if (kind == 0) Icelite.truncateBounds(mn, mx).map(c -> _)
+          else Some(c -> (mn, mx))
+        }.toMap
+        Icelite.FileEntry(path, mod, res, r.getLong(1), r.getLong(2), stats)
+      }.toSeq.sortBy(_.path)
+  }
+
+  /** The current snapshot's own entries (its uuid's data dir, not carried
+    * files) against the read-back reference over that dir. */
+  private def assertLineageMatchesReadBack(t: String): Icelite.Snapshot = {
+    val snap = Icelite.readManifest(t, Icelite.currentSnapshotId(t).get)
+    val dataDir = Paths.get(t, "data", snap.uuid).toAbsolutePath.normalize
+    val own = snap.files.filter(f => Paths.get(f.path).startsWith(dataDir)).sortBy(_.path)
+    assert(own === readBackLineage(dataDir.toString, snap.schemaJson))
+    snap
+  }
+
+  test("write-time lineage equals the read-back reference: commit, sliced merge, compact, empty") {
+    val t = tmpDir() + "/wl1"
+    val df = (0 until 3000).map(i => (i.toLong, s"name_${i % 97}", i * 0.5, (i % 11).toFloat))
+      .toDF("id", "name", "x", "f").repartition(3)
+    Icelite.commit(spark, df, t)
+    assert(assertLineageMatchesReadBack(t).files.size === 3)
+    // sliced merge: every slice file is written, none carried
+    val m = tmpDir() + "/wl2"
+    Icelite.merge(spark, df, m, Seq("id"), nBuckets = 4)
+    val s1 = assertLineageMatchesReadBack(m)
+    assert(s1.files.size === 4 && s1.files.forall(_.mod == 4))
+    // a merge touching one slice writes it next to carried files
+    Icelite.merge(spark, Seq((7L, "upd", 1.0, 2.0f)).toDF("id", "name", "x", "f"), m, Seq("id"),
+      nBuckets = 4)
+    assert(assertLineageMatchesReadBack(m).files.size === 4)
+    // compact splits the oversized slices into finer ones
+    assert(Icelite.compact(spark, m, maxRowsPerFile = 400)._1 > 0)
+    val s3 = assertLineageMatchesReadBack(m)
+    assert(s3.files.exists(_.mod > 4) && s3.rowCount === 3000)
+    // an empty commit records no entries, as the read-back never groups one
+    val e = tmpDir() + "/wl3"
+    Icelite.commit(spark, Seq.empty[(Long, String)].toDF("id", "v"), e)
+    assert(assertLineageMatchesReadBack(e).files.isEmpty)
+  }
+
+  test("write-time lineage equals the read-back reference on edge values") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val n = Icelite.StatsTruncateLen
+    val emoji = new String(Character.toChars(0x1F600))
+    val top = new String(Character.toChars(0x10FFFF))
+    val strings = Seq(
+      "a" * (n - 1) + emoji + "tail", // the cut lands inside a surrogate pair
+      top * (n / 2 + 3),              // a U+10FFFF run: no upper bound exists
+      "b" * 40, "", "\uE000", emoji, null)
+    val doubles = Seq(Double.NaN, -0.0, 0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1.5, Double.MinPositiveValue, null)
+    val floats = Seq(Float.NaN, -0.0f, 0.0f, Float.PositiveInfinity, Float.MinPositiveValue,
+      0.1f, -2.7f, Float.MaxValue, null)
+    val zeros = Seq(-0.0, 0.0, null)
+    val decimals = Seq("-12345.67891", "0.00001", "99999999999999.99999", null)
+      .map(v => if (v == null) null else new java.math.BigDecimal(v))
+    val extra = (0 until 8).map(j => StructField(s"x$j", IntegerType))
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false), StructField("s", StringType),
+      StructField("d", DoubleType), StructField("f", FloatType), StructField("z", DoubleType),
+      StructField("dec", DecimalType(20, 5)), StructField("none", StringType),
+      StructField("b", ByteType), StructField("sh", ShortType), StructField("flag", BooleanType),
+      StructField("ts", TimestampType), StructField("arr", ArrayType(DoubleType))) ++ extra)
+    def at[T](xs: Seq[T], i: Int): T = xs(i % xs.size)
+    val rows = (0 until 120).map { i =>
+      Row.fromSeq(Seq(i.toLong, at(strings, i), at(doubles, i), at(floats, i), at(zeros, i / 3),
+        at(decimals, i), null, (i % 7 - 3).toByte, (i * 31 % 500 - 250).toShort, i % 2 == 0,
+        new java.sql.Timestamp(1700000000000L + i), if (i % 5 == 0) null else Seq(i * 0.25, -0.0))
+        ++ extra.indices.map(j => if ((i + j) % 9 == 0) null else Integer.valueOf(i * j - 40)))
+    }
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).repartition(4)
+    val t = tmpDir() + "/wl4"
+    Icelite.commit(spark, df, t)
+    val snap = assertLineageMatchesReadBack(t)
+    // the cases the frame must reach: x7 is the 17th eligible column, "none"
+    // is all null, d's max is NaN, z ties -0.0 with 0.0, and a U+10FFFF
+    // run as a string max leaves no valid upper bound
+    val stats = snap.files.map(_.stats)
+    assert(stats.forall(st => !st.contains("x7") && !st.contains("none")))
+    assert(stats.exists(_.contains("x6")))
+    assert(stats.exists(_.get("d").exists(_._2 == "NaN")))
+    assert(stats.exists(_.get("f").exists(_._1 == (-2.7f).toDouble.toString)))
+    assert(stats.exists(_.get("z").exists(b => b._1 == "-0.0" || b._2 == "-0.0")))
+    assert(stats.exists(!_.contains("s")))
+    val m = tmpDir() + "/wl5"
+    Icelite.merge(spark, df, m, Seq("id"), nBuckets = 2)
+    assert(assertLineageMatchesReadBack(m).files.forall(_.mod == 2))
+  }
+
+  test("re-merging the compat fixture's rows reproduces its entries (rows, checksum, stats)") {
+    val fixture = Paths.get(getClass.getResource("/icelite/_CURRENT").toURI).getParent.toString
+    val t = tmpDir() + "/wl6"
+    val rows = Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"), (4L, "delta"), (5L, "epsilon"),
+      (6L, "zeta"))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows.map(org.apache.spark.sql.Row.fromTuple)),
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT NOT NULL, name STRING"))
+    Icelite.merge(spark, df, t, Seq("id"), inputFingerprint = "compat:fixture-v1", nBuckets = 2)
+    def key(f: Icelite.FileEntry) = (f.mod, f.res, f.rows, f.checksum, f.stats)
+    val want = Icelite.readManifest(fixture, 1)
+    val got = assertLineageMatchesReadBack(t)
+    assert(got.files.map(key).sortBy(_._2) === want.files.map(key).sortBy(_._2))
+    assert(got.copy(id = 0, uuid = "", files = Nil) === want.copy(id = 0, uuid = "", files = Nil))
+  }
+
+  test("a commit is one Spark job; a merge launches no job after its write") {
+    val t = tmpDir() + "/wl7"
+    // a local frame: no exchange, so the write is the only job
+    val df = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    assert(jobsRun(Icelite.commit(spark, df, t)) === Seq(true))
+    val m = tmpDir() + "/wl8"
+    Icelite.merge(spark, df, m, Seq("id"), nBuckets = 2)
+    val jobs = jobsRun(Icelite.merge(spark, Seq((3L, "w")).toDF("id", "v"), m, Seq("id"),
+      nBuckets = 2))
+    assert(jobs.nonEmpty && jobs.last, s"the merge's last job must be its write: $jobs")
+    assert(jobs.count(identity) === 1)
+  }
+
   test("density cache: recompute skipped on matching fingerprint (S10)") {
     val root = tmpDir()
     val pages = graft.pages.Pages.fromDocuments(spark, Sf)

@@ -1,10 +1,13 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
 import graft.geom.Geom
 import graft.ops.{Canonical, KnnJoin, PipJoin}
 import graft.pages.Pages
+import graft.table.Icelite
 
 /** Operator-vs-brute-force oracles (SURVEY.md §5(e)): PIP join and kNN must
   * produce exactly the rows a naive in-memory scan produces, including the
@@ -210,6 +213,15 @@ class OpsSpec extends SparkSpec {
     assert(m("skip_multi") === matchCounts.count(_ > 1).toLong)
     assert(m("skip_multi").asInstanceOf[Long] > 0, "fixture must exercise multi-match")
     assert(m("skip_nomatch").asInstanceOf[Long] > 0, "fixture must exercise 0-match")
+    // the same observer through an Icelite commit, the frame's only action:
+    // the write command's listener events must complete it
+    val obsCommit = org.apache.spark.sql.Observation("shelve_obs_commit")
+    val snap = Icelite.commit(spark, PipJoin.shelve(pts, pl, "pid", "lon", "lat", "poly_id",
+      "ring", level = 6, observer = Some(obsCommit)),
+      java.nio.file.Files.createTempDirectory("obs").resolve("t").toString)
+    val got = Await.result(Future(obsCommit.get)(ExecutionContext.global), 60.seconds)
+    assert(got === m)
+    assert(snap.rowCount === nShelved)
   }
 
   private def d2(a: (Long, Long, Long), b: (Long, Long, Long)): Long = {

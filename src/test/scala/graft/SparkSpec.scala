@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.LinkedBlockingQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -15,13 +15,22 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSession.spark
   val Sf = "/root/testdata/sf0.001"
 
-  /** Spark jobs started while `body` runs. Listener events arrive in order,
-    * so once a sentinel job's start is seen every earlier start has been. */
-  def jobsDuring(body: => Unit): Int = {
-    val groups = new LinkedBlockingQueue[String]()
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Unit): Int = jobsRun(body).size
+
+  /** The Spark jobs started while `body` runs, in start order, each marked
+    * true when a task of it wrote output records. Listener events arrive in
+    * order, so once a sentinel job's start is seen every earlier job's start
+    * and task ends have been. */
+  def jobsRun(body: => Unit): Seq[Boolean] = {
+    val jobs = new LinkedBlockingQueue[(String, Seq[Int])]()
+    val writing = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.put(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+        jobs.put((String.valueOf(e.properties.getProperty("spark.jobGroup.id")), e.stageIds))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+          writing.add(e.stageId)
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -29,7 +38,8 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       body
       sc.setJobGroup("spark-spec-sentinel", "sentinel")
       try spark.range(1).count() finally sc.clearJobGroup()
-      Iterator.continually(groups.take()).takeWhile(_ != "spark-spec-sentinel").size
+      Iterator.continually(jobs.take()).takeWhile(_._1 != "spark-spec-sentinel")
+        .map(_._2.exists(writing.contains)).toSeq
     } finally sc.removeSparkListener(listener)
   }
 }
