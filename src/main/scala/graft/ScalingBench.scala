@@ -35,16 +35,18 @@ object ScalingBench {
     spark.read.parquet(path).count()
   }
 
+  /** The materialized table PIP-shelved into the tiles: every plan's input. */
+  private def shelvedPages(spark: SparkSession, path: String): DataFrame =
+    PipJoin.shelve(spark.read.parquet(path), Pages.tiles(spark),
+      "page_id", "lon", "lat", "tile_name", "ring")
+
   /** Headline spatial job over the materialized table: PIP shelve into
     * tiles → per-tile aggregate.
     */
   def headlinePlan(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
-    val geo = spark.read.parquet(path)
-    val tiles = Pages.tiles(spark).withColumn("ring",
-      PipJoin.rectRing(col("x0"), col("y0"), col("x1"), col("y1")))
-    val shelved = PipJoin.shelve(geo, tiles, "page_id", "lon", "lat", "tile_name", "ring")
+    shelvedPages(spark, path)
       .withColumn("geocell", Cells.geocellCol(col("lon"), col("lat")))
-    shelved.groupBy("tile_name")
+      .groupBy("tile_name")
       .agg(count(lit(1)).as("n"), countDistinct(col("geocell")).as("n_cells"))
   }
 
@@ -59,11 +61,7 @@ object ScalingBench {
     * actual tiling math.
     */
   def headlineComputePlan(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
-    val geo = spark.read.parquet(path)
-    val tiles = Pages.tiles(spark).withColumn("ring",
-      PipJoin.rectRing(col("x0"), col("y0"), col("x1"), col("y1")))
-    val shelved = PipJoin.shelve(geo, tiles, "page_id", "lon", "lat", "tile_name", "ring")
-    graft.ops.Tiling.withTileId(shelved)
+    graft.ops.Tiling.withTileId(shelvedPages(spark, path))
       .groupBy("tile_name")
       .agg(count(lit(1)).as("n"), countDistinct(col("tile_id")).as("n_tiles"))
   }
@@ -76,11 +74,7 @@ object ScalingBench {
     * scaling tracks the multi-executor scaling a real cluster sees.
     */
   def headlineHeavyPlan(spark: SparkSession, path: String): DataFrame = {
-    val geo = spark.read.parquet(path)
-    val tiles = Pages.tiles(spark).withColumn("ring",
-      PipJoin.rectRing(col("x0"), col("y0"), col("x1"), col("y1")))
-    val shelved = PipJoin.shelve(geo, tiles, "page_id", "lon", "lat", "tile_name", "ring")
-    graft.ops.Tiling.withTileId(shelved)
+    graft.ops.Tiling.withTileId(shelvedPages(spark, path))
       .withColumn("rt_err",
         org.apache.spark.sql.graft.CellExpressions.proj_roundtrip_err(col("lon"), col("lat")))
       .groupBy("tile_name")

@@ -2,12 +2,18 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.GraftExtensions
 
 /** Session factory with scale-appropriate defaults.
   *
   * Shuffle partitions default to the core count (local mode); on a real
   * cluster these would be sized to ~2-3x total cores via --conf. AQE is on so
   * skewed cell joins get split at runtime (SURVEY.md §4 item 2).
+  *
+  * Every session carries [[GraftExtensions]]: the `graft_*` SQL functions
+  * and the [[org.apache.spark.sql.graft.PipJoinRewrite]] rule, so a
+  * point-in-polygon theta join is planned as the cell equi-join wherever it
+  * is written, and Catalyst picks broadcast or shuffle for it by size.
   */
 object Session {
 
@@ -55,6 +61,7 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{CellExpressions, PipJoinRewrite}
 import graft.cells.Cells
 import graft.geom.Geom
 import graft.ops.{Canonical, KnnJoin, PipJoin, Tiling}
@@ -263,9 +264,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
     val pts = Pages.fromDocuments(spark, dir)
-    val tiles = Pages.tiles(spark).withColumn("ring",
-      PipJoin.rectRing(col("x0"), col("y0"), col("x1"), col("y1")))
-    PipJoin.shelve(pts, tiles, "doc_id", "lon", "lat", "tile_name", "ring")
+    PipJoin.shelve(pts, Pages.tiles(spark), "doc_id", "lon", "lat", "tile_name", "ring")
       .groupBy("tile_name").agg(count(lit(1)).as("n_pages"))
   }
 
@@ -298,32 +297,26 @@ object SparkEntry {
 
     // --- J2: exactly-one-tile PIP shelve join
     "q_pip_shelve" -> ((s, dir) => {
-      val pts = Pages.fromDocuments(s, dir)
-      val tiles = Pages.tiles(s).withColumn("ring",
-        PipJoin.rectRing(col("x0"), col("y0"), col("x1"), col("y1")))
-      PipJoin.shelve(pts, tiles, "doc_id", "lon", "lat", "tile_name", "ring")
+      PipJoin.shelve(Pages.fromDocuments(s, dir), Pages.tiles(s),
+          "doc_id", "lon", "lat", "tile_name", "ring")
         .select(col("doc_id"), col("tile_name"))
     }),
 
     // --- the J2 LEFT theta join via the PipJoinRewrite OUTER rewrite: the
-    // rule (injected through experimental.extraOptimizations, same rule a
-    // `--conf spark.sql.extensions` deployment gets) turns the
-    // `points LEFT JOIN tiles ON graft_st_contains(...)` nested-loop shape
-    // into the broadcast cell equi-join with the whole refine in the join
-    // condition, so unmatched points null-extend exactly once — the SQL
+    // rule turns the `points LEFT JOIN tiles ON graft_st_contains(...)`
+    // nested-loop shape into the cell equi-join with the whole refine in the
+    // join condition, so unmatched points null-extend exactly once — the SQL
     // surface of the shelve plan (RewriteSpec proves plan + equivalence).
     "q_pip_left" -> ((s, dir) => {
-      // append idempotently — assignment would clobber pre-existing rules,
-      // and a shared Verify/Bench session must not lose them mid-run
-      if (!s.experimental.extraOptimizations.contains(
-          org.apache.spark.sql.graft.PipJoinRewrite))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ org.apache.spark.sql.graft.PipJoinRewrite
-      val pts = Pages.fromDocuments(s, dir)
-      val tiles = Pages.tiles(s).withColumn("ring",
-        PipJoin.rectRing(col("x0"), col("y0"), col("x1"), col("y1")))
-      pts.join(tiles,
-          PipJoin.pipContains(col("ring"), col("lon"), col("lat")), "left")
+      // a graft Session carries the rule with the graft_* functions; a
+      // session built without the extensions (Verify's) gets the rule here,
+      // appended so that the session's other rules stay
+      if (!s.catalog.functionExists("graft_st_contains") &&
+          !s.experimental.extraOptimizations.contains(PipJoinRewrite))
+        s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ PipJoinRewrite
+      Pages.fromDocuments(s, dir)
+        .join(Pages.tiles(s),
+          CellExpressions.st_contains(col("ring"), col("lon"), col("lat")), "left")
         .select(col("doc_id"), col("tile_name"))
     }),
 

@@ -30,12 +30,10 @@ object Main {
           println(s"""{"job":"index","rows":$rows,"check_diff":$diff}""")
         case "shelve" =>
           val pts = Pages.fromDocuments(spark, sfDir)
-          val tiles = Pages.tiles(spark).withColumn("ring",
-            PipJoin.rectRing(col("x0"), col("y0"), col("x1"), col("y1")))
           // J2 skip metrics surfaced in the job result (the reference warns
           // and counts 0-match / multi-match skips, lib/utils.py:694-702)
           val obs = org.apache.spark.sql.Observation("shelve_job_metrics")
-          val shelved = PipJoin.shelve(pts, tiles, "doc_id", "lon", "lat",
+          val shelved = PipJoin.shelve(pts, Pages.tiles(spark), "doc_id", "lon", "lat",
             "tile_name", "ring", observer = Some(obs))
           val snap = Icelite.commit(spark, shelved, s"$outRoot/shelved", s"shelve:$sfDir")
           val m = obs.get
@@ -76,15 +74,13 @@ object Main {
           val docsStream = spark.readStream.schema(docsSchema)
             .option("maxFilesPerTrigger", "1")
             .parquet(inDir.toString)
-          val tiles = Pages.tiles(spark).withColumn("ring",
-            PipJoin.rectRing(col("x0"), col("y0"), col("x1"), col("y1")))
           val table = s"$outRoot/stream_shelve_counts"
           // backfill watermark: file order is not event-time order, so a
           // live-sized watermark would silently drop whole files' rows once
           // an out-of-order earlier file follows a later one; a backfill
           // keeps all windows updatable (state = distinct windows, bounded)
           val q = graft.streaming.EventStream.runShelveCountsToIcelite(
-            spark, Pages.pagesFromDocuments(docsStream), tiles, table,
+            spark, Pages.pagesFromDocuments(docsStream), Pages.tiles(spark), table,
             s"$outRoot/stream_checkpoint",
             org.apache.spark.sql.streaming.Trigger.AvailableNow(),
             watermark = "87600 hours")

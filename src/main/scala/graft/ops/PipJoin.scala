@@ -20,27 +20,24 @@ import org.apache.spark.sql.graft.CellExpressions
   *   join on cell_id; refine with the exact ray-cast PIP only for boundary
   *   cells (interior=true cells skip the test entirely — the fast path).
   *
-  * The polygon side is tiny relative to the point side (dimension table), so
-  * Catalyst broadcasts it; at 100 TB the point side never shuffles — the join
-  * is a broadcast hash join on a long key, and hot cells cannot skew it
-  * because nothing is re-partitioned by cell. If the polygon side ever grows
-  * past broadcast size, the same frame shuffles both sides on cell_id and AQE
-  * skew-split handles hot cells (enabled in [[graft.Session]]).
+  * The general join is not built here: every [[graft.Session]] carries the
+  * [[org.apache.spark.sql.graft.PipJoinRewrite]] rule, which plans any
+  * `st_contains` theta join in that shape and lets Catalyst broadcast the
+  * polygon side or shuffle both sides on the cell id by size (AQE
+  * skew-splits hot cells on the shuffle path). [[shelve]] is the one
+  * hand-built operator, because the exactly-one rule needs its zero-shuffle
+  * per-cell form.
   */
 object PipJoin {
 
-  /** Ray-cast PIP on a flat-ring column (x0,y0,x1,...). Boundary = inside.
-    * Codegen-fused Catalyst expression (org.apache.spark.sql.graft). */
-  def pipContains(ring: Column, px: Column, py: Column): Column =
-    CellExpressions.st_contains(ring, px, py)
+  /** The shelve's cover level: cells are 360/2^8 ≈ 1.4 degrees wide. */
+  private val ShelveLevel = 8
 
-  /** Cover cells of a ring at a level as a codegen expression — ONE
-    * implementation of the cover math for both the library operators below
-    * and the [[org.apache.spark.sql.graft.PipJoinRewrite]] rule (round 6:
-    * replaced the Scala `coverUdf` that drifted alongside it; PlanSpec
-    * asserts the shelve plan is UDF-free). */
-  private def coverCol(ring: Column, level: Int): Column =
-    CellExpressions.cover_cells(ring, level)
+  /** [[pickCoverLevel]]'s bound on the median polygon's cover-cell count. */
+  private val TargetCellsPerPoly = 24.0
+
+  /** The finest level [[pickCoverLevel]] picks. */
+  private val LevelCap = 14
 
   /** Choose a cover level from the POLYGON side's extent statistics — the
     * [[graft.ops.KnnJoin.pickLevel]] pattern applied to the J2 shape. A fixed
@@ -50,15 +47,13 @@ object PipJoin {
     * cover cells (the broadcast map and the cover compute grow with
     * perimeter/cellWidth). The estimate `(w/cellW + 2)·(h/cellH + 2)` is the
     * axis-aligned cover-cell count of the MEDIAN polygon bbox; the finest
-    * level keeping it ≤ `targetCellsPerPoly` bounds the per-polygon explode
+    * level keeping it ≤ `TargetCellsPerPoly` bounds the per-polygon explode
     * while maximizing cell selectivity (interior fast-path fraction grows
     * with level). One narrow aggregation over the polygon side (the
     * dim-table side — at 100 TB this is thousands of rows, not the corpus),
     * driver-side closed-form pick, no sampling needed.
     */
-  def pickCoverLevel(polys: DataFrame, ring: String,
-                     targetCellsPerPoly: Double = 24.0,
-                     levelCap: Int = 14): Int = {
+  def pickCoverLevel(polys: DataFrame, ring: String): Int = {
     val xs = filter(col(ring), (_: Column, i: Column) => i % lit(2) === lit(0))
     val ys = filter(col(ring), (_: Column, i: Column) => i % lit(2) === lit(1))
     val r = polys
@@ -72,37 +67,11 @@ object PipJoin {
     if (r.isNullAt(0) || r.isNullAt(1)) return 6 // no polygons: default
     val (mw, mh) = (r.getDouble(0), r.getDouble(1))
     // cover count grows monotonically with level — finest level within target
-    (0 to levelCap).reverse.find { l =>
+    (0 to LevelCap).reverse.find { l =>
       val cw = 360.0 / (1L << l)
       val ch = 180.0 / (1L << l)
-      (mw / cw + 2.0) * (mh / ch + 2.0) <= targetCellsPerPoly
+      (mw / cw + 2.0) * (mh / ch + 2.0) <= TargetCellsPerPoly
     }.getOrElse(0)
-  }
-
-  /** Join points (pointId, lon, lat) to polygons (polyId, ring) where the
-    * point lies in the polygon. Returns all (pointId, polyId) matches.
-    *
-    * @param level cover level; cells ≈ 360/2^level degrees wide
-    *   ([[pickCoverLevel]] derives one from polygon extent stats).
-    * @param broadcastPolys true forces a broadcast of the polygon side;
-    *   false lets Catalyst decide.
-    */
-  def join(points: DataFrame, polys: DataFrame,
-           pointId: String, lon: String, lat: String,
-           polyId: String, ring: String,
-           level: Int = 6,
-           broadcastPolys: Boolean = true): DataFrame = {
-    val covered = polys
-      .select(col(polyId), col(ring).as("__ring"))
-      .withColumn("__cov", explode(coverCol(col("__ring"), level)))
-      .select(col(polyId), col("__ring"),
-        col("__cov.cell").as("__cell"), col("__cov.interior").as("__interior"))
-    val polySide = if (broadcastPolys) broadcast(covered) else covered
-    val pts = points.withColumn("__cell",
-      CellExpressions.cell_at(col(lon), col(lat), level))
-    pts.join(polySide, "__cell")
-      .filter(col("__interior") || pipContains(col("__ring"), col(lon), col(lat)))
-      .drop("__cell", "__interior", "__ring")
   }
 
   /** The J2 shelve rule: keep only points with exactly one matching polygon
@@ -115,12 +84,11 @@ object PipJoin {
     * evaluate inside the map stage. The alternative (explode matches +
     * window count over pointId) shuffles every matched row — measured ~4.6 s
     * of non-scaling shuffle IO at 77M rows; this form shuffles nothing.
+    * The per-cell side is broadcast by hint: Catalyst estimates it above the
+    * default broadcast threshold (about 16 MB for the 282 tiles of
+    * [[graft.pages.Pages.tiles]]), and without the hint plans a sort-merge
+    * join.
     *
-    * @param broadcastCells false ⇒ shuffle fallback: when the per-cell
-    *   candidate table outgrows broadcast (a planet-wide fine-level tile set),
-    *   both sides hash-shuffle on the long cell id instead — the exactly-one
-    *   pick still runs map-side after the join, and AQE skew-split covers hot
-    *   cells. Same output, one extra exchange of the point keys.
     * @param observer optional [[Observation]] receiving the J2 skip metrics
     *   (`skip_nomatch`, `skip_multi`, `n_shelved` — the reference warns and
     *   counts both skip classes, lib/utils.py:694-702). Without it the same
@@ -131,11 +99,10 @@ object PipJoin {
   def shelve(points: DataFrame, polys: DataFrame,
              pointId: String, lon: String, lat: String,
              polyId: String, ring: String,
-             level: Int = 8, broadcastCells: Boolean = true,
              observer: Option[Observation] = None): DataFrame = {
     val covered = polys
       .select(col(polyId), col(ring).as("__ring"))
-      .withColumn("__cov", explode(coverCol(col("__ring"), level)))
+      .withColumn("__cov", explode(CellExpressions.cover_cells(col("__ring"), ShelveLevel)))
       .select(col(polyId), col("__ring"),
         col("__cov.cell").as("__cell"), col("__cov.interior").as("__interior"))
     val byCell = covered.groupBy("__cell")
@@ -151,12 +118,10 @@ object PipJoin {
       when(isFast, col("__cands").getItem(0).getField("pid")).as("__fastpid"),
       when(!isFast, col("__cands")).as("__slowcands"))
     val pts = points.withColumn("__cell",
-      CellExpressions.cell_at(col(lon), col(lat), level))
-    val cellSide = if (broadcastCells) broadcast(byCell2)
-                   else byCell2.hint("shuffle_hash")
+      CellExpressions.cell_at(col(lon), col(lat), ShelveLevel))
     // LEFT join: points whose cell holds no candidate tile at all must still
     // reach the metrics pass (they are 0-match skips in the reference)
-    val joined = pts.join(cellSide, Seq("__cell"), "left")
+    val joined = pts.join(broadcast(byCell2), Seq("__cell"), "left")
     // Single-evaluation pick: ONE kernel call per row computes
     // (pid-if-exactly-one, match count) as a struct in its own projection.
     // The CollectMetrics (observe) node directly above is a pushdown barrier:

@@ -2,6 +2,7 @@ package graft.pages
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.PipJoin
 import graft.sources.Tables
 
 /** The graft input table: Common-Crawl-style web pages
@@ -141,6 +142,7 @@ object Pages {
     * 15-degree tiles minus every 37th (gap -> 0-match skip), plus two
     * overlapping tiles over the hot cell (>1-match skip) — exercising the
     * exactly-one-tile rule of /root/reference/lib/utils.py:694-702.
+    * Columns: tile_name, the box x0, y0, x1, y1 and its flat `ring`.
     */
   def tiles(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -156,6 +158,7 @@ object Pages {
       ("HOT_A", 10.0, 50.0, 14.0, 53.0),
       ("HOT_B", 11.0, 50.5, 13.5, 52.5)).toDF("tile_name", "x0", "y0", "x1", "y1")
     grid.unionByName(extras)
+      .withColumn("ring", PipJoin.rectRing(col("x0"), col("y0"), col("x1"), col("y1")))
   }
 
   /** DuckDB CTE mirroring [[tiles]]. */

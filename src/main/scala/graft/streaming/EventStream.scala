@@ -59,13 +59,12 @@ object EventStream {
     * [[graft.ops.PipJoin.shelve]] the batch path uses.
     */
   def streamingShelveCounts(pages: DataFrame, tiles: DataFrame,
-                            level: Int = 8,
                             watermark: String = "2 hours"): DataFrame = {
     val withWm = pages
       .withColumn("warc_ts", col("warc_ts").cast("timestamp"))
       .withWatermark("warc_ts", watermark)
     val shelved = graft.ops.PipJoin.shelve(withWm, tiles,
-      "doc_id", "lon", "lat", "tile_name", "ring", level = level)
+      "doc_id", "lon", "lat", "tile_name", "ring")
     shelved
       .groupBy(window(col("warc_ts"), "1 hour"), col("tile_name"))
       .agg(count(lit(1)).as("n"))

@@ -23,10 +23,14 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * filtered by (interior OR st_contains(ring, lon, lat))
   * }}}
   *
-  * — a hash equi-join on a long key with the interior-cell fast path, the
-  * same shape the PipJoin library operator builds by hand. Each polygon
-  * lists each cover cell once and each point has one cell, so no duplicate
-  * (point, polygon) pairs arise and results are exactly the theta join's.
+  * — a hash equi-join on a long key with the interior-cell fast path.
+  * Catalyst then broadcasts the polygon side or shuffles both sides on the
+  * cell id, by size. Every [[graft.Session]] carries this rule through
+  * [[GraftExtensions]], so it is graft's one general PIP join; only the
+  * exactly-one shelve ([[graft.ops.PipJoin.shelve]]) is built by hand. Each
+  * polygon lists each cover cell once and each point has one cell, so no
+  * duplicate (point, polygon) pairs arise and results are exactly the theta
+  * join's.
   *
   * Join types: INNER rewrites for either operand order. LEFT OUTER rewrites
   * when the PRESERVED side is the point side (ring from the right child) —

@@ -1,6 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.locationtech.jts.geom.{Coordinate, GeometryFactory, Polygon}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.graft.GraftKernels
 import graft.geom.Geom
 import graft.crs.Proj
 import graft.cells.Cells
@@ -185,5 +188,108 @@ class GeomSpec extends AnyFunSuite {
     assert(Cells.supertile(-50000.0, -150000.0) === "-2_-1")
     assert(Cells.quartertile(225000.0, 375000.0) === "2_1") // y frac .75 -> row 2, x frac .25 -> col 1
     assert(Cells.quartertile(275000.0, 325000.0) === "1_2")
+  }
+
+  // ------------------------------------------- differential against JTS
+
+  private val jts = new GeometryFactory()
+
+  private def jtsPolygon(ring: Array[Double]): Polygon = {
+    val n = ring.length / 2
+    jts.createPolygon((0 to n).map(i => i % n)
+      .map(i => new Coordinate(ring(2 * i), ring(2 * i + 1))).toArray)
+  }
+
+  /** Star-shaped ring around (cx, cy), vertices at sorted random angles:
+    * convex with one radius, concave in general with a radius per vertex. */
+  private def starRing(rnd: scala.util.Random, cx: Double, cy: Double, r: Double,
+                       concave: Boolean): Array[Double] = {
+    val angles = Array.fill(3 + rnd.nextInt(10))(rnd.nextDouble() * 2 * math.Pi).sorted
+    angles.flatMap { a =>
+      val ri = if (concave) r * (0.2 + 0.8 * rnd.nextDouble()) else r
+      Array(cx + ri * math.cos(a), cy + ri * math.sin(a))
+    }
+  }
+
+  /** Rectilinear staircase ring with its lower-left corner at (x0, y0) and
+    * steps `w` wide, heights in multiples of `h`: axis-aligned edges,
+    * concave corners, and integer vertices when all four are integers. */
+  private def stepRing(rnd: scala.util.Random, x0: Double, y0: Double,
+                       w: Double, h: Double): Array[Double] = {
+    val hs = Array.fill(2 + rnd.nextInt(6))(1 + rnd.nextInt(6))
+    val top = hs.indices.reverse.flatMap(i =>
+      Seq(x0 + (i + 1) * w, y0 + hs(i) * h, x0 + i * w, y0 + hs(i) * h))
+    (Seq(x0, y0, x0 + hs.length * w, y0) ++ top).toArray
+  }
+
+  /** Valid rings of every kind: double-coordinate convex and concave stars,
+    * integer-coordinate stars and integer staircases. */
+  private def jtsRings(rnd: scala.util.Random, n: Int): Seq[Array[Double]] =
+    (1 to n).flatMap { _ =>
+      val (cx, cy) = (in(rnd, -130, 130).round.toDouble, in(rnd, -40, 40).round.toDouble)
+      Seq(starRing(rnd, cx, cy, in(rnd, 0.5, 30), concave = false),
+        starRing(rnd, cx, cy, in(rnd, 0.5, 30), concave = true),
+        starRing(rnd, cx, cy, 2 + rnd.nextInt(5), concave = true).map(_.round.toDouble),
+        stepRing(rnd, cx, cy, 1, 1))
+    }.filter(r => jtsPolygon(r).isValid && Geom.area(r) > 0)
+
+  test("PIP agrees with JTS covers on random convex, concave and integer rings (boundary = in)") {
+    val rnd = new scala.util.Random(42)
+    var onBoundary = 0
+    for (ring <- jtsRings(rnd, 40)) {
+      val poly = jtsPolygon(ring)
+      val (minx, miny, maxx, maxy) = Geom.bbox(ring)
+      val integer = ring.forall(v => v == v.round)
+      // integer rings: every half-integer point around them, so each vertex,
+      // edge midpoint and integer point on an axis-aligned edge is probed;
+      // other rings: their vertices plus random points over the bbox
+      val probes =
+        if (integer) for (x <- (2 * minx - 2).toInt to (2 * maxx + 2).toInt;
+                          y <- (2 * miny - 2).toInt to (2 * maxy + 2).toInt) yield (x / 2.0, y / 2.0)
+        else ring.grouped(2).map(v => (v(0), v(1))).toSeq ++ Seq.fill(200)(
+          (in(rnd, minx - 1, maxx + 1), in(rnd, miny - 1, maxy + 1)))
+      val packed = UnsafeArrayData.fromPrimitiveArray(ring)
+      for ((x, y) <- probes) {
+        val expected = poly.covers(jts.createPoint(new Coordinate(x, y)))
+        if (expected && !poly.contains(jts.createPoint(new Coordinate(x, y)))) onBoundary += 1
+        assert(Geom.contains(ring, x, y) === expected, s"Geom.contains(${ring.mkString(",")}, $x, $y)")
+        assert(GraftKernels.pip(packed, x, y) === expected, s"pip(${ring.mkString(",")}, $x, $y)")
+      }
+    }
+    assert(onBoundary > 1000, s"only $onBoundary boundary probes")
+  }
+
+  test("containsBox is sound against JTS: an interior cover cell's box lies in the ring") {
+    val rnd = new scala.util.Random(7)
+    var interior = 0
+    for (_ <- 1 to 60; level <- 4 to 7) {
+      val (cw, ch) = (360.0 / (1L << level), 180.0 / (1L << level))
+      // a staircase on the level's cell grid shares edges with its cells
+      val ring =
+        if (rnd.nextBoolean()) starRing(rnd, in(rnd, -130, 130), in(rnd, -40, 40), in(rnd, 5, 40),
+          concave = rnd.nextBoolean())
+        else stepRing(rnd, -180 + rnd.nextInt(1 << (level - 1)) * cw,
+          -90 + rnd.nextInt(1 << (level - 1)) * ch, cw, ch)
+      val poly = jtsPolygon(ring)
+      for (sub <- 0 to 2; (cell, inside) <- Cells.coverRing(ring, level + sub) if inside) {
+        val (x0, y0, x1, y1) = Cells.cellBounds(cell)
+        interior += 1
+        assert(poly.covers(jtsPolygon(Array(x0, y0, x1, y0, x1, y1, x0, y1))),
+          s"cell $cell [$x0,$y0,$x1,$y1] marked interior of ${ring.mkString(",")}")
+      }
+    }
+    assert(interior > 1000, s"only $interior interior cells")
+  }
+
+  test("area and centroid agree with JTS to a relative 1e-9") {
+    def close(a: Double, b: Double) =
+      math.abs(a - b) <= 1e-9 * math.max(1.0, math.max(math.abs(a), math.abs(b)))
+    for (ring <- jtsRings(new scala.util.Random(11), 100)) {
+      val poly = jtsPolygon(ring)
+      val (cx, cy) = Geom.centroid(ring)
+      assert(close(Geom.area(ring), poly.getArea), s"area of ${ring.mkString(",")}")
+      assert(close(cx, poly.getCentroid.getX) && close(cy, poly.getCentroid.getY),
+        s"centroid of ${ring.mkString(",")}: ($cx, $cy) vs ${poly.getCentroid}")
+    }
   }
 }

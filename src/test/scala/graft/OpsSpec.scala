@@ -4,6 +4,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graft.CellExpressions
 import graft.geom.Geom
 import graft.ops.{Canonical, KnnJoin, PipJoin}
 import graft.pages.Pages
@@ -37,11 +38,20 @@ class OpsSpec extends SparkSpec {
     "east_sliver" -> Array(170.0, 50.0, 179.9, 50.0, 179.9, 70.0, 170.0, 70.0),
     "polar" -> Array(-120.0, 80.0, -60.0, 80.0, -60.0, 89.0, -120.0, 89.0))
 
+  /** The DataFrame PIP theta join, which the session's PipJoinRewrite rule
+    * plans as the cell equi-join. */
+  private def pipJoin(pts: DataFrame, pl: DataFrame): DataFrame = {
+    val joined = pts.join(pl, CellExpressions.st_contains(col("ring"), col("lon"), col("lat")))
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+      s"the PIP theta join must be planned as the cell equi-join:\n${plan.take(1500)}")
+    joined.select("pid", "poly_id")
+  }
+
   test("PIP join equals brute-force nested loop on general polygons") {
     val pts = points(3000).toDF("pid", "lon", "lat")
     val pl = polys.map { case (n, r) => (n, r.toSeq) }.toDF("poly_id", "ring")
-    val got = PipJoin.join(pts, pl, "pid", "lon", "lat", "poly_id", "ring", level = 6)
-      .select("pid", "poly_id").as[(Long, String)].collect().toSet
+    val got = pipJoin(pts, pl).as[(Long, String)].collect().toSet
     val expected = (for {
       (pid, lon, lat) <- points(3000)
       (name, ring) <- polys
@@ -54,7 +64,7 @@ class OpsSpec extends SparkSpec {
   test("PIP shelve enforces the exactly-one rule (lib/utils.py:694-702)") {
     val pts = points(3000).toDF("pid", "lon", "lat")
     val pl = polys.map { case (n, r) => (n, r.toSeq) }.toDF("poly_id", "ring")
-    val got = PipJoin.shelve(pts, pl, "pid", "lon", "lat", "poly_id", "ring", level = 6)
+    val got = PipJoin.shelve(pts, pl, "pid", "lon", "lat", "poly_id", "ring")
       .select("pid", "poly_id").as[(Long, String)].collect()
     val matchesPerPoint = (for {
       (pid, lon, lat) <- points(3000)
@@ -78,10 +88,9 @@ class OpsSpec extends SparkSpec {
       spark.catalog.clearCache()
       val obs = org.apache.spark.sql.Observation(s"pip_$mode")
       val shelved = PipJoin.shelve(pts, pl, "pid", "lon", "lat", "poly_id", "ring",
-          level = 6, observer = Some(obs))
+          observer = Some(obs))
         .select("pid", "poly_id").as[(Long, String)].collect().toSet
-      val joined = PipJoin.join(pts, pl, "pid", "lon", "lat", "poly_id", "ring", level = 6)
-        .select("pid", "poly_id").as[(Long, String)].collect().toSet
+      val joined = pipJoin(pts, pl).as[(Long, String)].collect().toSet
       (shelved, obs.get, joined)
     }
     val codegen = run("codegen")
@@ -184,15 +193,6 @@ class OpsSpec extends SparkSpec {
     assert((160.0 / cw + 2) * (140.0 / ch + 2) <= 24.0)
     // no polygons at all: the safe default
     assert(PipJoin.pickCoverLevel(tiny.where(lit(false)), "ring") === 6)
-    // the derived level flows through join and stays exact
-    val pts = points(500).toDF("pid", "lon", "lat")
-    val pl = polys.map { case (n, r) => (n, r.toSeq) }.toDF("poly_id", "ring")
-    val auto = PipJoin.join(pts, pl, "pid", "lon", "lat", "poly_id", "ring",
-        level = PipJoin.pickCoverLevel(pl, "ring"))
-      .select("pid", "poly_id").as[(Long, String)].collect().toSet
-    val fixed = PipJoin.join(pts, pl, "pid", "lon", "lat", "poly_id", "ring", level = 6)
-      .select("pid", "poly_id").as[(Long, String)].collect().toSet
-    assert(auto === fixed)
   }
 
   test("shelve observes the J2 skip metrics (0-match / multi-match counts)") {
@@ -200,7 +200,7 @@ class OpsSpec extends SparkSpec {
     val pl = polys.map { case (n, r) => (n, r.toSeq) }.toDF("poly_id", "ring")
     val obs = org.apache.spark.sql.Observation("shelve_obs")
     val shelved = PipJoin.shelve(pts, pl, "pid", "lon", "lat", "poly_id", "ring",
-      level = 6, observer = Some(obs))
+      observer = Some(obs))
     val nShelved = shelved.count()
     // ground truth from the brute-force scan
     val matchCounts = points(3000).map { case (pid, lon, lat) =>
@@ -217,7 +217,7 @@ class OpsSpec extends SparkSpec {
     // the write command's listener events must complete it
     val obsCommit = org.apache.spark.sql.Observation("shelve_obs_commit")
     val snap = Icelite.commit(spark, PipJoin.shelve(pts, pl, "pid", "lon", "lat", "poly_id",
-      "ring", level = 6, observer = Some(obsCommit)),
+      "ring", observer = Some(obsCommit)),
       java.nio.file.Files.createTempDirectory("obs").resolve("t").toString)
     val got = Await.result(Future(obsCommit.get)(ExecutionContext.global), 60.seconds)
     assert(got === m)
@@ -464,6 +464,30 @@ class OpsSpec extends SparkSpec {
         case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
       }
       assert(reused.nonEmpty, s"$q under $conf: no ReusedExchange in\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("PIP shelve and left join do not depend on partitioning, AQE, join strategy or codegen") {
+    val names = Seq("q_pip_shelve", "q_pip_left")
+    def run(): Seq[Row] = {
+      // the shelve caches its per-cell table: drop it so each conf computes
+      // the cover cells itself instead of reading the defaults' result
+      spark.catalog.clearCache()
+      names.map(q => hash(SparkEntry.queries(q)(spark, Sf)))
+    }
+    val base = run()
+    names.zip(base).foreach { case (q, r) => assert(r.getLong(1) > 0, s"$q is empty at $Sf") }
+    for (conf <- IncidentalConfs) assert(withConf(conf)(run()) === base, s"under $conf")
+    // with broadcasts off the rule's equi-join is a shuffle join
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    withConf(Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+      val df = SparkEntry.queries("q_pip_left")(spark, Sf)
+      df.collect()
+      val joins = plans.collect(df.queryExecution.executedPlan) {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName
+      }
+      assert(joins.nonEmpty && joins.forall(n => n == "SortMergeJoin" || n == "ShuffledHashJoin"),
+        s"q_pip_left must shuffle-join: $joins\n${df.queryExecution.executedPlan}")
     }
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.pages.Pages
-import graft.ops.PipJoin
 
 /** Physical-plan assertions: the optimizations the engine is designed
   * around must actually appear in the plan (SURVEY.md §4), so a regression
@@ -31,14 +30,15 @@ class PlanSpec extends SparkSpec {
   }
 
   test("PIP join broadcasts the polygon side") {
-    val pts = Pages.fromDocuments(spark, Sf)
-    val tiles = Pages.tiles(spark).withColumn("ring",
-      PipJoin.rectRing(col("x0"), col("y0"), col("x1"), col("y1")))
-    val joined = PipJoin.join(pts, tiles, "doc_id", "lon", "lat", "tile_name", "ring")
-    val plan = planOf(joined)
-    assert(plan.contains("BroadcastHashJoin"),
-      s"PIP join must be a broadcast hash join, got:\n${plan.take(2000)}")
-    assert(!plan.contains("SortMergeJoin"))
+    for (q <- Seq("q_pip_shelve", "q_pip_left")) {
+      val plan = planOf(SparkEntry.queries(q)(spark, Sf))
+      assert(plan.contains("BroadcastHashJoin"),
+        s"$q must be a broadcast hash join, got:\n${plan.take(2000)}")
+      assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"), q)
+    }
+    // the session carries the rule: q_pip_left must not append a second copy
+    assert(!spark.experimental.extraOptimizations.contains(
+      org.apache.spark.sql.graft.PipJoinRewrite))
   }
 
   test("shelve evaluates the pick kernel exactly once in the physical plan") {
@@ -81,8 +81,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pip shelve plan contains no Scala UDF (cover cells are the codegen kernel)") {
-    // round 6: PipJoin.join/shelve unified on the CoverCells expression —
-    // the Scala coverUdf (two implementations of the same cover math) is gone
     val plan = planOf(SparkEntry.queries("q_pip_shelve")(spark, Sf))
     assert(!plan.contains("UDF("), s"shelve must be UDF-free:\n${plan.take(1500)}")
     assert(plan.toLowerCase.contains("cover_cells") || plan.toLowerCase.contains("covercells"),
