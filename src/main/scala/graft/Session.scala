@@ -6,8 +6,9 @@ import org.apache.spark.sql.graft.GraftExtensions
 
 /** Session factory with scale-appropriate defaults.
   *
-  * Shuffle partitions default to the core count (local mode); on a real
-  * cluster these would be sized to ~2-3x total cores via --conf. AQE is on so
+  * A session runs at `local[cores]` with twice that many shuffle
+  * partitions; on a real cluster these would be sized to ~2-3x total cores
+  * via --conf. AQE is on so
   * skewed cell joins get split at runtime (SURVEY.md §4 item 2).
   *
   * Every session carries [[GraftExtensions]]: the `graft_*` SQL functions
@@ -36,7 +37,7 @@ object Session {
       case _ => ()
     }
 
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+  def local(cores: Int, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")

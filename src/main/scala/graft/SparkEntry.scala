@@ -908,16 +908,7 @@ object SparkEntry {
 
     // --- A11 full semantics: per-tile component id list + acq date span
     "q_tile_components" -> ((s, dir) =>
-      Pages.fromDocuments(s, dir)
-        .withColumn("supertile", Tiling.degSupertile(col("lon"), col("lat"), 10))
-        .withColumn("pairname",
-          concat(lit("P"), lpad((col("doc_id") % 40).cast("string"), 2, "0")))
-        .groupBy("supertile")
-        .agg(
-          array_join(array_sort(collect_set(col("pairname"))), ",").as("pairname_ids"),
-          countDistinct(col("pairname")).as("n_pairs"),
-          min(col("warc_ts").cast("long")).as("acq_min_epoch"),
-          max(col("warc_ts").cast("long")).as("acq_max_epoch"))),
+      Tiling.tileComponents(Pages.fromDocuments(s, dir))),
 
     // --- O1/O2: deterministic sorted catalog children
     "q_stac_children" -> ((s, dir) =>

@@ -22,7 +22,7 @@ object Main {
       "usage: <index|shelve|tile|knn|stacdocs|stacmeta|stream|compact|dedup|curate|annindex> <sfDir> <outRoot>")
     val Array(job, sfDir, outRoot) = args.take(3)
     val spark = Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, s"graft-$job")
+      sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt), s"graft-$job")
     try {
       job match {
         case "index" =>

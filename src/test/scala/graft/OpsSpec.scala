@@ -491,6 +491,14 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("degree-grid tile aggregates do not depend on partitioning, AQE, join strategy or codegen") {
+    val names = Seq("q_tile_coverage", "q_subtile_grid", "q_tile_components")
+    def run(): Seq[Row] = names.map(q => hash(SparkEntry.queries(q)(spark, Sf)))
+    val base = run()
+    names.zip(base).foreach { case (q, r) => assert(r.getLong(1) > 0, s"$q is empty at $Sf") }
+    for (conf <- IncidentalConfs) assert(withConf(conf)(run()) === base, s"under $conf")
+  }
+
   test("canonical scene: zero-padded verkey makes string max = semver max (J3)") {
     val rows = Seq(
       // same pair+res, versions v030402 < v040002 < v040311: keep only last

@@ -64,6 +64,30 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("Exchange hashpartitioning"))
   }
 
+  test("tile coverage aggregates on int grid keys and names the tiles above the aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.Concat
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.types.IntegerType
+    val df = SparkEntry.queries("q_tile_coverage")(spark, Sf)
+    df.collect()
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val root = df.queryExecution.executedPlan
+    val aggs = plans.collect(root) { case a: HashAggregateExec => a }
+    def below(p: SparkPlan): Seq[SparkPlan] = plans.collect(p)({ case x => x }).drop(1)
+    val lowest = aggs.filter(a => !below(a).exists(_.isInstanceOf[HashAggregateExec]))
+    assert(lowest.size === 1, s"expected one lowest HashAggregate:\n$root")
+    val keys = lowest.head.groupingExpressions
+    assert(keys.count(_.dataType == IntegerType) === 4 &&
+      keys.filterNot(_.dataType == IntegerType).map(_.name) === Seq("lang"),
+      s"the lowest aggregate must group on the four int keys plus lang: $keys")
+    // collect walks top-down: the first aggregate is the final one, whose
+    // result expressions name each output row's tiles
+    val concats = below(aggs.head).filter(_.expressions.exists(_.exists(_.isInstanceOf[Concat])))
+    assert(concats.isEmpty,
+      s"no concat may appear below the final aggregate: ${concats.map(_.nodeName)}\n$root")
+  }
+
   test("canonicalization windows use a single shuffle per stage (no joins)") {
     val q = SparkEntry.queries("q_canonical_scene")(spark, Sf)
     val plan = planOf(q)
