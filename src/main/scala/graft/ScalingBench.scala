@@ -149,7 +149,7 @@ object ScalingBench {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val rep = args.drop(1).headOption.map(_.toInt).getOrElse(128)
     val path = s"/tmp/graft_scaling_pages_$rep"
-    val setup = Session.local(32, "graft-scaling-setup")
+    val setup = Session.local(Runtime.getRuntime.availableProcessors, "graft-scaling-setup")
     // reuse an existing materialization (identical input is the point); sync
     // so dirty page-cache flushes don't bleed into the first timed run
     val rows = try {

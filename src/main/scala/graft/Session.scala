@@ -56,8 +56,7 @@ object Session {
       // GB-scale local input only ~10 map tasks, idling most cores. A real
       // 100 TB table has tens of thousands of splits at the default — keep
       // that default in cluster deployments.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "32m"))
+      .config("spark.sql.files.maxPartitionBytes", "32m")
       .config("spark.sql.files.openCostInBytes", "1m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -12,12 +12,14 @@ import graft.table.{Icelite, Pipeline}
   * as a resumable Spark pipeline over Icelite snapshots:
   *
   *   scan → parse/geocode → enrich (status, custom path, record id) →
-  *   region join (J1) → width-validate (P6) with observed metrics (A13) →
+  *   region join (J1) → width-validate (P6) →
   *   group/write snapshot (A1/S12) → read-back check (J11)
   *
   * Each stage commits an Icelite snapshot keyed by an input fingerprint, so
   * a killed run resumes from the last committed stage (north rule:
-  * "resumable from checkpoint with per-partition lineage + metrics").
+  * "resumable from checkpoint with per-partition lineage + metrics"). The
+  * A13 counts are the snapshots' row counts (`Icelite.historyDf`): total =
+  * the `pages` snapshot's, valid = the `index` snapshot's.
   */
 object IndexJob {
 
@@ -112,16 +114,10 @@ object IndexJob {
     widths.map { case (c, w) => length(col(c)) <= w }.reduce(_ && _)
 
   /** P6 — field-width validation (index_setsm.py:1099-1116): rows whose
-    * string field exceeds the declared layer width are skipped, counted via
-    * observed metrics (A13's invalid_record_cnt as df.observe, SURVEY §4).
+    * string field exceeds the declared layer width are skipped.
     */
-  def validateWidths(df: DataFrame, widths: Map[String, Int]): DataFrame = {
-    val ok = widthOk(widths)
-    df.observe("index_metrics",
-        sum(when(!ok, 1L).otherwise(0L)).as("invalid_record_cnt"),
-        count(lit(1)).as("total_record_cnt"))
-      .filter(ok)
-  }
+  def validateWidths(df: DataFrame, widths: Map[String, Int]): DataFrame =
+    df.filter(widthOk(widths))
 
   /** P6 driven from a DECLARED schema family (graft.model.Schemas): the
     * width map comes straight off the reference's StandardAttribute
@@ -140,14 +136,16 @@ object IndexJob {
   }
 
   /** O3 — capped error side-output (index_setsm.py:1150-1156: only the first
-    * 30 duplicate/invalid errors are logged). `limit` after the filter plans
-    * a per-partition LocalLimit, so at scale this never materializes the full
-    * reject set.
+    * 30 duplicate/invalid errors are logged): the `cap` smallest record ids,
+    * so the sample does not depend on partitioning. `limit` over the sort
+    * plans a per-partition top-k (TakeOrderedAndProject), so at scale this
+    * never materializes the full reject set.
     */
   def errorSample(df: DataFrame, widths: Map[String, Int], cap: Int = 30): DataFrame =
     df.filter(!widthOk(widths))
       .select(col("record_id"),
         lit("value too long for field width").as("error"))
+      .orderBy("record_id")
       .limit(cap)
 
   /** The index row projection: web page → index record (the graft analog of
@@ -183,30 +181,17 @@ object IndexJob {
     val fp = inputFingerprint(sfDir)
 
     val widths = Map("url" -> 256, "geocell" -> 7, "record_id" -> 512)
-    val pages = pipe.stage("pages", fp) { Pages.fromDocuments(spark, sfDir) }
-    val index = pipe.stage("index", fp) { validateWidths(indexRows(pages), widths) }
+    val rows = indexRows(pipe.stage("pages", fp) { Pages.fromDocuments(spark, sfDir) })
+    val valid = validateWidths(rows, widths)
+    val index = pipe.stage("index", fp) { valid }
     pipe.stage("geocell_counts", fp) {
       index.groupBy("geocell").agg(count(lit(1)).as("n"))
     }
-    // O3: capped invalid-row sample as its own snapshot (first 30 errors)
-    pipe.stage("errors", fp) { errorSample(indexRows(pages), widths) }
-    // metrics table (A13): derived from the snapshot manifests the stages
-    // already committed — indexRows is a 1:1 projection, so
-    // total = pages rowCount; NO extra source pass
-    import spark.implicits._
-    def rowCount(name: String): Long = {
-      val t = s"$workRoot/$name"
-      Icelite.readManifest(t, Icelite.currentSnapshotId(t).get).rowCount
-    }
-    val total = rowCount("pages")
-    val valid = rowCount("index")
-    pipe.stage("metrics", fp) {
-      Seq((fp, total, valid, total - valid))
-        .toDF("input_fingerprint", "total_record_cnt", "valid_record_cnt", "invalid_record_cnt")
-    }
+    // O3: capped invalid-row sample as its own snapshot (30 smallest ids)
+    pipe.stage("errors", fp) { errorSample(rows, widths) }
     // J11 --check: committed snapshot vs recomputed projection
-    val diff = Icelite.check(spark, validateWidths(indexRows(pages), widths),
-      s"$workRoot/index", "record_id")
-    (valid, diff)
+    val table = s"$workRoot/index"
+    val diff = Icelite.check(spark, valid, table, "record_id")
+    (Icelite.readManifest(table, Icelite.currentSnapshotId(table).get).rowCount, diff)
   }
 }

@@ -1004,14 +1004,22 @@ object Icelite {
   }
 
   /** The reference's `--check` verification (J11, index_setsm.py:1179-1197):
-    * read back the committed snapshot and anti-join both directions on the
-    * record-id column; any diff ⇒ failure.
+    * read back the committed snapshot and count, on the record-id column, the
+    * rows of either side whose id the other side lacks; any diff ⇒ failure.
+    * One action: the two sides are tagged, unioned and grouped by id, so each
+    * id's forward count `f` and read-back count `b` give its diff — `f` when
+    * `b` is 0, `b` when `f` is 0. A null id matches nothing, so every
+    * null-id row counts. This is the sum of the two directions' anti-joins,
+    * duplicates included.
     */
   def check(spark: SparkSession, df: DataFrame, table: String, idCol: String): Long = {
-    val back = read(spark, table).select(idCol)
-    val fwd = df.select(idCol)
-    fwd.join(back, Seq(idCol), "left_anti").count() +
-      back.join(fwd, Seq(idCol), "left_anti").count()
+    def side(d: DataFrame, fwd: Int) =
+      d.select(col(idCol).as("id"), lit(fwd).as("f"), lit(1 - fwd).as("b"))
+    val (id, f, b) = (col("id"), col("f"), col("b"))
+    side(df, 1).unionByName(side(read(spark, table), 0))
+      .groupBy(id).agg(sum(f).as("f"), sum(b).as("b"))
+      .agg(coalesce(sum(when(id.isNull, f + b).when(b === 0, f).when(f === 0, b)), lit(0L)))
+      .head().getLong(0)
   }
 
   /** Iceberg `expire_snapshots` analog: keep the newest `retain` snapshot

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.table.{Icelite, Pipeline}
 import graft.jobs.IndexJob
@@ -85,7 +86,7 @@ class IceliteSpec extends SparkSpec {
     assert(b.exceptAll(a).count() === 0)
   }
 
-  test("width validation skips wide rows and observes invalid counts (P6/A13)") {
+  test("width validation skips wide rows (P6)") {
     val df = Seq(("short", 1), ("waaaaaaaaaaaaaaay-too-long", 2)).toDF("s", "x")
     val validated = IndexJob.validateWidths(df, Map("s" -> 10))
     assert(validated.count() === 1)
@@ -95,6 +96,52 @@ class IceliteSpec extends SparkSpec {
     val df = (1 to 100).map(i => (s"r$i-${"x" * 20}", i)).toDF("record_id", "x")
     val errs = IndexJob.errorSample(df, Map("record_id" -> 10), cap = 30)
     assert(errs.count() === 30)
+    // the sample is the 30 smallest ids, however the rejects are split: fed
+    // in descending order over 3 partitions, an unordered limit keeps the
+    // largest
+    def id(i: Int) = f"r$i%03d-${"x" * 20}"
+    val desc = spark.sparkContext.parallelize((100 to 1 by -1).map(i => (id(i), i)), 3)
+      .toDF("record_id", "x")
+    val kept = IndexJob.errorSample(desc, Map("record_id" -> 10), cap = 30)
+      .as[(String, String)].collect().map(_._1)
+    assert(kept.toSet === (1 to 30).map(id).toSet)
+  }
+
+  /** The two-anti-join J11 check `Icelite.check` replaced: the reference its
+    * one-action form must equal. */
+  private def antiJoinCheck(df: DataFrame, table: String, idCol: String): Long = {
+    val back = Icelite.read(spark, table).select(idCol)
+    val fwd = df.select(idCol)
+    fwd.join(back, Seq(idCol), "left_anti").count() +
+      back.join(fwd, Seq(idCol), "left_anti").count()
+  }
+
+  test("check (J11) equals the two-way anti-join count on duplicates, nulls and empty sides") {
+    val ids: Seq[Seq[Option[String]]] = Seq(
+      Seq(Some("a"), Some("a"), Some("b"), None, None, Some("c")),
+      Seq(Some("a"), Some("b"), Some("b"), Some("b"), None, Some("d"), Some("d")),
+      Seq(Some("x"), Some("y")),
+      Seq(None),
+      Seq.empty)
+    def frame(s: Seq[Option[String]]) =
+      s.zipWithIndex.toDF("record_id", "x").repartition(2)
+    for (fwd <- ids; back <- ids) {
+      val t = tmpDir() + "/j11"
+      Icelite.commit(spark, frame(back), t)
+      assert(Icelite.check(spark, frame(fwd), t, "record_id") ===
+        antiJoinCheck(frame(fwd), t, "record_id"), s"fwd $fwd, back $back")
+    }
+  }
+
+  test("check (J11) launches fewer Spark jobs than the two-way anti-join") {
+    val t = tmpDir() + "/j11-index"
+    val rows = IndexJob.indexRows(graft.pages.Pages.fromDocuments(spark, Sf))
+    Icelite.commit(spark, rows, t)
+    var (one, two) = (-1L, -1L)
+    val oneJobs = jobsDuring { one = Icelite.check(spark, rows, t, "record_id") }
+    val twoJobs = jobsDuring { two = antiJoinCheck(rows, t, "record_id") }
+    assert(one === 0 && two === 0)
+    assert(oneJobs < twoJobs, s"check $oneJobs jobs, anti-join reference $twoJobs")
   }
 
   test("MERGE upsert: incoming wins on PK collision, novel rows append (S17)") {

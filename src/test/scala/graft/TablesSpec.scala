@@ -67,4 +67,27 @@ class TablesSpec extends SparkSpec {
     assert(Icelite.read(spark, s"$root/pages").count() === 50)
     assert(Icelite.read(spark, s"$root/index").count() === 50)
   }
+
+  test("IndexJob's A13 counts are its snapshots' row counts; O3 keeps the smallest ids") {
+    val sf = Files.createTempDirectory("tables-sf").toString
+    val root = Files.createTempDirectory("tables-index").toString
+    // 40 of 100 docs get a lang long enough for a 300-char url, over the
+    // 256-char url width (url = https://example.org/<lang>/doc-<doc_id>)
+    spark.read.parquet(Tables.path(Sf, "documents")).orderBy("doc_id").limit(100)
+      .withColumn("lang", when(col("doc_id") % 5 < 2,
+        expr("rpad(lang, 275 - length(cast(doc_id as string)), 'x')")).otherwise(col("lang")))
+      .coalesce(1).write.parquet(Tables.path(sf, "documents"))
+    assert(IndexJob.run(spark, sf, root) === (60L, 0L))
+    def rowCount(t: String) = Icelite.historyDf(spark, s"$root/$t")
+      .filter(col("is_current")).select("row_count").as[Long].head()
+    assert(rowCount("pages") - rowCount("index") === 40)
+    val invalid = Icelite.read(spark, s"$root/pages").filter(length(col("url")) > 256)
+    assert(invalid.select(length(col("url"))).as[Int].collect().toSeq === Seq.fill(40)(300))
+    val smallest = invalid
+      .select(concat_ws("|", col("url"), col("lang"), col("doc_id")).as("id"))
+      .as[String].collect().sorted.take(30)
+    val errors = Icelite.read(spark, s"$root/errors").select("record_id").as[String].collect()
+    assert(errors.sorted === smallest)
+    assert(!Files.exists(java.nio.file.Paths.get(root, "metrics")))
+  }
 }
