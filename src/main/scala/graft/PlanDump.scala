@@ -13,7 +13,8 @@ import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
   */
 object PlanDump {
   val Picks: Seq[String] = Seq("q_pip_shelve", "q_pip_left", "q_knn", "q_geocell_counts",
-    "q_tile_coverage", "q_canonical_scene", "q_region_join", "q_minhash_bands", "q_ann_brute",
+    "q_tile_coverage", "q_canonical_scene", "q_region_join", "q_minhash_bands",
+    "q_minhash_pairs", "q_ann_brute",
     "q_fingerprint", "q_salted_join", "q_stac_assembly", "q_item_fetch",
     "q_strip_master_all", "q_lsh_pairs", "q_custom_paths",
     "q_lsh_pairs_banded", "q_url_template",

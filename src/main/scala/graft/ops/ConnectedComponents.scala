@@ -92,27 +92,19 @@ object ConnectedComponents {
     * endpoints of an undirected edge; self-loops ignored). `component` is the
     * minimum node id reachable from the node. Nodes NOT in any pair don't
     * appear — callers left-join and coalesce to the node's own id.
-    * `smallCutoff` overrides the short-circuit threshold (0 forces the
-    * distributed path — used by specs to keep star contraction covered).
     */
-  def components(pairs: DataFrame, smallCutoff: Long = SmallCutoff): DataFrame = {
-    val Seq(a, b) = pairs.columns.toSeq.take(2).map(col)
-    val edges0 = pairs
-      .select(greatest(a, b).as("u"), least(a, b).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
+  def components(pairs: DataFrame): DataFrame = {
+    val edges0 = directedEdges(pairs)
     // Small-graph probe (round 6): ONE take(cutoff + 1) action replaces the
     // old checkpoint + digest + collect sequence (3 sequential driver jobs)
     // on the small path; take() stops scanning once it has cutoff + 1 rows,
     // so the big-graph case pays at most one cheap partial pass before the
     // distributed rounds. ≤ cutoff rows returned ⇒ that IS the complete
     // distinct edge set.
-    if (smallCutoff > 0 &&
-        edges0.schema.fields.forall(_.dataType ==
-          org.apache.spark.sql.types.LongType)) {
+    if (edges0.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)) {
       val spark = pairs.sparkSession
       import spark.implicits._
-      val cut = math.min(smallCutoff, Int.MaxValue - 1L).toInt
+      val cut = SmallCutoff.toInt
       val es = edges0.as[(Long, Long)].take(cut + 1)
       if (es.length <= cut) {
         // union-find, min-root union: roots only merge downward, so each
@@ -134,10 +126,24 @@ object ConnectedComponents {
         return spark.createDataset(out).toDF("node", "component")
       }
     }
+    starContraction(pairs)
+  }
+
+  /** Each undirected edge of `pairs` once, as (u, v) with u > v. */
+  private def directedEdges(pairs: DataFrame): DataFrame = {
+    val Seq(a, b) = pairs.columns.toSeq.take(2).map(col)
+    pairs.select(greatest(a, b).as("u"), least(a, b).as("v"))
+      .where(col("u") =!= col("v"))
+      .distinct()
+  }
+
+  /** [[components]]' distributed path, whatever the edge count: alternating
+    * star rounds to the fixed point, then the star forest's labels. */
+  private[graft] def starContraction(pairs: DataFrame): DataFrame = {
     // raw pins, not Session.pinned: round i is freed only after round i+1
     // is pinned (the next round reads it), an overlap nested scopes cannot
     // express, and the terminal round may outlive this call (see below)
-    var edges = edges0.localCheckpoint()
+    var edges = directedEdges(pairs).localCheckpoint()
     // fixed-point check on a canonical multiset digest: one cheap aggregate
     // instead of a two-way anti-join per round. A digest collision could only
     // stop one round early, and the terminal star forest is itself a fixed

@@ -19,13 +19,15 @@ object SkewJoin {
 
   /** Detect hot keys: keys holding more than `threshold` of a sampled count.
     * One cheap aggregation over a sample — at 100 TB, use table statistics
-    * or a prior run's metrics table instead.
+    * or a prior run's metrics table instead. The sample is seeded, so two
+    * calls on the same frame pick the same keys; an empty sample has none.
     */
   def hotKeys(df: DataFrame, key: String, sampleFraction: Double = 0.01,
               threshold: Double = 0.01): Seq[String] = {
-    val sampled = df.sample(sampleFraction).groupBy(key).count()
-    val total = sampled.agg(sum("count")).collect()(0).getLong(0).toDouble
-    sampled.filter(col("count") >= total * threshold)
+    val sampled = df.sample(sampleFraction, seed = 42L).groupBy(key).count()
+    val total = sampled.agg(sum("count")).head()
+    if (total.isNullAt(0)) Nil
+    else sampled.filter(col("count") >= total.getLong(0).toDouble * threshold)
       .select(col(key).cast("string")).collect().map(_.getString(0)).toSeq
   }
 

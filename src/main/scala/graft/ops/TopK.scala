@@ -7,12 +7,13 @@ import org.apache.spark.sql.functions._
 /** Bounded-priority-queue top-k per group — the north star's "per-cell
   * bounded priority queue" as a typed `Aggregator`.
   *
-  * vs `row_number().over(Window...)`: the window form sorts every candidate
-  * row within each partition (O(n log n) over ALL candidates, all rows
-  * shuffled); the aggregator keeps only k entries per group per partition
-  * (O(n log k)), combines partially map-side, and shuffles at most
-  * k·groups·partials rows. At 100 TB candidate sets this is the difference
-  * between shuffling the candidate set and shuffling the answer.
+  * vs `row_number().over(Window...)`: Spark 4 plans the window form with a
+  * `WindowGroupLimit` below its exchange, so both shuffle at most k rows per
+  * group per map partition. They differ in how each partition gets there:
+  * the window form sorts every candidate row of the partition (O(n log n)
+  * over ALL candidates) before the limit keeps k per group; the aggregator
+  * keeps a bounded k-entry buffer per group as the rows stream by (one
+  * O(k) worst-entry scan per row, no sort).
   */
 object TopK {
 

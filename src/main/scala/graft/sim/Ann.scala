@@ -15,11 +15,16 @@ import org.apache.spark.sql.expressions.Window
   * Two paths:
   *   - [[bruteTopK]]: exact baseline — broadcast the (small) query set, scan
   *     all vectors once, window top-k. At 100 TB the scan is
-  *     embarrassingly parallel and the only shuffle is the per-query top-k
-  *     (tiny: |queries|·k rows after partial aggregation).
+  *     embarrassingly parallel and the only shuffle is the per-query top-k,
+  *     which a `WindowGroupLimit` below the exchange bounds to
+  *     |queries|·k rows per scan partition.
   *   - [[lshBuckets]] / [[lshTopK]]: the scale path — random-hyperplane LSH
   *     signatures (deterministic planes derived from md5) bucket vectors;
   *     neighbor search is an equi-join on the bucket id, never all-pairs.
+  *
+  * Every top-k search is the same three steps, each written once: the
+  * query side ([[querySide]]), the exact cosine score and the per-query rank
+  * ([[nearest]], over [[firstN]] — the file's one window).
   */
 object Ann {
 
@@ -44,19 +49,62 @@ object Ann {
     vecs.select(col("vec_id"), milli(col("embedding")).as("em"))
       .withColumn("n2", doti(col("em"), col("em")))
 
+  /** The query side of a search: the rows of `all` matching `queryPred` as
+    * (query_id, qem, qn2) plus `extra`. */
+  private def querySide(all: DataFrame, queryPred: Column, extra: Column*): DataFrame =
+    all.filter(queryPred).select(Seq(col("vec_id").as("query_id"), col("em").as("qem"),
+      col("n2").as("qn2")) ++ extra: _*)
+
+  /** The first `n` rows of each query_id by `order`, ranked `rn` from 1. */
+  private def firstN(df: DataFrame, n: Int, order: Column*): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy("query_id").orderBy(order: _*)))
+      .filter(col("rn") <= n)
+
+  /** The `k` candidates of each query with the highest exact cosine (ties
+    * to the lower id): (query_id, neighbor_id, cos_sim, rn). `cands` are
+    * the vector rows (vec_id, em, n2) joined to their query's (query_id,
+    * qem, qn2). */
+  private def nearest(cands: DataFrame, k: Int): DataFrame =
+    firstN(cands.select(col("query_id"), col("vec_id").as("neighbor_id"),
+        cosine(doti(col("qem"), col("em")), col("qn2"), col("n2")).as("cos_sim")),
+      k, col("cos_sim").desc, col("neighbor_id"))
+
+  /** [[nearest]] over the rows of `index` whose `key` equals the query's
+    * `qKey`. */
+  private def nearestInBucket(index: DataFrame, q: DataFrame, key: String, qKey: String,
+                              k: Int): DataFrame =
+    nearest(index.join(q, col(key) === col(qKey) && col("vec_id") =!= col("query_id")), k)
+
+  /** The pairs of a self-join of [[prepared]] rows, aliased "a" and "b",
+    * at cosine ≥ `threshold`: (id_a, id_b, cos_sim). */
+  private def similarPairs(joined: DataFrame, threshold: Double): DataFrame =
+    joined.select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
+        cosine(doti(col("a.em"), col("b.em")), col("a.n2"), col("b.n2")).as("cos_sim"))
+      .filter(col("cos_sim") >= threshold)
+
+  /** A `Dim`-long literal array of `component(d)`, folded into the plan. */
+  private def constVec(component: Int => Long): Column =
+    array((0 until Dim).map(d => lit(component(d))): _*)
+
+  /** Sign-bit signature of `em` against the `n` planes numbered from
+    * `first`: bit j is set when plane `first + j` has a positive dot. */
+  private def signBits(first: Int, n: Int): Column =
+    (0 until n).map { j =>
+      when(doti(col("em"), constVec(planeComponent(first + j, _))) > 0, lit(1L << j))
+        .otherwise(lit(0L))
+    }.reduce(_ + _)
+
+  /** `em`'s dot product with each IVF centroid, in cell order. */
+  private def centroidDots: Seq[Column] =
+    (0 until IvfCells).map(c => doti(col("em"), constVec(centroidComponent(c, _))))
+
   /** Exact cosine top-k: `queries` (filtered subset of vecs) vs all vectors.
     * Returns (query_id, neighbor_id, cos_sim, rn).
     */
   def bruteTopK(vecs: DataFrame, queryPred: Column, k: Int): DataFrame = {
     val all = prepared(vecs)
-    val q = all.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("em").as("qem"), col("n2").as("qn2"))
-    val joined = all.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(doti(col("qem"), col("em")), col("qn2"), col("n2")).as("cos_sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    joined.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    nearest(all.crossJoin(broadcast(querySide(all, queryPred)))
+      .filter(col("vec_id") =!= col("query_id")), k)
   }
 
   /** Embedding-cosine near-duplicate pairs above a similarity threshold
@@ -65,12 +113,8 @@ object Ann {
     */
   def cosinePairs(vecs: DataFrame, threshold: Double): DataFrame = {
     val all = prepared(vecs)
-    val a = all.select(col("vec_id").as("id_a"), col("em").as("em_a"), col("n2").as("n2_a"))
-    val b = all.select(col("vec_id").as("id_b"), col("em").as("em_b"), col("n2").as("n2_b"))
-    a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosine(doti(col("em_a"), col("em_b")), col("n2_a"), col("n2_b")).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
+    similarPairs(all.as("a").crossJoin(all.as("b"))
+      .filter(col("a.vec_id") < col("b.vec_id")), threshold)
   }
 
   /** Embedding near-dup pairs at scale: equi-join within LSH buckets (the
@@ -84,11 +128,8 @@ object Ann {
   def lshPairs(vecs: DataFrame, threshold: Double): DataFrame = {
     // both sides alias one plan, so a shuffle join reuses its exchange
     val all = lshBuckets(vecs)
-    all.as("a").join(all.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        cosine(doti(col("a.em"), col("b.em")), col("a.n2"), col("b.n2")).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
+    similarPairs(all.as("a").join(all.as("b"),
+      col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id")), threshold)
   }
 
   /** Banded LSH geometry for [[lshPairsBanded]]: `PairBands` independent
@@ -136,11 +177,7 @@ object Ann {
   /** Band `b`'s signature over the milli embedding `em` (`planes` sign
     * bits). Pure integer-literal column expression, constant-folded planes. */
   def pairBandKey(b: Int, planes: Int = PairBandPlanes): Column =
-    (0 until planes).map { j =>
-      val planeArr = array((0 until Dim).map(d =>
-        lit(planeComponent(100 + b * planes + j, d))): _*)
-      when(doti(col("em"), planeArr) > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    signBits(100 + b * planes, planes)
 
   /** Banded embedding near-dup pairs: a pair is a candidate when it agrees
     * on ALL planes of AT LEAST ONE band (standard b×r OR-of-ANDs
@@ -162,10 +199,7 @@ object Ann {
     val keys = (0 until bands).map(b => s"k$b")
     val keyed = keys.zipWithIndex.foldLeft(prepared(vecs)) { case (df, (k, b)) =>
       df.withColumn(k, pairBandKey(b, planes)) }
-    graft.text.TextOps.firstBandPairs(keyed, "vec_id", keys)
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        cosine(doti(col("a.em"), col("b.em")), col("a.n2"), col("b.n2")).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
+    similarPairs(graft.text.TextOps.firstBandPairs(keyed, "vec_id", keys), threshold)
   }
 
   /** [[lshPairsBanded]] with geometry SOLVED from the (threshold, recall)
@@ -206,21 +240,13 @@ object Ann {
       .withColumn("mx", greatest(array_max(transform(col("em"), x => abs(x))), lit(1L)))
       .withColumn("q8", transform(col("em"),
         x => round(x * 127.0 / col("mx")).cast("long")))
-    val q = all.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("em").as("qem"),
-        col("n2").as("qn2"), col("mx").as("qmx"), col("q8").as("qq8"))
+    val q = querySide(all, queryPred, col("mx").as("qmx"), col("q8").as("qq8"))
     val approx = all.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+      .select(col("query_id"), col("vec_id"),
         (doti(col("qq8"), col("q8")) * col("qmx") * col("mx")).as("approx"),
         col("em"), col("n2"), col("qem"), col("qn2"))
-    val w8 = Window.partitionBy("query_id").orderBy(col("approx").desc, col("neighbor_id"))
-    val cands = approx.withColumn("rn8", row_number().over(w8))
-      .filter(col("rn8") <= k * rerank)
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(doti(col("qem"), col("em")), col("qn2"), col("n2")).as("cos_sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cands.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    nearest(firstN(approx, k * rerank, col("approx").desc, col("vec_id")), k)
   }
 
   /** Deterministic hyperplane component p,d ∈ [-1000, 1000]:
@@ -228,9 +254,13 @@ object Ann {
     * the driver (same md5 math the oracle SQL uses) so the bucket expression
     * is pure integer literals.
     */
-  def planeComponent(p: Int, d: Int): Long = {
+  def planeComponent(p: Int, d: Int): Long = component("plane", p, d)
+
+  /** `h32(tag || '-' || i || '-' || d) % 2001 - 1000`, the one derivation
+    * behind [[planeComponent]] and [[centroidComponent]]. */
+  private def component(tag: String, i: Int, d: Int): Long = {
     val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"plane-$p-$d".getBytes("UTF-8"))
+      .digest(s"$tag-$i-$d".getBytes("UTF-8"))
     val hex = digest.take(4).map(b => f"$b%02x").mkString
     java.lang.Long.parseLong(hex, 16) % 2001 - 1000
   }
@@ -239,40 +269,23 @@ object Ann {
     * matrix is a compile-time constant folded into the expression — no
     * broadcast needed.
     */
-  def lshBuckets(vecs: DataFrame): DataFrame = {
-    val all = prepared(vecs)
-    // fold the plane dot products as column expressions over the milli array
-    val bucket = (0 until NumPlanes).map { p =>
-      val planeArr = array((0 until Dim).map(d => lit(planeComponent(p, d))): _*)
-      val dot = doti(col("em"), planeArr)
-      when(dot > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    all.withColumn("bucket", bucket)
-  }
+  def lshBuckets(vecs: DataFrame): DataFrame =
+    prepared(vecs).withColumn("bucket", signBits(0, NumPlanes))
 
   val IvfCells = 16
 
   /** Deterministic IVF centroid component (same md5 derivation family as the
     * LSH planes; no trained k-means — public-deterministic for the oracle).
     */
-  def centroidComponent(c: Int, d: Int): Long = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"centroid-$c-$d".getBytes("UTF-8"))
-    val hex = digest.take(4).map(b => f"$b%02x").mkString
-    java.lang.Long.parseLong(hex, 16) % 2001 - 1000
-  }
+  def centroidComponent(c: Int, d: Int): Long = component("centroid", c, d)
 
   /** IVF cell assignment: argmax dot product against the fixed centroid set
     * (ties break to the lower cell index). The scale path buckets vectors
     * into IvfCells partitions; search probes the query's cell only.
     */
   def ivfAssign(vecs: DataFrame): DataFrame = {
-    val all = prepared(vecs)
-    val dots = (0 until IvfCells).map { c =>
-      val carr = array((0 until Dim).map(d => lit(centroidComponent(c, d))): _*)
-      doti(col("em"), carr).as(s"d_$c")
-    }
-    val withDots = all.select((col("vec_id") +: col("em") +: col("n2") +: dots): _*)
+    val dots = centroidDots.zipWithIndex.map { case (dot, c) => dot.as(s"d_$c") }
+    val withDots = prepared(vecs).select((col("vec_id") +: col("em") +: col("n2") +: dots): _*)
     val maxDot = greatest((0 until IvfCells).map(c => col(s"d_$c")): _*)
     val cell = (0 until IvfCells).foldLeft(Option.empty[Column]) {
       case (None, c) => Some(when(col(s"d_$c") === maxDot, lit(c)))
@@ -293,18 +306,9 @@ object Ann {
     * probed cell's files), then serve queries without recomputing
     * assignments or rescanning the corpus.
     */
-  def ivfTopKFromIndex(index: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    val all = index
-    val q = all.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("em").as("qem"),
-        col("n2").as("qn2"), col("ivf_cell").as("qcell"))
-    val joined = all.join(q, col("ivf_cell") === col("qcell")
-        && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(doti(col("qem"), col("em")), col("qn2"), col("n2")).as("cos_sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    joined.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-  }
+  def ivfTopKFromIndex(index: DataFrame, queryPred: Column, k: Int): DataFrame =
+    nearestInBucket(index, querySide(index, queryPred, col("ivf_cell").as("qcell")),
+      "ivf_cell", "qcell", k)
 
   /** IVF multi-probe ANN top-k: each query probes its `nProbe` best centroid
     * cells (by centroid dot product, lower cell index on ties) instead of
@@ -315,25 +319,12 @@ object Ann {
     */
   def ivfMultiProbeTopK(vecs: DataFrame, queryPred: Column, k: Int,
                         nProbe: Int = 2): DataFrame = {
-    val assigned = ivfAssign(vecs)
-    val all = prepared(vecs)
-    val dotsArr = array((0 until IvfCells).map { c =>
-      val carr = array((0 until Dim).map(d => lit(centroidComponent(c, d))): _*)
-      doti(col("em"), carr)
-    }: _*)
-    val q0 = all.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("em").as("qem"), col("n2").as("qn2"),
-        posexplode(dotsArr).as(Seq("cell", "dot")))
-    val wq = Window.partitionBy("query_id").orderBy(col("dot").desc, col("cell"))
-    val probes = q0.withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nProbe)
+    val index = ivfAssign(vecs)
+    val q = querySide(prepared(vecs), queryPred,
+      posexplode(array(centroidDots: _*)).as(Seq("cell", "dot")))
+    val probes = firstN(q, nProbe, col("dot").desc, col("cell"))
       .select(col("query_id"), col("qem"), col("qn2"), col("cell").cast("long").as("pcell"))
-    val joined = assigned.join(probes,
-        col("ivf_cell") === col("pcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(doti(col("qem"), col("em")), col("qn2"), col("n2")).as("cos_sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    joined.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    nearestInBucket(index, probes, "ivf_cell", "pcell", k)
   }
 
   /** ANN top-k within LSH bucket (the scale path; recall < 1 by design).
@@ -342,14 +333,7 @@ object Ann {
     */
   def lshTopK(vecs: DataFrame, queryPred: Column, k: Int): DataFrame = {
     val all = lshBuckets(vecs)
-    val q = all.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("em").as("qem"),
-        col("n2").as("qn2"), col("bucket").as("qbucket"))
-    val joined = all.join(q, col("bucket") === col("qbucket")
-        && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(doti(col("qem"), col("em")), col("qn2"), col("n2")).as("cos_sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    joined.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    nearestInBucket(all, querySide(all, queryPred, col("bucket").as("qbucket")),
+      "bucket", "qbucket", k)
   }
 }

@@ -171,50 +171,44 @@ object TextOps {
   val NumHashes = 16
   val BandRows = 4
 
-  /** MinHash signatures over 3-word shingles: NumHashes permutations
-    * `(a_j·h + b_j) mod P` with a_j = 2j+1, b_j = 12345j+7, banded into
-    * NumHashes/BandRows LSH bands. Output: one row per (doc, band) with the
-    * band key — equi-joinable to find near-dup candidates (shingle →
-    * minhash → band → bucket-join).
-    *
-    * Scale: signatures are computed per-row with array lambdas (narrow);
-    * the bucket join shuffles on (band, key) which is md5-uniform.
-    */
   /** The 16-permutation MinHash signature as one kernel expression over
     * `text` (shared by [[minhashBands]] and [[corpusSelect]]'s scorecard). */
   private def minhashSigExpr: Column =
     org.apache.spark.sql.graft.TextExpressions.minhash_sig(
       shingleHashes(col("text"), 3), NumHashes)
 
-  /** Band rows from a (doc_id, sig) frame (null sigs — docs with no
-    * shingles — must not emit bands). */
-  private def bandsOfSig(sigged: DataFrame): DataFrame = {
-    val bands = (0 until NumHashes / BandRows).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("_", (0 until BandRows).map(r =>
-          element_at(col("sig"), b * BandRows + r + 1)): _*).as("band_key"))
-    }
-    sigged.filter(col("sig").isNotNull)
-      .select(col("doc_id"), explode(array(bands: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").cast("long").as("band"),
-        col("bk.band_key").as("band_key"))
-  }
+  private val BandKeys = (0 until NumHashes / BandRows).map(b => s"band$b")
 
-  def minhashBands(docs: DataFrame): DataFrame =
-    // per-row kernel: ONE call hashes the doc's shingle set and folds all 16
-    // permutation minima — no explode, no groupBy, no shuffle
-    bandsOfSig(docs.select(col("doc_id"), minhashSigExpr.as("sig")))
+  /** The one band-key derivation: a (doc_id, sig) frame as one row per doc
+    * with a non-null sig (docs with no shingles have no bands), holding each
+    * band's key — its BandRows signature minima joined by "_" — as a column
+    * of [[BandKeys]]. The long band rows and the pair join both read it. */
+  private def bandKeys(sigged: DataFrame): DataFrame =
+    sigged.filter(col("sig").isNotNull).select(col("doc_id") +: BandKeys.indices.map { b =>
+      concat_ws("_", (0 until BandRows).map(r => element_at(col("sig"), b * BandRows + r + 1)): _*)
+        .as(BandKeys(b))
+    }: _*)
 
-  /** Band-bucket self-join → candidate pairs (a < b, distinct). The two
-    * sides alias the SAME plan, so the bucket exchange is computed once and
-    * reused. */
-  private[text] def pairsOfBands(bands: DataFrame): DataFrame = {
-    val a = bands.as("a"); val b = bands.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key")
-      && col("a.doc_id") < col("b.doc_id"))
+  /** Candidate pairs (doc_a < doc_b, each once) of a (doc_id, sig) frame:
+    * docs whose signatures agree on every minimum of at least one band,
+    * kept at their first agreeing band by [[firstBandPairs]]. */
+  private def pairsOfSig(sigged: DataFrame): DataFrame =
+    firstBandPairs(bandKeys(sigged), "doc_id", BandKeys)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-  }
+
+  /** MinHash signatures over 3-word shingles: NumHashes permutations
+    * `(a_j·h + b_j) mod P` with a_j = 2j+1, b_j = 12345j+7, banded into
+    * NumHashes/BandRows LSH bands. Output: one row per (doc, band) with the
+    * band key, (doc_id, band, band_key) — the long form of [[bandKeys]] that
+    * the `dedup` job's signature table and [[incrementalDedup]]'s index keep.
+    *
+    * Scale: one per-row kernel call hashes the doc's shingle set and folds
+    * all 16 permutation minima — no groupBy, no shuffle.
+    */
+  def minhashBands(docs: DataFrame): DataFrame =
+    bandKeys(docs.select(col("doc_id"), minhashSigExpr.as("sig")))
+      .select(col("doc_id"), posexplode(array(BandKeys.map(col): _*)).as(Seq("band", "band_key")))
+      .withColumn("band", col("band").cast("long"))
 
   /** Candidate pairs of a per-band key table, each pair once. `keyed` holds
     * an `id` column and one key column per band (`keys`, in band order).
@@ -241,9 +235,13 @@ object TextOps {
       && firstAgreeing)
   }
 
-  /** Near-dup candidate pairs from the MinHash bands (a < b, distinct). */
+  /** Near-dup candidate pairs from the MinHash bands: (doc_a, doc_b),
+    * doc_a < doc_b, for docs that share at least one band key. Each pair is
+    * emitted once, at its first shared band ([[firstBandPairs]], as
+    * [[simhashPairs]]), so no distinct runs over the candidates. Scale: one
+    * shuffle on (band, key) that both join sides reuse; never all-pairs. */
   def minhashPairs(docs: DataFrame): DataFrame =
-    pairsOfBands(minhashBands(docs))
+    pairsOfSig(docs.select(col("doc_id"), minhashSigExpr.as("sig")))
 
   /** Incremental MinHash dedup against a persistent signature table — the
     * shape a 100 TB corpus actually runs: signatures are computed ONCE per
@@ -529,7 +527,7 @@ object TextOps {
     val f1 = scored0.select(col("doc_id"), col("quality_score"),
         pred.as("pred_lang"), col("sig"))
       .localCheckpoint()
-    val pairs = pairsOfBands(bandsOfSig(f1.select(col("doc_id"), col("sig"))))
+    val pairs = pairsOfSig(f1.select(col("doc_id"), col("sig")))
     val keep = keepBestScored(f1.select(col("doc_id"), col("quality_score")), pairs)
       .withColumnRenamed("keep_id", "doc_id")
       .withColumnRenamed("keep_quality", "quality_score")

@@ -445,19 +445,20 @@ class OpsSpec extends SparkSpec {
   }
 
   test("simhash and LSH pair joins do not depend on partitioning, AQE, join strategy or codegen") {
-    val names = Seq("q_simhash_pairs", "q_lsh_pairs_banded", "q_lsh_pairs")
+    val names = Seq("q_simhash_pairs", "q_lsh_pairs_banded", "q_lsh_pairs", "q_minhash_pairs")
     def run(): Seq[Row] = names.map(q => hash(SparkEntry.queries(q)(spark, Sf)))
     val base = run()
     names.zip(base).foreach { case (q, r) => assert(r.getLong(1) > 0, s"$q is empty at $Sf") }
     for (conf <- IncidentalConfs) assert(withConf(conf)(run()) === base, s"under $conf")
     // both sides of each self-join are one exchange, computed once and
-    // reused: under a shuffle join for all three, and under the default
+    // reused: under a shuffle join for all four, and under the default
     // (broadcast) join too for the first-band joins, whose band rows are
     // hash-partitioned before the join. A one-sided filter breaks the reuse.
     val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
     val shuffled = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    for ((q, conf) <- names.map(_ -> shuffled) ++
-        Seq("q_simhash_pairs", "q_lsh_pairs_banded").map(_ -> Seq.empty)) withConf(conf) {
+    val cases = names.map(_ -> shuffled) ++
+      Seq("q_simhash_pairs", "q_lsh_pairs_banded", "q_minhash_pairs").map(_ -> Seq.empty)
+    for ((q, conf) <- cases) withConf(conf) {
       val df = SparkEntry.queries(q)(spark, Sf)
       df.collect()
       val reused = plans.collect(df.queryExecution.executedPlan) {

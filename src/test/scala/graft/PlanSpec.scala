@@ -137,6 +137,15 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("minhash pairs join on the first shared band with no aggregate") {
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    val df = SparkEntry.queries("q_minhash_pairs")(spark, Sf)
+    df.collect()
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val aggs = plans.collect(df.queryExecution.executedPlan) { case a: HashAggregateExec => a }
+    assert(aggs.isEmpty, s"q_minhash_pairs must not aggregate:\n${df.queryExecution.executedPlan}")
+  }
+
   test("salted join is a shuffle join with the replica side as build side") {
     val plan = planOf(SparkEntry.queries("q_salted_join")(spark, Sf))
     assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),

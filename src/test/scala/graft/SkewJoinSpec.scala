@@ -29,4 +29,15 @@ class SkewJoinSpec extends SparkSpec {
     assert(hot.contains("HOT"))
     assert(hot.size < 5)
   }
+
+  test("hot key detection is seeded and yields no keys on an empty sample") {
+    val empty = Seq.empty[(Long, String)].toDF("id", "key")
+    assert(SkewJoin.hotKeys(empty, "key") === Nil)
+    // 2,000 keys of 10 rows each and a zero threshold: the keys returned
+    // are the keys the 1% sample caught, which only its seed decides
+    val flat = (0 until 20000).map(i => (i.toLong, s"k${i % 2000}")).toDF("id", "key")
+    val first = SkewJoin.hotKeys(flat, "key", threshold = 0.0)
+    assert(first.nonEmpty)
+    assert(SkewJoin.hotKeys(flat, "key", threshold = 0.0).sorted === first.sorted)
+  }
 }

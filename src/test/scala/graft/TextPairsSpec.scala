@@ -94,10 +94,10 @@ class ComponentsSpec extends SparkSpec {
     val revChain = (0L until 25L).sliding(2).map(s => (5025L - s(0), 5025L - s(1))).toSeq
     val edges = chain ++ star ++ clique ++ random ++ revChain
     val nodes = edges.flatMap(p => Seq(p._1, p._2)).distinct
-    // smallCutoff = 0 forces the DISTRIBUTED star-contraction path (the
-    // production default would short-circuit a pair list this small)
+    // the DISTRIBUTED star-contraction path, called directly (components
+    // would short-circuit a pair list this small)
     val got = ops.ConnectedComponents
-      .components(edges.toDF("doc_a", "doc_b"), smallCutoff = 0L)
+      .starContraction(edges.toDF("doc_a", "doc_b"))
       .as[(Long, Long)].collect().toMap
     val want = bruteComponents(nodes, edges)
     assert(got === want)
