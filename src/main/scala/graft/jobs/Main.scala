@@ -160,7 +160,7 @@ object Main {
           // a single-cell probe: queries AND neighbors both live in the
           // probed cell, so the pruned read IS the full working set
           val served = Ann.ivfTopKFromIndex(
-            Icelite.readWhere(spark, table, "ivf_cell", probeCell, probeCell),
+            Icelite.readWhere(spark, table, ("ivf_cell", probeCell, probeCell)),
             col("vec_id") % 10 === 0, k = 5)
           println(s"""{"job":"annindex","vectors":${snap.rowCount},""" +
             s""""files":${snap.files.size},"files_probed":$openable,""" +

@@ -159,6 +159,9 @@ object Icelite {
     if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
   }
 
+  private def currentId(table: String): Long = currentSnapshotId(table).getOrElse(
+    throw new IllegalStateException(s"no committed snapshot in $table"))
+
   /** The manifest codec (the Iceberg spec's manifest list + manifest files).
     * A manifest `snapshot-<id>.json` is one object — `id`, `uuid`,
     * `rowCount`, `inputFingerprint`, `nBuckets`, `bucketSpec`, `schemaJson`
@@ -473,7 +476,7 @@ object Icelite {
     // commit: the ANN index, a time-ordered event log) segment into ~√n
     // path-sorted chunks instead of one flat list: path order follows the
     // writer's partition order, so each chunk's aggregated bounds are tight
-    // and [[readWhereAll]] prunes whole chunks at the list level — a balanced
+    // and [[readWhere]] prunes whole chunks at the list level — a balanced
     // O(√n)-refs-per-manifest, O(√n)-entries-per-segment hierarchy at any n.
     val (sliced, unsliced) = entries.partition(_.mod > 0)
     val slicedGroups = sliced.groupBy(_.res % base).toSeq.sortBy(_._1).map(_._2)
@@ -550,17 +553,16 @@ object Icelite {
     m
   }
 
-  /** The file indices of `files` whose hash-slice claim intersects the
-    * incoming batch (plus every unsliced file — no claim to prune on).
-    * One distributed aggregation: the batch's distinct (mod, res) residues
-    * per distinct modulus, equi-joined against the (small) file-entry list —
-    * the collected result is ≤ #files rows, never #batch rows.
+  /** The `files` whose hash-slice claim intersects the incoming batch, plus
+    * every unsliced file (no claim to prune on). One distributed
+    * aggregation: the batch's distinct (mod, res) residues per distinct
+    * modulus, equi-joined against the (small) file-entry list — the
+    * collected result is ≤ #files rows, never #batch rows.
     */
   private def touchedFiles(spark: SparkSession, incoming: DataFrame,
-                           files: Seq[FileEntry]): Set[Int] = {
+                           files: Seq[FileEntry]): Seq[FileEntry] = {
     val mods = files.map(_.mod).filter(_ > 0).distinct
-    val unsliced = files.zipWithIndex.collect { case (f, i) if f.mod == 0 => i }.toSet
-    if (mods.isEmpty) return unsliced
+    if (mods.isEmpty) return files
     import spark.implicits._
     val pairs = incoming.select(explode(array(mods.map(m =>
         struct(lit(m).as("m"), pmod(col("__h"), lit(m)).as("r"))): _*)).as("p"))
@@ -570,38 +572,78 @@ object Icelite {
       .toDF("m", "r", "idx")
     val hit = pairs.join(fileDf, Seq("m", "r")).select("idx")
       .collect().map(_.getInt(0)).toSet
-    unsliced ++ hit
+    files.indices.collect { case i if files(i).mod == 0 || hit(i) => files(i) }
   }
 
-  /** S17 — MERGE-style idempotent upsert commit (the snapshot-table analog of
-    * `INSERT … ON CONFLICT DO UPDATE`,
-    * /root/reference/extract_stac_metadata.py:133-198): dedup the incoming
-    * batch on its primary key, drop current-snapshot rows whose PK collides
-    * (incoming wins — DO UPDATE), union, and commit as the next snapshot.
+  /** A planned rewrite of a base snapshot: the base files it `replaces`, the
+    * `frame` written in their place (with its `__slice` column), and the new
+    * snapshot's header. */
+  private case class Rewrite(replaces: Seq[FileEntry], frame: DataFrame,
+                             inputFingerprint: String, nBuckets: Int, bucketSpec: String)
+
+  /** The optimistic rewrite [[merge]] and [[compact]] share: read the current
+    * base, `plan` a rewrite of it (None: nothing to rewrite), write the frame
+    * and commit the base's other files plus the new ones only if the base is
+    * still current. A lost race drops the write and replans from the
+    * winner's snapshot instead of silently dropping its rows. Returns how
+    * many base files were replaced and the snapshot the table is left at
+    * (the base when there was nothing to rewrite).
+    */
+  private def rewrite(table: String, op: String)(
+      plan: Option[Snapshot] => Option[Rewrite]): (Int, Option[Snapshot]) = {
+    var attempt = 0
+    while (attempt < 8) {
+      attempt += 1
+      val baseId = currentSnapshotId(table)
+      val uuid = UUID.randomUUID().toString
+      try {
+        val base = baseId.map(readManifest(table, _))
+        plan(base) match {
+          case None => return (0, base)
+          case Some(rw) =>
+            val replaced = rw.replaces.map(_.path).toSet
+            val carried = base.fold(Seq.empty[FileEntry])(_.files.filterNot(f => replaced(f.path)))
+            // safe to stream from the base: the frame is written to a fresh
+            // uuid dir, so the plan's input files are never overwritten mid-scan
+            val (_, written, schemaJson) = writeData(rw.frame, table, uuid)
+            commitEntries(table, uuid, carried ++ written, rw.inputFingerprint, rw.nBuckets,
+              rw.bucketSpec, schemaJson, Some(baseId)) match {
+              case Some(snap) => return (replaced.size, Some(snap))
+              case None => abandon(table, uuid)
+            }
+        }
+      } catch {
+        // a superseded base's manifest and files can be GC'd (expire retains
+        // only the newest snapshots) while this attempt still reads them —
+        // the failure then means "stale base", not "bad data", so retry from
+        // the advanced snapshot. Only non-fatal errors, only when the base
+        // demonstrably moved, and never without dropping the attempt's
+        // half-written data and marker (the marker would otherwise shield
+        // the orphan from GC for a day).
+        case NonFatal(e) if currentSnapshotId(table) != baseId =>
+          abandon(table, uuid)
+          System.err.println(s"[icelite] $op attempt $attempt on $table " +
+            s"read a superseded base ($baseId): ${e.getMessage}; retrying")
+      }
+    }
+    throw new IllegalStateException(s"$op on $table lost 8 commit races")
+  }
+
+  /** S17 — idempotent upsert, the snapshot-table analog of `INSERT … ON
+    * CONFLICT DO UPDATE` (extract_stac_metadata.py:133-198): the batch,
+    * deduplicated on `pkCols`, replaces every row whose PK it holds (incoming
+    * wins) and commits as the next snapshot. Re-running a merge converges to
+    * the same rows; a crash before the pointer swap leaves the previous
+    * snapshot intact.
     *
-    * O(batch) in BOTH IO and file size: data files carry hash-slice claims
-    * (see object scaladoc), so the merge reads and rewrites ONLY the files
-    * whose claim intersects the batch's PK hashes; every other file entry is
-    * carried into the new manifest verbatim (path + lineage), exactly like
-    * Iceberg carries untouched data files. The rewrite is written at a
-    * modulus `nBuckets · 2^d` sized so no output file exceeds
-    * `maxRowsPerFile` — slices refine as the table grows instead of fattening
-    * a fixed bucket (the reference's `ON CONFLICT` touches only conflicting
-    * rows; at 100 TB a daily metadata upsert must not rewrite 100 TB, nor
-    * leave 3 TB files behind).
-    *
-    * Idempotent: re-running the same merge converges to the same row set
-    * (modulo snapshot id), and a crash before the pointer swap leaves the
-    * previous snapshot intact. Concurrency-safe: the row set is computed
-    * against a base snapshot and committed only if that base is still
-    * current (checked under the table lock); a lost race recomputes from
-    * the winner's snapshot instead of silently dropping its upserts.
-    *
-    * The slice hash is over `pkCols` in order; the spec is persisted in the
-    * manifest and checked — merging with different PK columns (or a
-    * different `nBuckets` base, or onto an unsliced [[commit]] snapshot)
-    * takes a one-time full re-slicing rewrite rather than trusting claims
-    * computed under a different key.
+    * O(batch) in IO and file size: only the files whose hash-slice claim
+    * intersects the batch are rewritten (the rest carry verbatim, as Iceberg
+    * carries untouched data files), at a modulus `nBuckets · 2^d` sized to
+    * the rewrite set, not the table — at 100 TB a daily upsert must neither
+    * rewrite the table nor leave 3 TB files behind. Claims are trusted only
+    * under the same PK spec and `nBuckets`: any other base, an unsliced
+    * [[commit]] snapshot included, is rewritten whole, once, rather than
+    * trusting claims computed under a different key.
     */
   def merge(spark: SparkSession, df: DataFrame, table: String,
             pkCols: Seq[String], inputFingerprint: String = "",
@@ -614,99 +656,39 @@ object Icelite {
     // it for the merge's duration
     graft.Session.pinned(df.dropDuplicates(pkCols).withColumn("__h", hcol)) { incoming =>
       val nIncoming = incoming.count()
-      // one optimistic attempt: Some(snapshot), or None when the base moved
-      // under it (a lost commit race, or a read of a superseded base)
-      def attempt(n: Int): Option[Snapshot] = {
-        val baseId = currentSnapshotId(table)
-        val attemptUuid = UUID.randomUUID().toString
-        try {
-          val (carried, toMerge, estRows, atLeastMod): (Seq[FileEntry], DataFrame, Long, Int) =
-            baseId match {
-              case None => (Seq.empty, incoming, nIncoming, 1)
-              case Some(id) =>
-                val base = readManifest(table, id)
-                if (base.files.isEmpty) {
-                  // zero-file base (a committed empty frame): nothing to carry
-                  (Seq.empty, incoming, nIncoming, 1)
-                } else if (base.bucketSpec == spec && base.nBuckets == nBuckets) {
-                  // slice-granular path: rewrite only claim-intersecting files
-                  val touched = touchedFiles(spark, incoming, base.files)
-                  val (hotIdx, carryIdx) = base.files.indices.partition(touched)
-                  val hot = hotIdx.map(base.files)
-                  val carry = carryIdx.map(base.files)
-                  val merged =
-                    if (hot.isEmpty) incoming
-                    else scan(spark, base.schemaJson, hot.map(_.path))
-                      .join(incoming.select(pkCols.map(qcol): _*).distinct(), pkCols, "left_anti")
-                      .withColumn("__h", hcol)
-                      .unionByName(incoming)
-                  // a hot slice's surviving rows stay concentrated in its
-                  // claim region (m/f.mod residues of the output modulus), so
-                  // the output must be at least each hot file's concentrated
-                  // split point — the uniform estimate alone would leave a
-                  // fat slice's rows in one oversized output file
-                  val hotFloor = (1 +: hot.map(f =>
-                    concentratedModulus(f.mod, f.rows, maxRowsPerFile))).max
-                  (carry, merged, hot.map(_.rows).sum + nIncoming, hotFloor)
-                } else {
-                  // PK-spec / bucket-base change, or unsliced commit() snapshot:
-                  // claims computed under a different key are untrustworthy —
-                  // full re-slicing rewrite
-                  val all = scan(spark, base.schemaJson, base.filePaths)
-                    .join(incoming.select(pkCols.map(qcol): _*).distinct(), pkCols, "left_anti")
-                    .withColumn("__h", hcol)
-                    .unionByName(incoming)
-                  (Seq.empty, all, base.rowCount + nIncoming, 1)
-                }
-            }
-          // output modulus: nBuckets·2^d sized to the rewrite set (not the
-          // table), floored at every hot file's concentrated split point; the
-          // bound is approximate (hot + uniform parts can stack to ~2×) —
-          // [[compact]] enforces it strictly
-          val m = math.max(uniformModulus(nBuckets, estRows, maxRowsPerFile), atLeastMod)
-          val sliced = toMerge
-            .withColumn("__slice", sliceOf(m))
-            // a USING join puts the key columns first — restore the caller's
-            // column order so every data file shares one schema layout
-            .select(df.columns.map(qcol) :+ col("__slice"): _*)
-          // safe to stream from the current snapshot: data is written to a fresh
-          // uuid dir, so the plan's input files are never overwritten mid-scan
-          val (uuid, newEntries, schemaJson) = writeData(sliced, table, attemptUuid)
-          val committed = commitEntries(table, uuid, carried ++ newEntries, inputFingerprint,
-            nBuckets, spec, schemaJson, Some(baseId))
-          // base advanced under us: drop the orphan write, recompute
-          if (committed.isEmpty) abandon(table, uuid)
-          committed
-        } catch {
-          // a lost-race base's files can be GC'd (expire retains only the
-          // newest snapshots) while this attempt is still scanning them —
-          // the resulting read failure means "stale base", not "bad data";
-          // retry from the advanced snapshot instead of failing the upsert.
-          // Only non-fatal errors, only when the base demonstrably moved, and
-          // never without dropping the attempt's half-written data + marker
-          // (the marker would otherwise shield the orphan from GC for a day).
-          case scala.util.control.NonFatal(e) if currentSnapshotId(table) != baseId =>
-            abandon(table, attemptUuid)
-            System.err.println(s"[icelite] merge attempt $n on $table " +
-              s"read a superseded base ($baseId): ${e.getMessage}; retrying")
-            None
-        }
-      }
-      (1 to 8).iterator.flatMap(attempt).nextOption().getOrElse(
-        throw new IllegalStateException(s"merge on $table lost 8 commit races"))
+      rewrite(table, "merge") { base =>
+        val files = base.fold(Seq.empty[FileEntry])(_.files)
+        val trusted = base.exists(b => b.bucketSpec == spec && b.nBuckets == nBuckets)
+        val hot = if (trusted) touchedFiles(spark, incoming, files) else files
+        val merged =
+          if (hot.isEmpty) incoming
+          else scan(spark, base.get.schemaJson, hot.map(_.path))
+            .join(incoming.select(pkCols.map(qcol): _*).distinct(), pkCols, "left_anti")
+            .withColumn("__h", hcol)
+            .unionByName(incoming)
+        // a trusted hot slice's surviving rows stay concentrated in its claim
+        // region (m/f.mod residues of the output modulus), so the modulus is
+        // at least each such file's concentrated split point — the uniform
+        // estimate alone would leave a fat slice's rows in one oversized
+        // file. The bound is approximate (hot + uniform parts can stack to
+        // ~2×); [[compact]] enforces it strictly.
+        val floors =
+          if (trusted) hot.map(f => concentratedModulus(f.mod, f.rows, maxRowsPerFile)) else Nil
+        val estRows = hot.map(_.rows).sum + nIncoming
+        val m = (uniformModulus(nBuckets, estRows, maxRowsPerFile) +: floors).max
+        // a USING join puts the key columns first — restore the caller's
+        // column order so every data file shares one schema layout
+        Some(Rewrite(hot, merged.withColumn("__slice", sliceOf(m))
+          .select(df.columns.map(qcol) :+ col("__slice"): _*), inputFingerprint, nBuckets, spec))
+      }._2.get
     }
   }
 
-  /** Maintenance: rewrite data files violating the size bound — split files
-    * over `maxRowsPerFile` to a finer slice modulus, and coalesce sibling
-    * slice pairs ((2p, r), (2p, r+p)) whose combined rows fit in half the
-    * bound back to their parent (p, r) (shrink-deletes leave slivers).
-    * Untouched files carry verbatim; the commit is optimistic against
-    * concurrent merges. Returns (filesRewritten, filesInNewSnapshot) —
-    * (0, current file count) when nothing violates the bound.
-    *
-    * The Iceberg `rewrite_data_files` analog; at 100 TB this runs as a
-    * background job and each group rewrite is an independent bounded task.
+  /** Maintenance, the Iceberg `rewrite_data_files` analog: split files over
+    * `maxRowsPerFile` to a finer slice modulus, and coalesce sibling slice
+    * pairs ((2p, r), (2p, r+p)) whose rows fit in half the bound back to
+    * their parent (p, r) — shrink-deletes leave slivers. Returns
+    * (filesRewritten, filesInNewSnapshot).
     */
   def compact(spark: SparkSession, table: String,
               maxRowsPerFile: Long = DefaultMaxRowsPerFile): (Int, Int) = {
@@ -727,56 +709,39 @@ object Icelite {
 
   private def compactPass(spark: SparkSession, table: String,
                           maxRowsPerFile: Long): (Int, Int) = {
-    var attempt = 0
-    while (attempt < 8) {
-      attempt += 1
-      val baseId = currentSnapshotId(table).getOrElse(return (0, 0))
-      val base = readManifest(table, baseId)
+    val (rewritten, snap) = rewrite(table, "compact")(_.flatMap { base =>
       if (base.bucketSpec.isEmpty)
         throw new IllegalStateException(
           s"compact($table): table has no PK slice spec (written by commit(), " +
             "not merge()) — re-slice it with a merge first")
-      val pkCols = base.bucketSpec.split(",").toSeq
-      val hcol = sliceHash(pkCols)
+      val hcol = sliceHash(base.bucketSpec.split(",").toSeq)
       val baseM = math.max(1, base.nBuckets)
-
       val oversized = base.files.filter(_.rows > maxRowsPerFile)
-      val smallSiblings: Seq[Seq[FileEntry]] = base.files
+      val smallSiblings = base.files
         .filter(f => f.mod > baseM && f.mod % 2 == 0 && f.rows <= maxRowsPerFile)
         .groupBy(f => (f.mod, f.res % (f.mod / 2)))
         .values.toSeq
         .filter(g => g.size == 2 && g.map(_.rows).sum <= maxRowsPerFile / 2)
-      val groups: Seq[(Seq[FileEntry], Int)] =
+      val groups =
         oversized.map(f => (Seq(f), concentratedModulus(f.mod, f.rows, maxRowsPerFile))) ++
           smallSiblings.map(g => (g, g.head.mod / 2))
-      if (groups.isEmpty) return (0, base.files.size)
-
-      val rewriting = groups.flatMap(_._1).map(_.path).toSet
-      val carried = base.files.filterNot(f => rewriting(f.path))
-      val rewritten = groups.map { case (fs, target) =>
-        scan(spark, base.schemaJson, fs.map(_.path))
-          .withColumn("__h", hcol)
-          .withColumn("__slice", sliceOf(target))
-          .drop("__h")
-      }.reduce(_ unionByName _)
-      val (uuid, newEntries, schemaJson) = writeData(rewritten, table)
-      commitEntries(table, uuid, carried ++ newEntries, base.inputFingerprint,
-        base.nBuckets, base.bucketSpec, schemaJson, Some(Some(baseId))) match {
-        case Some(snap) => return (rewriting.size, snap.files.size)
-        case None => abandon(table, uuid)
-      }
-    }
-    throw new IllegalStateException(s"compact on $table lost 8 commit races")
+      Option.when(groups.nonEmpty)(Rewrite(groups.flatMap(_._1),
+        groups.map { case (fs, target) =>
+          scan(spark, base.schemaJson, fs.map(_.path))
+            .withColumn("__h", hcol)
+            .withColumn("__slice", sliceOf(target))
+            .drop("__h")
+        }.reduce(_ unionByName _),
+        base.inputFingerprint, base.nBuckets, base.bucketSpec))
+    })
+    (rewritten, snap.fold(0)(_.files.size))
   }
 
   /** Read the current snapshot's rows (only manifest-listed files — uncommitted
     * data dirs are invisible).
     */
-  def read(spark: SparkSession, table: String): DataFrame = {
-    val id = currentSnapshotId(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    readAt(spark, table, id)
-  }
+  def read(spark: SparkSession, table: String): DataFrame =
+    readAt(spark, table, currentId(table))
 
   /** Time travel: read snapshot `id` as of its commit (Iceberg
     * `VERSION AS OF` analog). Any still-retained manifest id works — data
@@ -817,9 +782,7 @@ object Icelite {
     */
   def filesDf(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    val id = currentSnapshotId(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    readManifest(table, id).files
+    readManifest(table, currentId(table)).files
       .map(f => (f.path, f.mod, f.res, f.rows, f.checksum,
         f.stats.map { case (c, (lo, hi)) => (c, lo, hi) }.toSeq.sortBy(_._1)))
       .toDF("path", "mod", "res", "rows", "checksum", "stats")
@@ -849,42 +812,25 @@ object Icelite {
     list(metaDir(table)).map(_.getFileName.toString)
       .collect { case SnapshotFile(id) => id.toLong }.sorted
 
-  /** Manifest-level data skipping (the Iceberg scan-planning analog): read
-    * only the files whose zone map can intersect `[lo, hi]` on `column`,
-    * with the exact range filter applied on top (stats pruning is an IO
-    * optimization, never a semantics change — files without stats are always
-    * read). Parquet row-group stats prune WITHIN a file only after its footer
-    * is opened; manifest stats prune the file list on the driver before the
-    * scan is even planned, which at the 10^6-file design point is the
-    * difference between listing/opening every file and touching only the
-    * matching ones.
-    */
-  def readWhere(spark: SparkSession, table: String, column: String,
-                lo: Any, hi: Any): DataFrame =
-    readWhereAll(spark, table, Seq((column, lo, hi)))
-
-  /** Conjunctive multi-range scan planning: a file survives only if EVERY
-    * range can intersect its zone map (ranges on stat-less columns never
-    * prune). The exact conjunction is applied on top, so this is still an
-    * IO optimization, never a semantics change — e.g. a (time range ∧ id
-    * range) query over a table clustered by either column opens only the
-    * doubly-matching files.
+  /** Manifest-level data skipping (the Iceberg scan-planning analog): the
+    * rows inside every `(column, lo, hi)` range, reading only the files whose
+    * zone maps can intersect every range (a range on a stat-less column
+    * never prunes). The exact conjunction is applied on top, so pruning is
+    * an IO optimization, never a semantics change. Parquet row-group stats
+    * prune within a file only after its footer is opened; manifest stats
+    * prune the file list on the driver before the scan is planned.
     *
-    * Pruning runs at BOTH metadata levels: whole manifest segments whose
-    * aggregated zone map excludes a range are never even read (the Iceberg
-    * manifest-list partition-summary analog; at the 10^6-file design point
-    * this is the difference between parsing every segment's entry list on
-    * the driver and opening only the matching buckets' segments), then
-    * per-file zone maps within the surviving segments. Integrity holds with
-    * segments skipped: the list sums to rowCount and every parsed segment
-    * sums to its ref, so a truncated segment still fails loudly.
+    * Pruning runs at both metadata levels: segments whose aggregated zone
+    * map excludes a range are never read (at the 10^6-file design point,
+    * parsing only the matching buckets' entry lists), then per-file zone
+    * maps within the surviving segments. Integrity holds with segments
+    * skipped: the list sums to rowCount and every parsed segment sums to
+    * its ref, so a truncated segment still fails loudly.
     */
-  def readWhereAll(spark: SparkSession, table: String,
-                   ranges: Seq[(String, Any, Any)]): DataFrame = {
-    require(ranges.nonEmpty, "readWhereAll needs at least one range")
-    val id = currentSnapshotId(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot in $table"))
-    val (snap, refs) = readHeader(table, id)
+  def readWhere(spark: SparkSession, table: String,
+                ranges: (String, Any, Any)*): DataFrame = {
+    require(ranges.nonEmpty, "readWhere needs at least one range")
+    val (snap, refs) = readHeader(table, currentId(table))
     val liveRefs = refs.filter(r => ranges.forall { case (c, lo, hi) =>
       r.stats.get(c).forall { case (mn, mx) => boundsOverlap(mn, mx, lo, hi) } })
     val keep = ranges.foldLeft(loadSegments(table, liveRefs)) { case (fs, (c, lo, hi)) =>

@@ -140,7 +140,7 @@ class QuantSpec extends SparkSpec {
       .filter(col("ivf_cell") === 0L && col("vec_id") < 32)
       .select("vec_id").as[Long].collect().toSet
     val served = Ann.ivfTopKFromIndex(
-        Icelite.readWhere(spark, t, "ivf_cell", 0L, 0L), col("vec_id") < 32, k = 5)
+        Icelite.readWhere(spark, t, ("ivf_cell", 0L, 0L)), col("vec_id") < 32, k = 5)
       .select("query_id", "neighbor_id", "rn").as[(Long, Long, Int)].collect().toSet
     assert(served === direct.filter(r => cell0Queries(r._1)))
     assert(served.nonEmpty, "fixture must place some queries in cell 0")

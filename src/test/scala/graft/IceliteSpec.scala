@@ -347,7 +347,7 @@ class IceliteSpec extends SparkSpec {
       .repartitionByRange(80, col("tenx"))
     Icelite.commit(spark, df, t)
     val id1 = Icelite.currentSnapshotId(t).get
-    val hit = Icelite.readWhere(spark, t, "tenx", 550L, 550L)
+    val hit = Icelite.readWhere(spark, t, ("tenx", 550L, 550L))
     assert(hit.as[(Long, Long)].collect().toSet === Set((55L, 550L)))
     val meta = Paths.get(t, "meta")
     val refs = Icelite.segmentRefs(t, id1)
@@ -362,7 +362,7 @@ class IceliteSpec extends SparkSpec {
     // skipped whole segments, not just files
     segs.filterNot(keepers.contains).foreach(s => Files.delete(meta.resolve(s)))
     intercept[Exception](Icelite.read(spark, t).count())
-    val pruned = Icelite.readWhere(spark, t, "tenx", 550L, 550L)
+    val pruned = Icelite.readWhere(spark, t, ("tenx", 550L, 550L))
     assert(pruned.as[(Long, Long)].collect().toSet === Set((55L, 550L)))
   }
 
@@ -520,11 +520,43 @@ class IceliteSpec extends SparkSpec {
         Thread.sleep(3)
       } catch { case e: Throwable => errs.add(e) }
     })
-    w1.start(); w2.start(); expirer.start()
-    w1.join(); w2.join(); expirer.join()
-    assert(errs.isEmpty, s"multi-writer merge/expire failed: ${errs.asScala.map(_.toString)}")
+    // compact rewrites through the same optimistic loop: a base that the
+    // merges supersede and the expirer GCs mid-read must retry, not fail
+    val compactor = new Thread(() => {
+      try while (w1.isAlive || w2.isAlive) Icelite.compact(spark, t, maxRowsPerFile = 2)
+      catch { case e: Throwable => errs.add(e) }
+    })
+    w1.start(); w2.start(); expirer.start(); compactor.start()
+    w1.join(); w2.join(); expirer.join(); compactor.join()
+    assert(errs.isEmpty, s"multi-writer merge/compact/expire failed: ${errs.asScala.map(_.toString)}")
     assert(Icelite.read(spark, t).as[(Long, String)].collect().toSet
       === (0 to 10).map(i => (i.toLong, if (i == 0) "seed" else s"m$i")).toSet)
+    assert(Icelite.verifyLineage(spark, t))
+  }
+
+  test("compact retries a base that merges and retain = 1 expiry supersede mid-read") {
+    val t = tmpDir() + "/conc3"
+    val rows = (1 to 1000).map(i => (i.toLong, s"v$i"))
+    Icelite.merge(spark, rows.toDF("id", "v"), t, Seq("id"), nBuckets = 4)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    // each merge changes nBuckets, so it rewrites every file, and the expiry
+    // after it deletes them all — under a compact that may still be reading
+    // them. Four merges move the base at most four times, so no compact pass
+    // can lose all 8 attempts.
+    val merger = new Thread(() => {
+      try (1 to 4).foreach { k =>
+        Icelite.merge(spark, rows.toDF("id", "v"), t, Seq("id"), nBuckets = 4 << (k % 2))
+        Icelite.expireSnapshots(t, retain = 1)
+      } catch { case e: Throwable => errs.add(e) }
+    })
+    val compactor = new Thread(() => {
+      try while (merger.isAlive) Icelite.compact(spark, t, maxRowsPerFile = 50)
+      catch { case e: Throwable => errs.add(e) }
+    })
+    merger.start(); compactor.start()
+    merger.join(); compactor.join()
+    assert(errs.isEmpty, s"compact beside merge/expire failed: ${errs.asScala.map(_.toString)}")
+    assert(Icelite.read(spark, t).as[(Long, String)].collect().toSet === rows.toSet)
     assert(Icelite.verifyLineage(spark, t))
   }
 
@@ -795,7 +827,7 @@ class ZoneMapSpec extends SparkSpec {
     assert(snap.files.forall(_.stats.contains("ts")))
     val keep = Icelite.pruneFiles(snap.files, "ts", 1700005000L, 1700007000L)
     assert(keep.size < snap.files.size, s"pruning must drop files (kept ${keep.size}/8)")
-    val got = Icelite.readWhere(spark, t, "ts", 1700005000L, 1700007000L)
+    val got = Icelite.readWhere(spark, t, ("ts", 1700005000L, 1700007000L))
       .as[(Long, Long, String)].collect().toSet
     val want = Icelite.read(spark, t)
       .filter(col("ts") >= 1700005000L && col("ts") <= 1700007000L)
@@ -803,7 +835,7 @@ class ZoneMapSpec extends SparkSpec {
     assert(got === want)
     assert(got.size === 2001)
     // fully-out-of-range scan: zero files, empty result, schema preserved
-    val none = Icelite.readWhere(spark, t, "ts", 0L, 10L)
+    val none = Icelite.readWhere(spark, t, ("ts", 0L, 10L))
     assert(none.count() === 0)
     assert(none.columns.toSeq === Seq("id", "ts", "name"))
   }
@@ -820,7 +852,7 @@ class ZoneMapSpec extends SparkSpec {
     assert(st.forall { case (lo, hi) =>
       lo.length <= Icelite.StatsTruncateLen && hi.length <= Icelite.StatsTruncateLen })
     // truncated bounds stay sound: an exact-value range query still finds its row
-    val got = Icelite.readWhere(spark, t, "s", s"${longPfx}042", s"${longPfx}042")
+    val got = Icelite.readWhere(spark, t, ("s", s"${longPfx}042", s"${longPfx}042"))
       .as[(Long, String)].collect()
     assert(got.toSeq === Seq((42L, s"${longPfx}042")))
   }
@@ -842,7 +874,7 @@ class ZoneMapSpec extends SparkSpec {
     assert(s2.files.forall(_.stats.contains("id")))
     // pruning on the PK: hash slices span the full range, so nothing prunes —
     // but nothing is WRONGLY pruned either
-    val got = Icelite.readWhere(spark, t, "id", 17L, 17L)
+    val got = Icelite.readWhere(spark, t, ("id", 17L, 17L))
       .as[(Long, String)].collect()
     assert(got.toSeq === Seq((17L, "updated")))
   }
@@ -857,7 +889,7 @@ class ZoneMapSpec extends SparkSpec {
     assert(Icelite.pruneFiles(legacy, "other", 1L, 2L).size === 2)
   }
 
-  test("readWhereAll prunes on the conjunction of ranges; results exact") {
+  test("readWhere prunes on the conjunction of ranges; results exact") {
     val t = tmpDir() + "/z7"
     val df = (0 until 20000).map(i => (i.toLong, 1700000000L + i, s"n_$i"))
       .toDF("id", "ts", "name")
@@ -869,8 +901,8 @@ class ZoneMapSpec extends SparkSpec {
     val single = Icelite.pruneFiles(snap.files, "ts", 1700005000L, 1700007000L)
     val both = Icelite.pruneFiles(single, "id", 5000L, 5500L)
     assert(both.size <= single.size && both.size < snap.files.size)
-    val got = Icelite.readWhereAll(spark, t,
-        Seq(("ts", 1700005000L, 1700007000L), ("id", 5000L, 5500L)))
+    val got = Icelite.readWhere(spark, t,
+        ("ts", 1700005000L, 1700007000L), ("id", 5000L, 5500L))
       .as[(Long, Long, String)].collect().toSet
     val want = Icelite.read(spark, t)
       .filter(col("ts") >= 1700005000L && col("ts") <= 1700007000L
@@ -894,9 +926,9 @@ class ZoneMapSpec extends SparkSpec {
     // end-to-end: commit rows with both values, range-read each back
     val t = tmpDir() + "/z4"
     Icelite.commit(spark, Seq((1L, e000), (2L, emoji)).toDF("id", "s"), t)
-    assert(Icelite.readWhere(spark, t, "s", e000, e000)
+    assert(Icelite.readWhere(spark, t, ("s", e000, e000))
       .as[(Long, String)].collect().toSeq === Seq((1L, e000)))
-    assert(Icelite.readWhere(spark, t, "s", emoji, emoji)
+    assert(Icelite.readWhere(spark, t, ("s", emoji, emoji))
       .as[(Long, String)].collect().toSeq === Seq((2L, emoji)))
   }
 
@@ -965,7 +997,7 @@ class EmptySnapshotSchemaSpec extends SparkSpec {
     assert(back.schema("id").dataType.typeName === "long")
     // downstream ops that name columns work on the empty table
     assert(back.select("v").filter(col("id") > 0).count() === 0)
-    assert(Icelite.readWhere(spark, t, "id", 1L, 2L).columns.toSeq === Seq("id", "v"))
+    assert(Icelite.readWhere(spark, t, ("id", 1L, 2L)).columns.toSeq === Seq("id", "v"))
     // identical snapshots diff to an empty-but-typed changelog
     Icelite.commit(spark, Seq((1L, "a")).toDF("id", "v"), t)
     val d = Icelite.diffSnapshots(spark, t, 2, 2, Seq("id"))

@@ -41,7 +41,7 @@ class TablesSpec extends SparkSpec {
       Tables.read(spark, Sf, "documents")
       Icelite.read(spark, s"$root/full")
       empty = Icelite.read(spark, s"$root/empty")
-      Icelite.readWhere(spark, s"$root/full", "id", 2L, 4L)
+      Icelite.readWhere(spark, s"$root/full", ("id", 2L, 4L))
       Pages.fromDocuments(spark, Sf)
     }
     assert(jobs === 0)
